@@ -60,10 +60,6 @@ def e7_encode(deg):
     )
 
 
-def e7_decode(v):
-    return np.asarray(v, dtype=np.float64) / E7
-
-
 def mercator_y_e7(lat_e7):
     """Web-Mercator y in e7 units (osmc/mapper.c:28-34), vectorized.
 
@@ -273,13 +269,3 @@ def mercator_y_col(lat_e7: "Column") -> "Column":
 def mercator_tile_cols(lon_e7: "Column", lat_e7: "Column", z: int):
     return axis_tile_col(lon_e7, z), axis_tile_col(mercator_y_col(lat_e7), z)
 
-
-def parent_col(cell: "Column", steps: int = 1) -> "Column":
-    level = F.shiftright(cell, _LEVEL_SHIFT)
-    y = F.shiftright(cell, _Y_SHIFT).bitwiseAND(F.lit(_XY_MASK))
-    x = cell.bitwiseAND(F.lit(_XY_MASK))
-    return (
-        F.shiftleft(level - F.lit(steps), _LEVEL_SHIFT)
-        + F.shiftleft(F.shiftright(y, steps), _Y_SHIFT)
-        + F.shiftright(x, steps)
-    ).cast("long")

@@ -28,10 +28,6 @@ from pyspark.sql import DataFrame, Window, functions as F
 TOKEN_SPLIT = " "
 
 
-def tokens_col(text: str = "text") -> "F.Column":
-    return F.split(F.col(text), TOKEN_SPLIT)
-
-
 def shingles(
     df: DataFrame, n: int = 3, id_col: str = "doc_id",
     max_df: int | None = None,
@@ -150,12 +146,6 @@ def _shingle_base(df: DataFrame, n: int, id_col: str = "doc_id") -> DataFrame:
     return toks.select("id", F.explode(sh).alias("shingle"))
 
 
-def exact_dedup(df: DataFrame, text_col: str = "text") -> DataFrame:
-    return df.groupBy(F.md5(F.col(text_col)).alias("fingerprint")).agg(
-        F.count("*").alias("n_docs"), F.min("doc_id").alias("canonical_doc_id")
-    )
-
-
 def ngram_jaccard_pairs(
     df: DataFrame, n: int = 3, threshold: float = 0.05,
     max_df: int | None = None,
@@ -216,16 +206,6 @@ def ngram_jaccard_pairs(
     return out
 
 
-def minhash_signatures(
-    df: DataFrame, k: int = 8, n: int = 3, max_df: int | None = None
-) -> DataFrame:
-    """(id, seed, minhash): k md5-minwise hashes per doc over its
-    shingle set — min is lexicographic over fixed-width hex, identical
-    in any engine.  ``max_df``: stop-shingle cap (see :func:`shingles`);
-    signatures are minwise over the *capped* shingle set."""
-    return _signatures_from(shingles(df, n, max_df=max_df), k)
-
-
 def packed_signatures(sh: DataFrame, k: int) -> DataFrame:
     """One row per doc with the k minwise hashes as columns m0..m{k-1}
     — the round-5 packed plan shape: k conditional-MIN aggregate
@@ -242,24 +222,6 @@ def packed_signatures(sh: DataFrame, k: int) -> DataFrame:
         sh.select("id", *hashes)
         .groupBy("id")
         .agg(*[F.min(f"h{s}").alias(f"m{s}") for s in range(k)])
-    )
-
-
-def _signatures_from(sh: DataFrame, k: int) -> DataFrame:
-    """Signatures from an (id, shingle) set."""
-    seeds = F.explode(F.sequence(F.lit(0), F.lit(k - 1))).alias("seed")
-    return (
-        sh.select("id", "shingle", seeds)
-        .withColumn(
-            "h",
-            F.md5(
-                F.concat(
-                    F.col("seed").cast("string"), F.lit("|"), F.col("shingle")
-                )
-            ),
-        )
-        .groupBy("id", "seed")
-        .agg(F.min("h").alias("minhash"))
     )
 
 

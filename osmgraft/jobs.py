@@ -32,7 +32,6 @@ def run_cut(
     pages: DataFrame,
     polys: list[Polygon],
     store: SnapshotStore,
-    strategy: str = "broadcast",
 ) -> int:
     """pages -> geo entities -> region matches; one snapshot commit.
 
@@ -40,7 +39,7 @@ def run_cut(
     checkpoint-init rule), advanced only on successful commit (T6).
     """
     ents = extract_entities(pages).persist(StorageLevel.MEMORY_AND_DISK)
-    matches = spatial_join(spark, ents, polys, strategy=strategy).select(
+    matches = spatial_join(spark, ents, polys).select(
         "url", "doc_id", "ent_idx", "name", "lat_e7", "lon_e7", "boundary_id"
     )
     wm_row = pages.agg(F.max("warc_ts").alias("wm")).collect()[0]

@@ -19,7 +19,8 @@ as a **two-phase join**:
    candidate rows stay narrow.
 
 Empty polygons (0 segments match everything, ``CountryPolygon.c:105-107``)
-skip both phases via a cross join against the (tiny) empty-boundary list.
+ride the same pass: the points left-join the cover and every point row
+gains the empty-boundary ids, which the refine answers INSIDE.
 
 kNN (north_rule addition; no reference analog — the reference's kd-trees
 ``osmc/2DTree.c`` serve viewport lookups): iterative k-ring expansion on
@@ -113,10 +114,6 @@ def cover_df_distributed(
     return pdf.mapInPandas(run, "boundary_id LONG, cell LONG")
 
 
-def _cover_levels(cov_rows) -> list[int]:
-    return sorted({int(c) >> 52 for _, c in cov_rows})
-
-
 def _pip_refine_udf(spark: SparkSession, polys: list[Polygon]):
     """pandas UDF (x, y, boundary_id) -> position int8, geometry via
     a broadcast variable (one copy per executor, not per row)."""
@@ -139,10 +136,9 @@ def _pip_refine_udf(spark: SparkSession, polys: list[Polygon]):
             m = bs == b
             if int(b) not in g:
                 # segment-less (match-everything) boundary: INSIDE for
-                # every point (``CountryPolygon.c:105-107``).  Reached
-                # only by the single-pass broadcast shape, which routes
-                # empty-polygon candidate rows through the same refine
-                # column instead of a separate cross-join branch.
+                # every point (``CountryPolygon.c:105-107``).  Every
+                # strategy routes empty-polygon candidate rows through
+                # this refine column (see ``spatial_join``).
                 out[m] = INSIDE
                 continue
             p0x, p0y, p1x, p1y, bbox = g[int(b)]
@@ -193,13 +189,6 @@ def spatial_join(
     (<= level+1 rows, typically 3-5) — smaller build side for one extra
     narrow explode.
     """
-    # NOTE: on the default broadcast/non-compact path, empty
-    # (match-everything) polygons are attached IN the single cover-join
-    # pass (see below) — one plan branch over ``points``.  The
-    # sortmerge/compact strategies still union a second cross-join
-    # branch when empties are present; there, if the points are
-    # UDF-derived (e.g. extraction output), persist/materialize them
-    # first or the extraction runs once per branch.
     # Large boundary sets: build the cover on the executors — the driver
     # loop is fine for tens of boundaries, a bottleneck for thousands.
     if len(polys) > 64:
@@ -216,59 +205,43 @@ def spatial_join(
                 for lv in levels
             ]
         )
-        pt = points.withColumn("cell", F.explode(anc))
+        pt = points.select("*", F.posexplode(anc).alias("_lvl", "cell"))
     else:
         pt = points.withColumn(
             "cell",
             cells.lonlat_cell_col(F.col("lon_e7"), F.col("lat_e7"), level),
         )
 
+    # One candidate shape for every strategy: join the points to the
+    # per-cell aggregated cover (cell -> array(boundary_id)) and explode
+    # cover matches ++ empty (match-everything) polygon ids in the same
+    # pass.  With empties the join is LEFT, so every point row survives
+    # to pick them up; the points subtree is evaluated once (a separate
+    # cross-join branch would be a Union, and Spark does not share a
+    # subtree across union branches).  Empty-id rows flow through the
+    # refine column and come back INSIDE (see ``_pip_refine_udf``).
     empty_ids = [p.boundary_id for p in polys if p.n_segments == 0]
-    attach_empty_inline = bool(empty_ids) and strategy == "broadcast" and not compact_cover
-
-    if attach_empty_inline:
-        # Single-pass empty-polygon attach (r6, guide §2.4 remove
-        # shuffles/passes outright): the former shape UNIONED a second
-        # ``points.crossJoin(empties)`` branch, so the whole points
-        # subtree (scan + derivation) was evaluated TWICE — Spark does
-        # not share common subtrees across union branches.  Instead,
-        # LEFT-join the cell-aggregated broadcast cover (cell ->
-        # array(boundary_id); every point row survives) and explode
-        # cover matches ++ empty ids from the one pass.  Multiset-
-        # identical output: inner-join candidates == left-join rows
-        # with non-null bids exploded, and every point gains exactly
-        # the empty ids the cross join produced.  Empty-id rows flow
-        # through the refine column and come back INSIDE (see
-        # ``_pip_refine_udf``), exactly the cross-join branch's
-        # ``lit(INSIDE)``.  Compact/sortmerge strategies keep the
-        # union shape (their cover is exploded by level / shuffled,
-        # not a per-cell broadcast aggregate).
-        cov_agg = cov.groupBy("cell").agg(
-            F.collect_list("boundary_id").alias("_bids")
-        )
-        empty_arr = F.array(*[F.lit(int(i)).cast("long") for i in empty_ids])
-        cand = (
-            pt.join(F.broadcast(cov_agg), "cell", "left")
-            .withColumn(
-                "boundary_id",
-                F.explode(
-                    F.concat(
-                        F.coalesce(
-                            F.col("_bids"),
-                            F.expr("CAST(array() AS array<bigint>)"),
-                        ),
-                        empty_arr,
-                    )
-                ),
-            )
-            .drop("_bids")
-        )
-    elif strategy == "broadcast":
-        cand = pt.join(F.broadcast(cov), "cell")
+    cov_agg = cov.groupBy("cell").agg(F.collect_list("boundary_id").alias("_bids"))
+    how = "left" if empty_ids else "inner"
+    if strategy == "broadcast":
+        cand = pt.join(F.broadcast(cov_agg), "cell", how)
     elif strategy == "sortmerge":
-        cand = _salted_sortmerge(spark, pt, cov, salt_buckets, hot_cell_threshold)
+        cand = _salted_sortmerge(
+            spark, pt, cov_agg, salt_buckets, hot_cell_threshold, how
+        )
     else:
         raise ValueError(f"unknown strategy {strategy!r}")
+
+    no_ids = F.expr("CAST(array() AS array<bigint>)")
+    bids = F.coalesce(F.col("_bids"), no_ids)
+    if empty_ids:
+        empties = F.array(*[F.lit(int(i)).cast("long") for i in empty_ids])
+        if compact_cover:
+            # one row per ancestor level: attach the empties on the
+            # first level's row only, so each point gets each id once
+            empties = F.when(F.col("_lvl") == 0, empties).otherwise(no_ids)
+        bids = F.concat(bids, empties)
+    cand = cand.withColumn("boundary_id", F.explode(bids)).drop("_bids", "_lvl")
 
     refine = _pip_refine_udf(spark, [p for p in polys if p.n_segments > 0])
     refined = (
@@ -278,16 +251,6 @@ def spatial_join(
         .filter(F.col("position") != OUTSIDE)
         .drop("cell")
     )
-
-    if empty_ids and not attach_empty_inline:
-        empties = spark.createDataFrame(
-            [(i,) for i in empty_ids], schema="boundary_id LONG"
-        )
-        full = points.crossJoin(F.broadcast(empties)).withColumn(
-            "position", F.lit(INSIDE)
-        )
-        refined = refined.unionByName(full.select(*refined.columns))
-
     return refined if keep_position else refined.drop("position")
 
 
@@ -297,8 +260,10 @@ def _salted_sortmerge(
     cov: DataFrame,
     salt_buckets: int,
     hot_cell_threshold: int | None,
+    how: str,
 ) -> DataFrame:
-    """Sort-merge cell join with explicit hot-cell salting.
+    """Sort-merge cell join (``how``: inner or left) of the points to
+    the per-cell cover with explicit hot-cell salting.
 
     Hot cells (observed point count above threshold) get per-row salt on
     the probe side; the (small) cover side replicates each hot cell into
@@ -361,7 +326,9 @@ def _salted_sortmerge(
         .drop("is_hot")
     )
 
-    return salted_pt.hint("merge").join(salted_cov, ["cell", "salt"]).drop("salt")
+    return (
+        salted_pt.hint("merge").join(salted_cov, ["cell", "salt"], how).drop("salt")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -381,6 +348,15 @@ def _annulus_offsets_df(spark: SparkSession, r_lo: int, r_hi: int) -> DataFrame:
         if r_lo < max(abs(dx), abs(dy)) <= r_hi
     ]
     return spark.createDataFrame(rows, schema="dx LONG, dy LONG")
+
+
+def _dist2_col():
+    """Exact squared e7 distance between (px, py) and (qx, qy):
+    DECIMAL(19,0) deltas, DECIMAL(38,0) sum (dx^2 overflows int64 at
+    antipodal range)."""
+    dx = (F.col("px") - F.col("qx")).cast("decimal(19,0)")
+    dy = (F.col("py") - F.col("qy")).cast("decimal(19,0)")
+    return (dx * dx + dy * dy).cast("decimal(38,0)").alias("dist2")
 
 
 def knn(
@@ -465,17 +441,12 @@ def knn(
             par = spark.sparkContext.defaultParallelism
             if est_bytes < (128 << 20):
                 ps = ps.repartition(par)
-            dx = (F.col("px") - F.col("qx")).cast("decimal(19,0)")
-            dy = (F.col("py") - F.col("qy")).cast("decimal(19,0)")
             w_rank = Window.partitionBy("qid").orderBy(
                 F.col("dist2").asc(), F.col("pid").asc()
             )
             return (
                 ps.crossJoin(F.broadcast(qs))
-                .select(
-                    "qid", "pid",
-                    (dx * dx + dy * dy).cast("decimal(38,0)").alias("dist2"),
-                )
+                .select("qid", "pid", _dist2_col())
                 .withColumn("rank", F.row_number().over(w_rank))
                 .filter(F.col("rank") <= k)
                 .select("qid", "pid", "rank", "dist2")
@@ -555,11 +526,8 @@ def knn(
             .withColumn("cy", F.col("qcy") + F.col("dy"))
             .join(pt, ["cx", "cy"])
         )
-        dx = (F.col("px") - F.col("qx")).cast("decimal(19,0)")
-        dy = (F.col("py") - F.col("qy")).cast("decimal(19,0)")
         cand = cand.select(
-            "qid", "qcx", "qcy", "qx", "qy", "pid",
-            (dx * dx + dy * dy).cast("decimal(38,0)").alias("dist2"),
+            "qid", "qcx", "qcy", "qx", "qy", "pid", _dist2_col()
         )
         # certification: k-th distance within the ring guarantee radius
         # (any non-candidate point is > r * cell_w away on some axis).
@@ -604,12 +572,8 @@ def knn(
     if n_pending > 0:
         # brute-force fallback for queries the ring search never certified
         # (e.g. k > points in a huge radius) — exact, small remainder
-        rest = pending.crossJoin(pt)
-        dx = (F.col("px") - F.col("qx")).cast("decimal(19,0)")
-        dy = (F.col("py") - F.col("qy")).cast("decimal(19,0)")
-        rest = rest.select(
-            "qid", "qcx", "qcy", "qx", "qy", "pid",
-            (dx * dx + dy * dy).cast("decimal(38,0)").alias("dist2"),
+        rest = pending.crossJoin(pt).select(
+            "qid", "qcx", "qcy", "qx", "qy", "pid", _dist2_col()
         )
         rest = rest.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
         results = results.unionByName(rest)

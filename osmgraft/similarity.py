@@ -91,18 +91,6 @@ def lsh_buckets(df: DataFrame, n_planes: int = N_PLANES) -> DataFrame:
     return qdf.select("vec_id", bucket.cast("int").alias("bucket"))
 
 
-def lsh_candidate_pairs(df: DataFrame, n_planes: int = N_PLANES) -> DataFrame:
-    """Candidate pairs sharing an LSH bucket (a < b)."""
-    b = lsh_buckets(df, n_planes)
-    a = b.select(F.col("vec_id").alias("vec_a"), "bucket")
-    c = b.select(F.col("vec_id").alias("vec_b"), "bucket")
-    return (
-        a.join(c, "bucket")
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .select("vec_a", "vec_b", "bucket")
-    )
-
-
 def lsh_band_buckets(
     df: DataFrame, n_bands: int = 4, planes_per_band: int = 8
 ) -> DataFrame:
@@ -504,6 +492,13 @@ def _nearest_centroid(
 
     spark = vecs.sparkSession
     rows = sorted(cents.collect(), key=lambda r: r["cid"])
+    if not rows:
+        # checked here on the driver: an empty center matrix otherwise
+        # fails inside numpy on the executors (argmax of a 0-wide block)
+        raise ValueError(
+            "empty centroid set: no centers to assign vectors to "
+            "(seed='first' needs vec_ids below n_centroids)"
+        )
     cids = np.array([r["cid"] for r in rows], dtype=np.int64)
     C = np.array([list(r["cvec"]) for r in rows], dtype=np.int64)
     bc = spark.sparkContext.broadcast((cids, C))

@@ -195,30 +195,6 @@ def geo_entities_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(points_sql("documents"))
 
 
-def boundaries_df(spark: SparkSession) -> DataFrame:
-    """Boundary dim table: one row per boundary with ring struct array
-    and bbox — the broadcast side of the spatial join."""
-    rows = []
-    for p in boundaries():
-        rings = [
-            {
-                "hole": r.hole,
-                "xs": [int(v) for v in r.xs],
-                "ys": [int(v) for v in r.ys],
-            }
-            for r in p.rings
-        ]
-        minx, miny, maxx, maxy = p.bbox
-        rows.append((p.boundary_id, p.name, rings, minx, miny, maxx, maxy,
-                     p.n_segments))
-    schema = (
-        "boundary_id LONG, name STRING, "
-        "rings ARRAY<STRUCT<hole: BOOLEAN, xs: ARRAY<LONG>, ys: ARRAY<LONG>>>, "
-        "minx LONG, miny LONG, maxx LONG, maxy LONG, n_segments INT"
-    )
-    return spark.createDataFrame(rows, schema=schema)
-
-
 def pages_df(spark: SparkSession, sf_dir: str, replicate: int = 1) -> DataFrame:
     """The input_hint table: pages(url, warc_ts, html, text, lang).
 

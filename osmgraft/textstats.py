@@ -1,6 +1,7 @@
-"""Text-analysis operators: language ID, quality scoring, token stats,
-document fingerprinting.  All JVM-side expressions (codegen'd) — no
-Python in the path; every op is engine-portable for oracle checking.
+"""Text-analysis operators: language ID, quality scoring, BPE token
+counts, URL normalization, document fingerprinting.  All JVM-side
+expressions (codegen'd) — no Python in the path; every op is
+engine-portable for oracle checking.
 """
 
 from __future__ import annotations
@@ -32,19 +33,6 @@ _STOP_RE = (
 
 def stop_count_col(text_col: str = "text") -> "F.Column":
     return F.regexp_count(F.col(text_col), F.lit(_STOP_RE))
-
-
-def token_stats(df: DataFrame) -> DataFrame:
-    toks = F.split(F.col("text"), " ")
-    return df.select(
-        "doc_id",
-        F.length("text").cast("bigint").alias("n_chars"),
-        F.size(toks).cast("bigint").alias("n_tokens"),
-        F.size(F.array_distinct(toks)).cast("bigint").alias("n_uniq"),
-        (F.size(F.array_distinct(toks)).cast("double") / F.size(toks)).alias(
-            "uniq_ratio"
-        ),
-    )
 
 
 def lang_id(df: DataFrame, threshold: float = 0.05) -> DataFrame:

@@ -3,6 +3,8 @@ compacted-cover joins must produce identical match sets (the skew /
 salting test of SURVEY §5.5 — the fixture is 80% clustered in 3 cells).
 """
 
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -18,7 +20,8 @@ def entities(spark, sf_dir):
 
 
 def _matches(df):
-    return {(r.doc_id, r.ent_idx, r.boundary_id) for r in df.collect()}
+    # a multiset: a strategy that emits a match twice must not pass
+    return Counter((r.doc_id, r.ent_idx, r.boundary_id) for r in df.collect())
 
 
 def test_skew_distribution_is_real(spark, entities):

@@ -5,7 +5,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from osmgraft.similarity import cosine_topk, lsh_buckets, lsh_candidate_pairs
+from osmgraft.similarity import cosine_topk, lsh_buckets
 
 pytestmark = pytest.mark.spark
 
@@ -42,10 +42,6 @@ def test_lsh_buckets_group_similar_vectors(spark, emb):
     assert b.count() == emb.count()
     n_buckets = b.select("bucket").distinct().count()
     assert 2 <= n_buckets <= 256  # 8 planes -> at most 256 buckets
-    pairs = lsh_candidate_pairs(emb)
-    n_pairs = pairs.count()
-    total = emb.count()
-    assert 0 < n_pairs < total * (total - 1) / 2  # a real prefilter
 
 
 def test_multimodal_stub_and_fake_features(spark, sf_dir):
@@ -186,6 +182,20 @@ def test_ivf_train_multi_iteration_valid_and_converging(spark, sf_dir):
     again = {(r.vec_id, r.centroid_id) for r in
              similarity.ivf_train_assign(e, n_centroids=8, iters=2).collect()}
     assert {(r.vec_id, r.centroid_id) for r in rows} == again
+
+
+def test_ivf_train_empty_centroid_set_is_a_named_error(spark, sf_dir):
+    """seed='first' picks the vectors with vec_id < n_centroids; when
+    none exist the center set is empty.  That must be a clear
+    ValueError raised on the driver, not a numpy failure surfacing
+    from the executors' Arrow pass."""
+    from osmgraft import similarity
+
+    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").filter(
+        F.col("vec_id") >= 8
+    )
+    with pytest.raises(ValueError, match="empty centroid set"):
+        similarity.ivf_train_assign(e, n_centroids=8, iters=1).collect()
 
 
 def _clustered_emb(spark, n_clusters=4, per_cluster=50, dim=64):

@@ -1,5 +1,7 @@
 """End-to-end spatial join + kNN vs pure-Python oracles (golden fixtures)."""
 
+from collections import Counter
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -64,30 +66,58 @@ def test_boundary_points_match(spark, entities):
         assert r.doc_id in bd_ids
 
 
-def test_empty_polygon_attach_is_single_pass(spark, entities):
-    """r6: on the default broadcast path, empty (match-everything)
-    polygons are attached inside the one cover-join pass — the plan has
-    no second branch over the points subtree (no Union of a
-    BroadcastNestedLoopJoin cross product), and the empty-boundary rows
-    still carry position == INSIDE via the refine column."""
+def _plan_node_counts(spark, df):
+    """Node-name counts of the physical plan Spark would run for ``df``
+    with AQE off, so exchange reuse is applied up front: a reused
+    exchange is a leaf, and the cached relation under an
+    InMemoryTableScan is not descended into."""
+    def walk(p):
+        yield p.nodeName()
+        ch = p.children()
+        for i in range(ch.size()):
+            yield from walk(ch.apply(i))
+
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        return Counter(walk(df._jdf.queryExecution().executedPlan()))
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+
+
+@pytest.mark.parametrize(
+    "kw, point_scans, nested_loops",
+    [
+        ({}, 1, 0),
+        # points: the join side plus the 2% hot-cell sample (its
+        # broadcast is built once and reused by both salting joins);
+        # the one nested loop replicates the cover into the salt buckets
+        ({"strategy": "sortmerge", "salt_buckets": 4}, 2, 1),
+        ({"compact_cover": True}, 1, 0),
+    ],
+    ids=["broadcast", "sortmerge", "compact"],
+)
+def test_empty_polygon_attach_is_single_pass(
+    spark, entities, kw, point_scans, nested_loops
+):
+    """Every strategy attaches empty (match-everything) polygons inside
+    its one cover-join pass: the plan has no Union of a second branch
+    over the points subtree, the refine runs once, and the
+    empty-boundary rows still carry position == INSIDE via the refine
+    column."""
     from osmgraft.geometry import INSIDE
 
     polys = synth.boundaries()
     assert any(p.n_segments == 0 for p in polys)  # fixture has 'world'
     # plan shape on the default (position-dropped) path — the shape the
-    # bench/gate queries run
-    default = spatial_join(spark, entities, polys)
-    plan = default._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "simple"
-        )
-    )
-    assert "BroadcastNestedLoopJoin" not in plan
-    # exactly one refine evaluation (one pass over points).
-    # (keep_position=True still shows the known §4.4 filter-pushdown
-    # UDF duplication — test-only path, pre-existing either shape.)
-    assert plan.count("ArrowEvalPython") == 1
-    res = spatial_join(spark, entities, polys, keep_position=True)
+    # bench/gate queries run.  (keep_position=True still shows the
+    # known §4.4 filter-pushdown UDF duplication — test-only path.)
+    nodes = _plan_node_counts(spark, spatial_join(spark, entities, polys, **kw))
+    assert nodes["Union"] == 0
+    assert nodes["ArrowEvalPython"] == 1
+    assert nodes["InMemoryTableScan"] == point_scans
+    assert nodes["BroadcastNestedLoopJoin"] == nested_loops
+    res = spatial_join(spark, entities, polys, keep_position=True, **kw)
     empty_ids = {p.boundary_id for p in polys if p.n_segments == 0}
     empty_rows = res.filter(
         F.col("boundary_id").isin(*empty_ids)
@@ -97,8 +127,8 @@ def test_empty_polygon_attach_is_single_pass(spark, entities):
 
 def test_empty_polygon_attach_with_distributed_cover(spark, sf_dir):
     """The inline empty-attach also composes with the >64-polygon
-    distributed cover builder, and agrees with the sortmerge strategy's
-    union shape on the same mixed set."""
+    distributed cover builder, and the broadcast and sortmerge
+    strategies agree on the same mixed set."""
     from osmgraft.geometry import Polygon
 
     ents = synth.geo_entities_df(spark, sf_dir).cache()
@@ -111,7 +141,7 @@ def test_empty_polygon_attach_with_distributed_cover(spark, sf_dir):
     sm = spatial_join(spark, ents, polys, strategy="sortmerge").select(
         "doc_id", "ent_idx", "boundary_id"
     )
-    assert {tuple(r) for r in got.collect()} == {tuple(r) for r in sm.collect()}
+    assert Counter(map(tuple, got.collect())) == Counter(map(tuple, sm.collect()))
     ents.unpersist()
 
 
