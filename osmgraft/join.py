@@ -395,28 +395,30 @@ def knn(
     """
     cell_w = cells.WORLD // (1 << level)  # lon cell extent in e7 units
 
-    q_rows = (
-        queries.select("qid", "lon_e7", "lat_e7")
-        .limit(brute_max_queries + 1)
-        .collect()
-    )
-    if len(q_rows) <= brute_max_queries:
-        try:
-            est_bytes = int(
-                points._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            )
-        except Exception:
-            est_bytes = None
-        # |P| estimate = est_bytes / 8: plan stats carry COMPRESSED
-        # file bytes through the width-scaled projections (r6 review
-        # fix — a 24 B/row divisor could UNDERcount rows on a
-        # dictionary/RLE-compressed source and mis-route a large input
-        # to brute).  8 B/row is at/below the practical compressed
-        # floor for 3-long rows, so the estimate errs high (toward the
-        # ring path); on the in-repo derivation shapes stats report
-        # ~87 B/row, i.e. ~11x overestimation — still far under the
-        # bound for the bench-sized inputs this branch targets.
-        if est_bytes is not None and (
+    try:
+        est_bytes = int(
+            points._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        )
+    except Exception:
+        est_bytes = None
+    # |P| estimate = est_bytes / 8: plan stats carry COMPRESSED
+    # file bytes through the width-scaled projections (r6 review
+    # fix — a 24 B/row divisor could UNDERcount rows on a
+    # dictionary/RLE-compressed source and mis-route a large input
+    # to brute).  8 B/row is at/below the practical compressed
+    # floor for 3-long rows, so the estimate errs high (toward the
+    # ring path); on the in-repo derivation shapes stats report
+    # ~87 B/row, i.e. ~11x overestimation — still far under the
+    # bound for the bench-sized inputs this branch targets.
+    # |Q| >= 1 in the bound below, so when |P| alone exceeds it the
+    # query collect cannot change the route and is skipped.
+    if est_bytes is not None and est_bytes // 8 + 1 <= brute_max_pairs:
+        q_rows = (
+            queries.select("qid", "lon_e7", "lat_e7")
+            .limit(brute_max_queries + 1)
+            .collect()
+        )
+        if len(q_rows) <= brute_max_queries and (
             max(len(q_rows), 1) * (est_bytes // 8 + 1) <= brute_max_pairs
         ):
             qs = spark.createDataFrame(

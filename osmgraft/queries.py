@@ -2863,8 +2863,10 @@ def dedup_simhash_pairs(spark, sf_dir):
 def dedup_clusters(spark, sf_dir):
     """Connected components over the simhash near-dup pair graph:
     canonical-doc assignment (cluster_id = min doc_id of the component)
-    via distributed min-label propagation; the oracle recomputes the
-    components with a recursive transitive-closure CTE."""
+    via ``dedup.connected_components_star`` (one driver pass when the
+    pair set fits the driver bound, large-star/small-star otherwise);
+    the oracle recomputes the components with a recursive
+    transitive-closure CTE."""
     d = _read_spread(spark, sf_dir, "documents")
     pairs = dedup.simhash_hamming_pairs(dedup.simhash(d, bits=64), max_hamming=2)
     return dedup.connected_components_star(pairs)

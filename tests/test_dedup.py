@@ -1,7 +1,7 @@
 """Dedup-family unit tests (shingles, simhash banding, LSH shapes)."""
 
 import pytest
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from osmgraft import dedup
 
@@ -152,6 +152,52 @@ def test_simhash_plan_has_no_bitwidth_explode(spark):
     assert len(re.findall(r"(?i)explode", plan)) <= 1
 
 
+def connected_components(
+    pairs: DataFrame, max_rounds: int = 20
+) -> DataFrame:
+    """Reference oracle for :func:`dedup.connected_components_star`:
+    (doc_id, cluster_id, n_members), cluster_id = component min, by
+    iterative min-label propagation — each round every node takes the
+    min of its own label and its neighbors' labels; converged when no
+    label changes.  Rounds needed = graph diameter, so it is kept here
+    as the plainest statement of the contract, not in the library."""
+    e = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+    edges = e.unionByName(
+        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    ).localCheckpoint(eager=True)
+    labels = (
+        edges.select(F.col("src").alias("doc_id"))
+        .distinct()
+        .withColumn("label", F.col("doc_id"))
+        .localCheckpoint(eager=True)
+    )
+    for _ in range(max_rounds):
+        nb = edges.join(
+            labels.select(F.col("doc_id").alias("dst"), "label"), "dst"
+        ).select(F.col("src").alias("doc_id"), "label")
+        new = (
+            labels.unionByName(nb)
+            .groupBy("doc_id")
+            .agg(F.min("label").alias("label"))
+            .localCheckpoint(eager=True)
+        )
+        changed = (
+            new.join(labels.withColumnRenamed("label", "old"), "doc_id")
+            .filter(F.col("label") < F.col("old"))
+            .limit(1)
+            .count()
+        )
+        labels = new
+        if changed == 0:
+            break
+    else:
+        raise RuntimeError(f"not converged after {max_rounds} rounds")
+    sizes = labels.groupBy("label").agg(F.count("*").alias("n_members"))
+    return labels.join(sizes, "label").select(
+        "doc_id", F.col("label").alias("cluster_id"), "n_members"
+    )
+
+
 def test_connected_components_chain_triangle_and_pair(spark):
     # chain 1-2-3-4 (diameter 3), triangle 10-11-12, isolated pair 20-21
     pairs = spark.createDataFrame(
@@ -160,7 +206,7 @@ def test_connected_components_chain_triangle_and_pair(spark):
     )
     got = {
         r.doc_id: (r.cluster_id, r.n_members)
-        for r in dedup.connected_components(pairs).collect()
+        for r in connected_components(pairs).collect()
     }
     assert got == {
         1: (1, 4), 2: (1, 4), 3: (1, 4), 4: (1, 4),
@@ -169,19 +215,18 @@ def test_connected_components_chain_triangle_and_pair(spark):
     }
 
 
-def test_connected_components_raises_when_round_capped(spark):
-    # a 6-node path needs >1 propagation round; max_rounds=1 must not
-    # silently return a partial labeling
-    import pytest as _pytest
-
+def test_connected_components_raises_when_round_capped(spark, monkeypatch):
+    # a 64-node path needs >1 star round; max_rounds=1 on the shuffle
+    # loop must not silently return a partial labeling
+    monkeypatch.setattr(dedup, "_DRIVER_MAX_PAIRS", 0)
     pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(1, 6)], schema="doc_a LONG, doc_b LONG"
+        [(i, i + 1) for i in range(1, 64)], schema="doc_a LONG, doc_b LONG"
     )
-    with _pytest.raises(RuntimeError):
-        dedup.connected_components(pairs, max_rounds=1)
+    with pytest.raises(RuntimeError):
+        dedup.connected_components_star(pairs, max_rounds=1)
 
 
-def test_star_components_equal_label_propagation(spark):
+def _random_graph():
     import random
 
     rnd = random.Random(11)
@@ -192,16 +237,72 @@ def test_star_components_equal_label_propagation(spark):
         a, b = rnd.randrange(0, 60), rnd.randrange(0, 60)
         if a != b:
             pairs.append((min(a, b), max(a, b)))
-    df = spark.createDataFrame(pairs, schema="doc_a LONG, doc_b LONG")
-    a = {
-        (r.doc_id, r.cluster_id, r.n_members)
-        for r in dedup.connected_components(df, max_rounds=50).collect()
-    }
-    b = {
-        (r.doc_id, r.cluster_id, r.n_members)
-        for r in dedup.connected_components_star(df).collect()
-    }
-    assert a == b and a
+    return pairs
+
+
+# (id type, pairs, expected rows or None for "as the min-label reference")
+_COMPONENT_CASES = {
+    "random": ("LONG", _random_graph(), None),
+    "empty": ("LONG", [], None),
+    "self_pair": ("LONG", [(5, 5), (1, 2), (2, 2)], None),
+    "duplicate_and_reversed": (
+        "LONG", [(1, 2), (2, 1), (1, 2), (3, 4), (4, 3), (2, 3), (9, 8)], None
+    ),
+    # a NULL side contributes only its non-NULL side, as a node (the
+    # reference above would make NULL a node of its own)
+    "null_side": (
+        "LONG",
+        [(1, None), (None, 2), (None, None), (3, 4), (4, None)],
+        [(1, 1, 1), (2, 2, 1), (3, 3, 2), (4, 3, 2)],
+    ),
+    "int_ids": ("INT", [(7, 3), (3, 1), (20, 21)], None),
+}
+
+
+@pytest.mark.parametrize("path", ["driver", "distributed"])
+@pytest.mark.parametrize("case", sorted(_COMPONENT_CASES))
+def test_star_components_equal_label_propagation(spark, monkeypatch, path, case):
+    from collections import Counter
+
+    id_type, pairs, rows = _COMPONENT_CASES[case]
+    df = spark.createDataFrame(pairs, schema=f"doc_a {id_type}, doc_b {id_type}")
+    if rows is None:
+        rows = connected_components(df, max_rounds=50).collect()
+    expected = Counter(tuple(r) for r in rows)
+    driver = dedup.connected_components_star(df)
+    monkeypatch.setattr(dedup, "_DRIVER_MAX_PAIRS", 0)
+    distributed = dedup.connected_components_star(df)
+    got = driver if path == "driver" else distributed
+    if pairs:
+        # the driver path answers from a local relation, the forced
+        # path from the shuffle loop (an empty input folds to an empty
+        # local relation on either path)
+        plan = got._jdf.queryExecution().executedPlan().toString()
+        assert plan.startswith("LocalTableScan") == (path == "driver")
+    assert Counter(tuple(r) for r in got.collect()) == expected
+    assert driver.schema == distributed.schema
+    assert got.schema["doc_id"].dataType == df.schema["doc_a"].dataType
+    assert bool(expected) == bool(pairs)
+
+
+def test_small_pair_set_labels_on_driver(spark):
+    # a small pair set is labeled in one driver pass: the limited read is
+    # the only work, and the result is a local relation with no shuffle
+    # (the large-star/small-star loop runs dozens of jobs here)
+    sc = spark.sparkContext
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(30)] + [(100, 101)],
+        schema="doc_a LONG, doc_b LONG",
+    ).repartition(8)
+    sc.setJobGroup("cc-driver-probe", "connected components job-count probe")
+    try:
+        out = dedup.connected_components_star(pairs)
+        assert "Exchange" not in out._jdf.queryExecution().executedPlan().toString()
+        assert len(out.collect()) == 33
+        jobs = sc.statusTracker().getJobIdsForGroup("cc-driver-probe")
+        assert len(jobs) <= 2, f"{len(jobs)} jobs for a 31-pair component labeling"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
 
 
 def test_df_cap_strategies_equivalent(spark):
