@@ -14,13 +14,16 @@ as a **two-phase join**:
    irrelevant to a broadcast join because there is no shuffle by key).
 2. **Exact refine** — surviving (point, boundary) candidate pairs run
    the reference's ray-cast parity test (``osmc/CountryPolygon.c:59-126``)
-   in a vectorized Arrow pandas UDF over int64 numpy; boundary geometry
-   rides a SparkContext broadcast variable, not a join column, so
-   candidate rows stay narrow.
+   as a SQL expression over the candidate's cover entry: a cell that
+   no segment meets is INSIDE outright, any other cell carries the few
+   segments that can decide its points (``geometry.refine_cover``), and
+   an ``aggregate`` over them gives TOUCHING -> BOUNDARY, else the
+   crossing parity.  The whole join runs in the JVM: no Python worker,
+   no broadcast variable.
 
 Empty polygons (0 segments match everything, ``CountryPolygon.c:105-107``)
 ride the same pass: the points left-join the cover and every point row
-gains the empty-boundary ids, which the refine answers INSIDE.
+gains an INSIDE entry per empty boundary.
 
 kNN (north_rule addition; no reference analog — the reference's kd-trees
 ``osmc/2DTree.c`` serve viewport lookups): iterative k-ring expansion on
@@ -31,17 +34,48 @@ neighbor's distance is certified by the ring guarantee.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from . import cells
-from .geometry import INSIDE, OUTSIDE, Polygon, polygon_cover
+from .geometry import OUTSIDE, Polygon, refine_cover, refine_sql
 
 DEFAULT_COVER_LEVEL = 9  # ~0.7 deg cells: fine enough to hug boundaries,
 # coarse enough that planet-scale covers stay broadcastable
+
+
+_SEG_NAMES = ["x0", "y0", "x1", "y1"]
+_COVER_SCHEMA = pa.schema([
+    ("boundary_id", pa.int64()),
+    ("cell", pa.int64()),
+    ("inside", pa.bool_()),
+    ("segs", pa.list_(pa.struct([(n, pa.int64()) for n in _SEG_NAMES]))),
+])
+_SPARK_SCHEMA = from_arrow_schema(_COVER_SCHEMA)
+# cover entry of one (cell, boundary): INSIDE outright, or the segments
+# that decide the cell's points
+_ENTRY = "struct<boundary_id:bigint,_inside:boolean,_segs:%s>" % (
+    _SPARK_SCHEMA["segs"].dataType.simpleString()
+)
+
+
+def _cover_batch(poly: Polygon, level: int, compacted: bool) -> pa.RecordBatch:
+    """One polygon's rows of :data:`_COVER_SCHEMA`, from
+    ``geometry.refine_cover`` (the driver and executor cover paths share
+    it, so they emit identical rows)."""
+    cell, inside, offsets, segs = refine_cover(poly, level, compacted=compacted)
+    seg_arr = pa.StructArray.from_arrays(list(segs), names=_SEG_NAMES)
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.repeat(pa.scalar(poly.boundary_id, pa.int64()), cell.size),
+            pa.array(cell),
+            pa.array(inside),
+            pa.ListArray.from_arrays(pa.array(offsets), seg_arr),
+        ],
+        schema=_COVER_SCHEMA,
+    )
 
 
 def cover_df(
@@ -50,19 +84,20 @@ def cover_df(
     level: int,
     compacted: bool = False,
 ) -> DataFrame:
-    """(boundary_id, cell) exact-superset cover of every non-empty polygon.
+    """:data:`_COVER_SCHEMA` rows: the exact-superset cover of every
+    non-empty polygon, one row per (boundary_id, cell) with its refine
+    geometry (``geometry.refine_cover``).  Built as an Arrow table, so
+    creating it starts no Python worker.
 
     ``compacted=True`` collapses complete sibling quartets into parents
     (mixed-level cover, H3-compact analog) — smaller broadcast for
     large boundaries; the point side then joins on every ancestor level
     present in the cover."""
-    rows = []
-    for p in polys:
-        if p.n_segments == 0:
-            continue
-        for c in polygon_cover(p, level, compacted=compacted).tolist():
-            rows.append((p.boundary_id, c))
-    return spark.createDataFrame(rows, schema="boundary_id LONG, cell LONG")
+    table = pa.Table.from_batches(
+        [_cover_batch(p, level, compacted) for p in polys if p.n_segments > 0],
+        schema=_COVER_SCHEMA,
+    )
+    return spark.createDataFrame(table)
 
 
 def cover_df_distributed(
@@ -72,90 +107,33 @@ def cover_df_distributed(
     compacted: bool = False,
 ) -> DataFrame:
     """Distributed form of :func:`cover_df`: cover construction runs as
-    a ``mapInPandas`` over a polygons DataFrame (one task per polygon
+    a ``mapInArrow`` over a polygons DataFrame (one task per polygon
     batch) instead of a driver loop — the shape that holds when the
     boundary set is planet-scale (10k+ polygons), where the interior
     grid scan per polygon is the expensive part.  Produces the identical
-    (boundary_id, cell) rows (same ``geometry.polygon_cover`` numpy code
-    executes on the workers)."""
-    rows = [
-        (
-            p.boundary_id,
-            p.p0x.tolist(), p.p0y.tolist(), p.p1x.tolist(), p.p1y.tolist(),
-        )
-        for p in polys
-        if p.n_segments > 0
-    ]
-    if not rows:
-        return spark.createDataFrame([], schema="boundary_id LONG, cell LONG")
-    n_part = min(len(rows), spark.sparkContext.defaultParallelism)
-    pdf = spark.createDataFrame(
-        rows,
-        schema=(
-            "boundary_id LONG, p0x ARRAY<LONG>, p0y ARRAY<LONG>, "
-            "p1x ARRAY<LONG>, p1y ARRAY<LONG>"
-        ),
-    ).repartition(n_part, "boundary_id")
+    rows (the same ``_cover_batch`` runs on the workers)."""
+    polys = [p for p in polys if p.n_segments > 0]
+    if not polys:
+        return spark.createDataFrame(_COVER_SCHEMA.empty_table())
+    n_part = min(len(polys), spark.sparkContext.defaultParallelism)
+    segs = pa.table({
+        "boundary_id": [p.boundary_id for p in polys],
+        **{k: [getattr(p, k) for p in polys] for k in ("p0x", "p0y", "p1x", "p1y")},
+    })
+    pdf = spark.createDataFrame(segs).repartition(n_part, "boundary_id")
 
     def run(batches):
-        from osmgraft.geometry import Polygon as P
-        from osmgraft.geometry import polygon_cover as pc
+        from osmgraft.geometry import Polygon as P  # executor-side import
+        from osmgraft.join import _cover_batch as batch
 
         for b in batches:
-            for r in b.itertuples(index=False):
+            for r in b.to_pylist():
                 poly = P.from_segments(
-                    int(r.boundary_id), "", r.p0x, r.p0y, r.p1x, r.p1y
+                    r["boundary_id"], "", r["p0x"], r["p0y"], r["p1x"], r["p1y"]
                 )
-                cover = pc(poly, level, compacted=compacted)
-                yield pd.DataFrame(
-                    {"boundary_id": int(r.boundary_id), "cell": cover}
-                )
+                yield batch(poly, level, compacted)
 
-    return pdf.mapInPandas(run, "boundary_id LONG, cell LONG")
-
-
-def _pip_refine_udf(spark: SparkSession, polys: list[Polygon]):
-    """pandas UDF (x, y, boundary_id) -> position int8, geometry via
-    a broadcast variable (one copy per executor, not per row)."""
-    geo = {
-        p.boundary_id: (p.p0x, p.p0y, p.p1x, p.p1y, np.array(p.bbox, dtype=np.int64))
-        for p in polys
-    }
-    bc = spark.sparkContext.broadcast(geo)
-
-    @F.pandas_udf(T.IntegerType())
-    def refine(x: pd.Series, y: pd.Series, bid: pd.Series) -> pd.Series:
-        from osmgraft.geometry import pip_batch  # executor-side import
-
-        xs = x.to_numpy(dtype=np.int64)
-        ys = y.to_numpy(dtype=np.int64)
-        bs = bid.to_numpy(dtype=np.int64)
-        out = np.zeros(len(xs), dtype=np.int32)
-        g = bc.value
-        for b in np.unique(bs):
-            m = bs == b
-            if int(b) not in g:
-                # segment-less (match-everything) boundary: INSIDE for
-                # every point (``CountryPolygon.c:105-107``).  Every
-                # strategy routes empty-polygon candidate rows through
-                # this refine column (see ``spatial_join``).
-                out[m] = INSIDE
-                continue
-            p0x, p0y, p1x, p1y, bbox = g[int(b)]
-            px, py = xs[m], ys[m]
-            inb = (px >= bbox[0]) & (py >= bbox[1]) & (px <= bbox[2]) & (py <= bbox[3])
-            r = np.zeros(px.size, dtype=np.int8)
-            if inb.any():
-                # chunk to bound the (points x segments) block size
-                idx = np.nonzero(inb)[0]
-                step = max(1, 2_000_000 // max(1, p0x.size))
-                for s in range(0, idx.size, step):
-                    sel = idx[s : s + step]
-                    r[sel] = pip_batch(px[sel], py[sel], p0x, p0y, p1x, p1y)
-            out[m] = r
-        return pd.Series(out)
-
-    return refine
+    return pdf.mapInArrow(run, _SPARK_SCHEMA)
 
 
 def spatial_join(
@@ -213,15 +191,19 @@ def spatial_join(
         )
 
     # One candidate shape for every strategy: join the points to the
-    # per-cell aggregated cover (cell -> array(boundary_id)) and explode
-    # cover matches ++ empty (match-everything) polygon ids in the same
-    # pass.  With empties the join is LEFT, so every point row survives
-    # to pick them up; the points subtree is evaluated once (a separate
-    # cross-join branch would be a Union, and Spark does not share a
-    # subtree across union branches).  Empty-id rows flow through the
-    # refine column and come back INSIDE (see ``_pip_refine_udf``).
+    # per-cell aggregated cover (cell -> array of entries) and explode
+    # cover entries ++ empty (match-everything) polygon entries in the
+    # same pass.  With empties the join is LEFT, so every point row
+    # survives to pick them up; the points subtree is evaluated once (a
+    # separate cross-join branch would be a Union, and Spark does not
+    # share a subtree across union branches).
     empty_ids = [p.boundary_id for p in polys if p.n_segments == 0]
-    cov_agg = cov.groupBy("cell").agg(F.collect_list("boundary_id").alias("_bids"))
+    cov_agg = cov.groupBy("cell").agg(
+        F.collect_list(
+            F.struct("boundary_id", F.col("inside").alias("_inside"),
+                     F.col("segs").alias("_segs"))
+        ).alias("_cov")
+    )
     how = "left" if empty_ids else "inner"
     if strategy == "broadcast":
         cand = pt.join(F.broadcast(cov_agg), "cell", how)
@@ -232,24 +214,23 @@ def spatial_join(
     else:
         raise ValueError(f"unknown strategy {strategy!r}")
 
-    no_ids = F.expr("CAST(array() AS array<bigint>)")
-    bids = F.coalesce(F.col("_bids"), no_ids)
+    no_entries = F.expr(f"CAST(array() AS array<{_ENTRY}>)")
+    entries = F.coalesce(F.col("_cov"), no_entries)
     if empty_ids:
-        empties = F.array(*[F.lit(int(i)).cast("long") for i in empty_ids])
+        ids = ", ".join(f"struct({int(i)}L, true, array())" for i in empty_ids)
+        empties = F.expr(f"CAST(array({ids}) AS array<{_ENTRY}>)")
         if compact_cover:
             # one row per ancestor level: attach the empties on the
             # first level's row only, so each point gets each id once
-            empties = F.when(F.col("_lvl") == 0, empties).otherwise(no_ids)
-        bids = F.concat(bids, empties)
-    cand = cand.withColumn("boundary_id", F.explode(bids)).drop("_bids", "_lvl")
+            empties = F.when(F.col("_lvl") == 0, empties).otherwise(no_entries)
+        entries = F.concat(entries, empties)
+    cand = cand.select("*", F.inline(entries)).drop("_cov", "_lvl")
 
-    refine = _pip_refine_udf(spark, [p for p in polys if p.n_segments > 0])
+    position = F.expr(refine_sql("lon_e7", "lat_e7", "_inside", "_segs"))
     refined = (
-        cand.withColumn(
-            "position", refine(F.col("lon_e7"), F.col("lat_e7"), F.col("boundary_id"))
-        )
+        cand.withColumn("position", position)
         .filter(F.col("position") != OUTSIDE)
-        .drop("cell")
+        .drop("cell", "_inside", "_segs")
     )
     return refined if keep_position else refined.drop("position")
 

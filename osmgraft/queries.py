@@ -285,11 +285,11 @@ def geo_pip_join(spark, sf_dir):
 def geo_pip_join_distcover(spark, sf_dir):
     """PIP join over a 100-polygon boundary set — above the 64-polygon
     threshold, so :func:`osmgraft.join.spatial_join` builds the cell
-    cover DISTRIBUTED (``cover_df_distributed``: one ``mapInPandas``
+    cover DISTRIBUTED (``cover_df_distributed``: one ``mapInArrow``
     task batch per polygon group) instead of the driver loop.  This is
     the planet-scale cover path (10k+ boundary polygons) under a
     driver oracle; the join itself stays the broadcast-cover +
-    Arrow-refine shape of ``geo_pip_join``."""
+    SQL-refine shape of ``geo_pip_join``."""
     pts = synth.geo_entities_df(spark, sf_dir)
     return spatial_join(spark, pts, synth.boundaries_many(100)).select(
         "doc_id", "ent_idx", "boundary_id"

@@ -76,7 +76,7 @@ def spread_scan(df: DataFrame, min_parts: int | None = None) -> DataFrame:
 
     A single-row-group parquet file is an unsplittable scan: EVERY
     narrow operator above the first exchange (tokenize, shingle, md5,
-    cell-encode, Arrow refine ...) then runs in ONE task regardless of
+    cell-encode, PIP refine ...) then runs in ONE task regardless of
     core count — the local test corpus (`documents.parquet`,
     `embeddings.parquet`, `events.parquet`) is exactly that shape.
     When the planned scan partition count is below the cluster's

@@ -97,24 +97,30 @@ def test_repartition_invariance(spark, entities):
 
 
 def test_distributed_cover_matches_driver_cover(spark):
+    """Both cover builders emit identical rows: cell, inside flag and
+    per-cell segment list alike."""
     from osmgraft import synth
+    from osmgraft.geometry import Polygon, Ring
     from osmgraft.join import DEFAULT_COVER_LEVEL, cover_df, cover_df_distributed
 
-    polys = synth.boundaries()
+    # a box wide enough to have cells no segment meets (inside entries)
+    polys = synth.boundaries() + [
+        Polygon(50, "wide", [Ring([0, 10**8, 10**8, 0], [0, 0, 10**8, 10**8])])
+    ]
+
+    def rows(df):
+        return sorted(
+            (r.boundary_id, r.cell, r.inside, tuple(map(tuple, r.segs)))
+            for r in df.collect()
+        )
+
     for compacted in (False, True):
-        a = {
-            (r.boundary_id, r.cell)
-            for r in cover_df(
-                spark, polys, DEFAULT_COVER_LEVEL, compacted=compacted
-            ).collect()
-        }
-        b = {
-            (r.boundary_id, r.cell)
-            for r in cover_df_distributed(
-                spark, polys, DEFAULT_COVER_LEVEL, compacted=compacted
-            ).collect()
-        }
-        assert a == b and a
+        a = rows(cover_df(spark, polys, DEFAULT_COVER_LEVEL, compacted=compacted))
+        b = rows(cover_df_distributed(
+            spark, polys, DEFAULT_COVER_LEVEL, compacted=compacted
+        ))
+        assert a == b
+        assert any(r[2] for r in a) and any(not r[2] for r in a)
 
 
 def test_knn_certification_fused_job_count(spark, sf_dir):

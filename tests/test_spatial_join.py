@@ -66,6 +66,14 @@ def test_boundary_points_match(spark, entities):
         assert r.doc_id in bd_ids
 
 
+# physical nodes that run Python workers (``MapInArrow`` is Spark 4's
+# name for what Spark 3 printed as ``PythonMapInArrow``)
+PYTHON_NODES = (
+    "ArrowEvalPython", "BatchEvalPython", "MapInPandas", "MapInArrow",
+    "PythonMapInArrow",
+)
+
+
 def _plan_node_counts(spark, df):
     """Node-name counts of the physical plan Spark would run for ``df``
     with AQE off, so exchange reuse is applied up front: a reused
@@ -102,19 +110,19 @@ def test_empty_polygon_attach_is_single_pass(
 ):
     """Every strategy attaches empty (match-everything) polygons inside
     its one cover-join pass: the plan has no Union of a second branch
-    over the points subtree, the refine runs once, and the
-    empty-boundary rows still carry position == INSIDE via the refine
-    column."""
+    over the points subtree, the refine runs in the JVM (no Python
+    node), and the empty-boundary rows still carry position == INSIDE
+    via the refine column."""
     from osmgraft.geometry import INSIDE
 
     polys = synth.boundaries()
     assert any(p.n_segments == 0 for p in polys)  # fixture has 'world'
     # plan shape on the default (position-dropped) path — the shape the
-    # bench/gate queries run.  (keep_position=True still shows the
-    # known §4.4 filter-pushdown UDF duplication — test-only path.)
+    # bench/gate queries run
     nodes = _plan_node_counts(spark, spatial_join(spark, entities, polys, **kw))
     assert nodes["Union"] == 0
-    assert nodes["ArrowEvalPython"] == 1
+    for py_node in PYTHON_NODES:
+        assert nodes[py_node] == 0, py_node
     assert nodes["InMemoryTableScan"] == point_scans
     assert nodes["BroadcastNestedLoopJoin"] == nested_loops
     res = spatial_join(spark, entities, polys, keep_position=True, **kw)
@@ -123,6 +131,24 @@ def test_empty_polygon_attach_is_single_pass(
         F.col("boundary_id").isin(*empty_ids)
     ).select("position").distinct().collect()
     assert {r.position for r in empty_rows} == {INSIDE}
+
+
+@pytest.mark.parametrize(
+    "kw",
+    [{}, {"strategy": "sortmerge", "salt_buckets": 4}, {"compact_cover": True}],
+    ids=["broadcast", "sortmerge", "compact"],
+)
+def test_spatial_join_creates_no_broadcast_variable(spark, entities, monkeypatch, kw):
+    """The refine reads its geometry from the cover join, not from a
+    ``SparkContext.broadcast`` that nothing could release: building and
+    running the join for every strategy creates none."""
+    def refuse(self, value):
+        raise AssertionError("spatial_join created a broadcast variable")
+
+    monkeypatch.setattr(type(spark.sparkContext), "broadcast", refuse)
+    polys = synth.boundaries()
+    rows = spatial_join(spark, entities, polys, **kw).select("boundary_id").collect()
+    assert {r.boundary_id for r in rows} >= {1, 5}
 
 
 def test_empty_polygon_attach_with_distributed_cover(spark, sf_dir):
