@@ -72,6 +72,9 @@ def relation_closure(
     relations(relation_id, members ARRAY<STRUCT<ref, type, role>>).
     Base: relations whose node/way members hit a region directly.
     Step: relations whose relation-type members are already accepted.
+    Converged when a round accepts nothing new; a ``RuntimeError``
+    rather than a partial closure when ``max_iterations`` rounds all
+    found more (nesting deeper than the cap).
     """
     edges = relations.select(
         "relation_id", F.explode("members").alias("m")
@@ -114,6 +117,10 @@ def relation_closure(
         if new.isEmpty():
             break
         accepted = accepted.unionByName(new).localCheckpoint(eager=True)
+    else:
+        raise RuntimeError(
+            f"relation_closure not converged after {max_iterations} rounds"
+        )
     return accepted
 
 

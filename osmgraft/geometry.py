@@ -93,22 +93,10 @@ class Polygon:
         self.name = name
         self.rings = rings
         segs = [r.segments() for r in rings]
-        self._set_segments(
-            *(np.concatenate([s[i] for s in segs]) if segs else [] for i in range(4))
-        )
-
-    @classmethod
-    def from_segments(cls, boundary_id: int, name: str, p0x, p0y, p1x, p1y):
-        """Rebuild a polygon from flat segment arrays (executor-side
-        reconstruction for the distributed cover builder; ring structure
-        is irrelevant to cover/PIP, which run on the segment list)."""
-        self = cls(boundary_id, name, [])
-        self._set_segments(p0x, p0y, p1x, p1y)
-        return self
-
-    def _set_segments(self, p0x, p0y, p1x, p1y) -> None:
         self.p0x, self.p0y, self.p1x, self.p1y = (
-            np.asarray(v, dtype=np.int64) for v in (p0x, p0y, p1x, p1y)
+            np.concatenate([s[i] for s in segs]) if segs
+            else np.zeros(0, dtype=np.int64)
+            for i in range(4)
         )
         _check_segments(self.p0x, self.p0y, self.p1x, self.p1y)
         if self.p0x.size:

@@ -5,7 +5,9 @@ The flagship operator (reference: per-node loop over country polygons,
 as a **two-phase join**:
 
 1. **Cell prefilter** — every boundary polygon is expanded driver-side
-   into an exact-superset cell cover on the integer lon/lat grid
+   (one builder, :func:`cover_df`, whatever the polygon count: the
+   reference, too, holds its polygons in one process's RAM) into an
+   exact-superset cell cover on the integer lon/lat grid
    (``geometry.polygon_cover``); points compute their cell with pure
    JVM integer arithmetic (whole-stage codegen) and equi-join the
    broadcast cover.  No shuffle of the big side at all: scan ->
@@ -53,29 +55,11 @@ _COVER_SCHEMA = pa.schema([
     ("inside", pa.bool_()),
     ("segs", pa.list_(pa.struct([(n, pa.int64()) for n in _SEG_NAMES]))),
 ])
-_SPARK_SCHEMA = from_arrow_schema(_COVER_SCHEMA)
 # cover entry of one (cell, boundary): INSIDE outright, or the segments
 # that decide the cell's points
 _ENTRY = "struct<boundary_id:bigint,_inside:boolean,_segs:%s>" % (
-    _SPARK_SCHEMA["segs"].dataType.simpleString()
+    from_arrow_schema(_COVER_SCHEMA)["segs"].dataType.simpleString()
 )
-
-
-def _cover_batch(poly: Polygon, level: int, compacted: bool) -> pa.RecordBatch:
-    """One polygon's rows of :data:`_COVER_SCHEMA`, from
-    ``geometry.refine_cover`` (the driver and executor cover paths share
-    it, so they emit identical rows)."""
-    cell, inside, offsets, segs = refine_cover(poly, level, compacted=compacted)
-    seg_arr = pa.StructArray.from_arrays(list(segs), names=_SEG_NAMES)
-    return pa.RecordBatch.from_arrays(
-        [
-            pa.repeat(pa.scalar(poly.boundary_id, pa.int64()), cell.size),
-            pa.array(cell),
-            pa.array(inside),
-            pa.ListArray.from_arrays(pa.array(offsets), seg_arr),
-        ],
-        schema=_COVER_SCHEMA,
-    )
 
 
 def cover_df(
@@ -86,54 +70,41 @@ def cover_df(
 ) -> DataFrame:
     """:data:`_COVER_SCHEMA` rows: the exact-superset cover of every
     non-empty polygon, one row per (boundary_id, cell) with its refine
-    geometry (``geometry.refine_cover``).  Built as an Arrow table, so
-    creating it starts no Python worker.
+    geometry (``geometry.refine_cover``).  Built on the driver for every
+    polygon count, as one Arrow table, so creating it starts no Python
+    worker.
 
     ``compacted=True`` collapses complete sibling quartets into parents
     (mixed-level cover, H3-compact analog) — smaller broadcast for
     large boundaries; the point side then joins on every ancestor level
     present in the cover."""
-    table = pa.Table.from_batches(
-        [_cover_batch(p, level, compacted) for p in polys if p.n_segments > 0],
-        schema=_COVER_SCHEMA,
-    )
+    batches = []
+    for p in polys:
+        if p.n_segments == 0:
+            continue
+        cell, inside, offsets, segs = refine_cover(p, level, compacted=compacted)
+        seg_arr = pa.StructArray.from_arrays(list(segs), names=_SEG_NAMES)
+        batches.append(pa.RecordBatch.from_arrays(
+            [
+                pa.repeat(pa.scalar(p.boundary_id, pa.int64()), cell.size),
+                pa.array(cell),
+                pa.array(inside),
+                pa.ListArray.from_arrays(pa.array(offsets), seg_arr),
+            ],
+            schema=_COVER_SCHEMA,
+        ))
+    # no non-empty polygon: a zero-chunk table fails inside
+    # createDataFrame, a one-empty-chunk table does not
+    table = (pa.Table.from_batches(batches, schema=_COVER_SCHEMA)
+             if batches else _COVER_SCHEMA.empty_table())
     return spark.createDataFrame(table)
 
 
-def cover_df_distributed(
-    spark: SparkSession,
-    polys: list[Polygon],
-    level: int,
-    compacted: bool = False,
-) -> DataFrame:
-    """Distributed form of :func:`cover_df`: cover construction runs as
-    a ``mapInArrow`` over a polygons DataFrame (one task per polygon
-    batch) instead of a driver loop — the shape that holds when the
-    boundary set is planet-scale (10k+ polygons), where the interior
-    grid scan per polygon is the expensive part.  Produces the identical
-    rows (the same ``_cover_batch`` runs on the workers)."""
-    polys = [p for p in polys if p.n_segments > 0]
-    if not polys:
-        return spark.createDataFrame(_COVER_SCHEMA.empty_table())
-    n_part = min(len(polys), spark.sparkContext.defaultParallelism)
-    segs = pa.table({
-        "boundary_id": [p.boundary_id for p in polys],
-        **{k: [getattr(p, k) for p in polys] for k in ("p0x", "p0y", "p1x", "p1y")},
-    })
-    pdf = spark.createDataFrame(segs).repartition(n_part, "boundary_id")
-
-    def run(batches):
-        from osmgraft.geometry import Polygon as P  # executor-side import
-        from osmgraft.join import _cover_batch as batch
-
-        for b in batches:
-            for r in b.to_pylist():
-                poly = P.from_segments(
-                    r["boundary_id"], "", r["p0x"], r["p0y"], r["p1x"], r["p1y"]
-                )
-                yield batch(poly, level, compacted)
-
-    return pdf.mapInArrow(run, _SPARK_SCHEMA)
+# One cover builder.  The former executor-side builder's name stays as
+# an alias only because the benchmark's traced runs patch it
+# (``perfbench/workloads.py``, ``cover_spans``); without it every traced
+# pass that joins would fail.
+cover_df_distributed = cover_df
 
 
 def spatial_join(
@@ -150,6 +121,8 @@ def spatial_join(
     """points(.. lon_e7, lat_e7 ..) x polygons -> one row per (point,
     boundary) match.  Multi-assign (a point can match several
     boundaries); BOUNDARY counts as a match (``osmc/obm.c:28-30``).
+    Every strategy and polygon count builds the cover with
+    :func:`cover_df` on the driver, so the join runs no Python.
 
     Physical strategies:
       * ``broadcast`` (default) — the cover broadcasts; the big side
@@ -167,16 +140,13 @@ def spatial_join(
     (<= level+1 rows, typically 3-5) — smaller build side for one extra
     narrow explode.
     """
-    # Large boundary sets: build the cover on the executors — the driver
-    # loop is fine for tens of boundaries, a bottleneck for thousands.
-    if len(polys) > 64:
-        cov = cover_df_distributed(spark, polys, level, compacted=compact_cover)
-    else:
-        cov = cover_df(spark, polys, level, compacted=compact_cover)
+    cov = cover_df(spark, polys, level, compacted=compact_cover)
     if compact_cover:
+        # an empty cover (only empty polygons) still needs one level,
+        # so every point row survives to pick up the empties
         levels = sorted(
             {r.cell >> 52 for r in cov.select("cell").distinct().collect()}
-        )
+        ) or [level]
         anc = F.array(
             *[
                 cells.lonlat_cell_col(F.col("lon_e7"), F.col("lat_e7"), lv)

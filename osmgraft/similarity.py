@@ -25,6 +25,40 @@ def quantized(df: DataFrame, col: str = "embedding") -> DataFrame:
     return df.withColumn("qvec", q)
 
 
+class VectorShapeError(ValueError):
+    """A NULL vector, a NULL component or vectors of unequal length in
+    one Arrow batch of an embedding column."""
+
+
+def vector_matrix(vecs, dtype):
+    """A ``list<number>`` Arrow column as an ``(rows, dim)`` numpy
+    matrix of ``dtype``.  Raises :class:`VectorShapeError` on a NULL
+    vector or component and on rows of unequal length: a flat reshape
+    would fail with a bare numpy shape error, or, when the lengths sum
+    to a multiple of the row count, misalign rows and vectors
+    silently."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if isinstance(vecs, pa.ChunkedArray):
+        vecs = vecs.combine_chunks()
+    flat = vecs.flatten()
+    if vecs.null_count or flat.null_count:
+        raise VectorShapeError(
+            f"NULL vector in an embedding column: {vecs.null_count} NULL "
+            f"rows, {flat.null_count} NULL components in {len(vecs)} rows"
+        )
+    lens = pc.list_value_length(vecs).to_numpy(zero_copy_only=False)
+    dim = int(lens[0]) if len(lens) else 0
+    if (lens != dim).any():
+        raise VectorShapeError(
+            f"vectors of unequal length in one batch: "
+            f"{sorted(set(lens.tolist()))[:5]}"
+        )
+    flat = flat.to_numpy(zero_copy_only=False)
+    return flat.reshape(len(vecs), dim).astype(dtype)
+
+
 def int_matmul_exact_np(A, Bt, as_int=True):
     """Exact int64 matrix product A @ Bt.T for quantized vectors.
 
@@ -295,6 +329,7 @@ def _ivf_bucket_topk_np(
 
         from osmgraft.similarity import int_matmul_exact_np as mm
         from osmgraft.similarity import quantize_e3_np as qz
+        from osmgraft.similarity import vector_matrix as vm
 
         cids_, cm_ = bc.value
         for b in batches:
@@ -307,8 +342,7 @@ def _ivf_bucket_topk_np(
             # normalize the passthrough to the declared array<double>
             # (the source column may be array<float>)
             emb = emb.cast(pa.list_(pa.float64()))
-            flat = emb.flatten().to_numpy(zero_copy_only=False)
-            M = qz(flat.reshape(len(vids), -1).astype(np.float64))
+            M = qz(vm(emb, np.float64))
             D = mm(M, cm_)
             # (dot desc, cid asc): columns are cid-ascending, stable sort
             ordc = np.argsort(-D, axis=1, kind="stable")[:, :npb]
@@ -370,6 +404,7 @@ def _ivf_bucket_topk_np(
 
         from osmgraft.similarity import int_matmul_exact_np as mm
         from osmgraft.similarity import quantize_e3_np as qz
+        from osmgraft.similarity import vector_matrix as vm
 
         multi = npb > 1  # closure-captured alongside k/cosine
         cols = (
@@ -381,9 +416,7 @@ def _ivf_bucket_topk_np(
             cols["cosine"] = []
         if table.num_rows:
             vids = table.column("vec_id").to_numpy(zero_copy_only=False)
-            emb = table.column("embedding").combine_chunks()
-            flat = emb.flatten().to_numpy(zero_copy_only=False)
-            M = qz(flat.reshape(len(vids), -1).astype(np.float64))
+            M = qz(vm(table.column("embedding"), np.float64))
             pm = table.column("is_probe").to_numpy(zero_copy_only=False)
             im = table.column("is_index").to_numpy(zero_copy_only=False)
             Q, qids = M[pm], vids[pm]
@@ -508,6 +541,7 @@ def _nearest_centroid(
         import pyarrow as pa
 
         from osmgraft.similarity import int_matmul_exact_np as mm
+        from osmgraft.similarity import vector_matrix as vm
 
         cids_, C_ = bc.value
         for b in batches:
@@ -517,9 +551,7 @@ def _nearest_centroid(
             qv = b.column("qvec")
             if isinstance(qv, pa.ChunkedArray):
                 qv = qv.combine_chunks()
-            flat = qv.flatten().to_numpy(zero_copy_only=False)
-            Q = flat.reshape(len(vids), -1).astype(np.int64)
-            best = np.argmax(mm(Q, C_), axis=1)
+            best = np.argmax(mm(vm(qv, np.int64), C_), axis=1)
             out = {
                 "vec_id": pa.array(vids.astype(np.int64)),
                 "centroid_id": pa.array(cids_[best]),
@@ -621,6 +653,7 @@ def _centroid_scan_np(df: DataFrame, cents_rows, want: str) -> DataFrame:
 
         from osmgraft.similarity import int_matmul_exact_np as mm
         from osmgraft.similarity import quantize_e3_np as qz
+        from osmgraft.similarity import vector_matrix as vm
 
         cids_, C_ = bc.value
         ncb = (C_ * C_).sum(axis=1)
@@ -628,11 +661,7 @@ def _centroid_scan_np(df: DataFrame, cents_rows, want: str) -> DataFrame:
             if b.num_rows == 0:
                 continue
             vids = b.column("vec_id").to_numpy(zero_copy_only=False)
-            emb = b.column("embedding")
-            if isinstance(emb, pa.ChunkedArray):
-                emb = emb.combine_chunks()
-            flat = emb.flatten().to_numpy(zero_copy_only=False)
-            M = qz(flat.reshape(len(vids), -1).astype(np.float64))
+            M = qz(vm(b.column("embedding"), np.float64))
             dot = mm(M, C_)
             naq = (M * M).sum(axis=1)
             d2 = naq[:, None] + ncb[None, :] - 2 * dot
@@ -952,17 +981,14 @@ def embedding_near_dup_pairs_exact(
 
         from osmgraft.similarity import int_matmul_exact_np as mm
         from osmgraft.similarity import quantize_e3_np as qz
+        from osmgraft.similarity import vector_matrix as vm
 
         pids_, P_, n2p_ = bc.value
         for b in batches:
             if b.num_rows == 0:
                 continue
             vids = b.column("vec_id").to_numpy(zero_copy_only=False)
-            emb = b.column("embedding")
-            if isinstance(emb, pa.ChunkedArray):
-                emb = emb.combine_chunks()
-            flat = emb.flatten().to_numpy(zero_copy_only=False)
-            M = qz(flat.reshape(len(vids), -1).astype(np.float64))
+            M = qz(vm(b.column("embedding"), np.float64))
             n2q = (M * M).sum(axis=1)
             out_a, out_b = [], []
             chunk = max(1, 4_000_000 // max(len(P_), 1))

@@ -132,13 +132,11 @@ def points_sql(doc_table: str = "documents") -> str:
 
 
 def boundaries_many(n: int = 100) -> list[Polygon]:
-    """A deterministic ``n``-polygon boundary set (ids 101..100+n) —
-    the planet-scale shape that exercises the distributed
-    (``mapInPandas``) cover builder in :func:`osmgraft.join.spatial_join`
-    (the >64-polygon branch).  Small axis-aligned boxes jittered around
-    the three urban centers (so the skewed 80% of points actually hit
-    them), box size varying so covers span 1..many cells.  Pure int64
-    arithmetic; no RNG."""
+    """A deterministic ``n``-polygon boundary set (ids 101..100+n): the
+    many-boundary input of :func:`osmgraft.join.spatial_join`.  Small
+    axis-aligned boxes jittered around the three urban centers (so the
+    skewed 80% of points actually hit them), box size varying so covers
+    span 1..many cells.  Pure int64 arithmetic; no RNG."""
     polys = []
     for i in range(n):
         cx, cy = CENTERS[i % 3]

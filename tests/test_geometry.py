@@ -168,8 +168,6 @@ def test_vertices_outside_lon_lat_range_raise():
     with pytest.raises(CoordinateRangeError):
         pip_batch([H], [362_372_165], *map(np.array, (p0x, p0y, p1x, p1y)))
     with pytest.raises(CoordinateRangeError):
-        Polygon.from_segments(1, "x", p0x, p0y, p1x, p1y)
-    with pytest.raises(CoordinateRangeError):
         Polygon(1, "x", [Ring([0, 10, 10], [0, 0, MAX_LAT_E7 + 1])])
     with pytest.raises(CoordinateRangeError):
         Polygon(1, "x", [Ring([0, H + 1, 10], [0, 0, 10])])
@@ -289,19 +287,22 @@ def _refine_case(spark, polys, level, **kw):
 
 @pytest.mark.spark
 @pytest.mark.parametrize(
-    "level, kw",
-    [(9, {}), (9, {"compact_cover": True}), (6, {"strategy": "sortmerge"})],
-    ids=["broadcast", "compact", "sortmerge"],
+    "level, kw, many",
+    [
+        (9, {}, False),
+        (9, {"compact_cover": True}, False),
+        (6, {"strategy": "sortmerge"}, False),
+        (9, {}, True),
+    ],
+    ids=["broadcast", "compact", "sortmerge", "many"],
 )
-def test_sql_refine_matches_scalar_oracle(spark, level, kw):
-    _refine_case(spark, _refine_polys(), level, **kw)
-
-
-@pytest.mark.spark
-def test_sql_refine_matches_scalar_oracle_distributed_cover(spark):
-    """More than 64 polygons: the cover is built on the executors."""
+def test_sql_refine_matches_scalar_oracle(spark, level, kw, many):
+    """``many``: more than 64 polygons, whose cover comes from the same
+    driver builder."""
     from osmgraft import synth
 
-    polys = [p for p in _refine_polys() if p.boundary_id != 7]
-    polys += synth.boundaries_many(64)
-    _refine_case(spark, polys, 9)
+    polys = _refine_polys()
+    if many:
+        polys = [p for p in polys if p.boundary_id != 7]
+        polys += synth.boundaries_many(64)
+    _refine_case(spark, polys, level, **kw)

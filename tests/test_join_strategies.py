@@ -96,31 +96,21 @@ def test_repartition_invariance(spark, entities):
     assert shuffled == base
 
 
-def test_distributed_cover_matches_driver_cover(spark):
-    """Both cover builders emit identical rows: cell, inside flag and
-    per-cell segment list alike."""
-    from osmgraft import synth
+def test_cover_df_emits_inside_and_segment_rows(spark):
+    """A box wide enough to have cells no segment meets yields INSIDE
+    rows (no segments) next to segment rows, compacted or not."""
     from osmgraft.geometry import Polygon, Ring
-    from osmgraft.join import DEFAULT_COVER_LEVEL, cover_df, cover_df_distributed
+    from osmgraft.join import DEFAULT_COVER_LEVEL, cover_df
 
-    # a box wide enough to have cells no segment meets (inside entries)
     polys = synth.boundaries() + [
         Polygon(50, "wide", [Ring([0, 10**8, 10**8, 0], [0, 0, 10**8, 10**8])])
     ]
-
-    def rows(df):
-        return sorted(
-            (r.boundary_id, r.cell, r.inside, tuple(map(tuple, r.segs)))
-            for r in df.collect()
-        )
-
     for compacted in (False, True):
-        a = rows(cover_df(spark, polys, DEFAULT_COVER_LEVEL, compacted=compacted))
-        b = rows(cover_df_distributed(
+        rows = cover_df(
             spark, polys, DEFAULT_COVER_LEVEL, compacted=compacted
-        ))
-        assert a == b
-        assert any(r[2] for r in a) and any(not r[2] for r in a)
+        ).collect()
+        assert any(r.inside for r in rows) and any(not r.inside for r in rows)
+        assert all(bool(r.segs) != r.inside for r in rows)
 
 
 def test_knn_certification_fused_job_count(spark, sf_dir):

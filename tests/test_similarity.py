@@ -341,3 +341,41 @@ def test_quantize_e3_np_matches_jvm_round(spark, emb):
     for i, v in enumerate(edge):
         got = quantize_e3_np(np.array([v], dtype=np.float64)).tolist()
         assert got == jvm_edge[i], (v, got, jvm_edge[i])
+
+
+def _null_vector_corpus(spark, n=24, dim=8):
+    rows = [
+        (i, None if i == 13 else [float((i * 7 + d * 3) % 11 - 5) for d in range(dim)])
+        for i in range(n)
+    ]
+    return spark.createDataFrame(rows, schema="vec_id LONG, embedding ARRAY<FLOAT>")
+
+
+def test_null_embedding_is_a_named_error(spark):
+    """A NULL embedding reaching the Arrow kernels raises
+    ``VectorShapeError`` naming the NULL, not a numpy reshape failure
+    (the NULL sits above the first-n seed ids, so it reaches the
+    executors' assignment pass in both operators)."""
+    from osmgraft import similarity
+
+    e = _null_vector_corpus(spark)
+    for run in (
+        lambda: similarity.ivf_train_assign(e, n_centroids=4, iters=1),
+        lambda: similarity.cosine_topk_ivf(e, k=3, n_centroids=4),
+    ):
+        with pytest.raises(Exception, match="VectorShapeError: NULL vector"):
+            run().collect()
+
+
+def test_vector_matrix_rejects_ragged_rows():
+    """Lengths 3 + 1 sum to a multiple of the row count: a flat reshape
+    would silently split them into two 2-vectors."""
+    import pyarrow as pa
+
+    from osmgraft.similarity import VectorShapeError, vector_matrix
+
+    with pytest.raises(VectorShapeError, match="unequal length"):
+        vector_matrix(pa.array([[1, 2, 3], [4]]), np.int64)
+    m = vector_matrix(pa.chunked_array([[[1, 2]], [[3, 4]]]), np.float64)
+    assert m.tolist() == [[1.0, 2.0], [3.0, 4.0]]
+    assert vector_matrix(pa.array([], pa.list_(pa.int64())), np.int64).shape == (0, 0)

@@ -94,29 +94,34 @@ def _plan_node_counts(spark, df):
 
 
 @pytest.mark.parametrize(
-    "kw, point_scans, nested_loops",
+    "kw, point_scans, nested_loops, many",
     [
-        ({}, 1, 0),
+        ({}, 1, 0, False),
         # points: the join side plus the 2% hot-cell sample (its
         # broadcast is built once and reused by both salting joins);
         # the one nested loop replicates the cover into the salt buckets
-        ({"strategy": "sortmerge", "salt_buckets": 4}, 2, 1),
-        ({"compact_cover": True}, 1, 0),
+        ({"strategy": "sortmerge", "salt_buckets": 4}, 2, 1, False),
+        ({"compact_cover": True}, 1, 0, False),
+        ({}, 1, 0, True),
     ],
-    ids=["broadcast", "sortmerge", "compact"],
+    ids=["broadcast", "sortmerge", "compact", "many"],
 )
 def test_empty_polygon_attach_is_single_pass(
-    spark, entities, kw, point_scans, nested_loops
+    spark, entities, kw, point_scans, nested_loops, many
 ):
     """Every strategy attaches empty (match-everything) polygons inside
     its one cover-join pass: the plan has no Union of a second branch
     over the points subtree, the refine runs in the JVM (no Python
     node), and the empty-boundary rows still carry position == INSIDE
-    via the refine column."""
-    from osmgraft.geometry import INSIDE
+    via the refine column.  ``many``: more than 64 polygons, whose
+    cover subtree holds no Python node either."""
+    from osmgraft.geometry import INSIDE, Polygon
 
-    polys = synth.boundaries()
-    assert any(p.n_segments == 0 for p in polys)  # fixture has 'world'
+    if many:
+        polys = synth.boundaries_many(70) + [Polygon(999, "world", [])]
+    else:
+        polys = synth.boundaries()
+    assert any(p.n_segments == 0 for p in polys)  # each set has a 'world'
     # plan shape on the default (position-dropped) path — the shape the
     # bench/gate queries run
     nodes = _plan_node_counts(spark, spatial_join(spark, entities, polys, **kw))
@@ -151,10 +156,26 @@ def test_spatial_join_creates_no_broadcast_variable(spark, entities, monkeypatch
     assert {r.boundary_id for r in rows} >= {1, 5}
 
 
+@pytest.mark.parametrize(
+    "kw",
+    [{}, {"strategy": "sortmerge", "salt_buckets": 4}, {"compact_cover": True}],
+    ids=["broadcast", "sortmerge", "compact"],
+)
+def test_only_empty_polygons_match_every_point(spark, entities, kw):
+    """A boundary set with no segments at all gives an empty cover; every
+    strategy still matches every point to each empty polygon."""
+    from osmgraft.geometry import Polygon
+
+    polys = [Polygon(998, "world", []), Polygon(999, "world2", [])]
+    got = spatial_join(spark, entities, polys, **kw).groupBy("boundary_id").count()
+    n = entities.count()
+    assert {(r.boundary_id, r["count"]) for r in got.collect()} == {(998, n), (999, n)}
+
+
 def test_empty_polygon_attach_with_distributed_cover(spark, sf_dir):
-    """The inline empty-attach also composes with the >64-polygon
-    distributed cover builder, and the broadcast and sortmerge
-    strategies agree on the same mixed set."""
+    """The inline empty-attach also composes with a >64-polygon cover,
+    and the broadcast and sortmerge strategies agree on the same mixed
+    set."""
     from osmgraft.geometry import Polygon
 
     ents = synth.geo_entities_df(spark, sf_dir).cache()
