@@ -26,7 +26,7 @@ from __future__ import annotations
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 TOKEN_SPLIT = " "
@@ -35,7 +35,6 @@ TOKEN_SPLIT = " "
 def shingles(
     df: DataFrame, n: int = 3, id_col: str = "doc_id",
     max_df: int | None = None,
-    max_df_strategy: str = "anti_join",
 ) -> DataFrame:
     """Distinct word n-gram shingles per doc: (id, shingle).
 
@@ -55,59 +54,35 @@ def shingles(
     """
     out = _shingle_base(df, n, id_col)
     if max_df is not None:
-        out = _apply_df_cap(out, max_df, max_df_strategy)
+        out = _apply_df_cap(out, max_df)
     return out
 
 
-def _apply_df_cap(
-    out: DataFrame, max_df: int, max_df_strategy: str = "anti_join"
-) -> DataFrame:
-    """Drop shingles whose document frequency exceeds ``max_df``."""
-    if max_df_strategy == "anti_join":
-        # Map-side stop-shingle drop (default; guide §2.3/§3.2):
-        # df comes from a partial-agg ``groupBy(shingle).count()``
-        # — a 10^9-df boilerplate shingle moves ONE row per map
-        # partition through that shuffle, not 10^9 rows — then the
-        # (small by construction: at most total_occurrences/max_df
-        # entries) over-cap set broadcast-anti-joins the shingle
-        # stream, so boilerplate rows are dropped IN the scan
-        # stage and never transit any shuffle at all.  On an uncached
-        # input the shingle derivation runs twice (count side + join
-        # side) — cheap codegen; the pair generators cache the base so
-        # it runs once.  The r5 window shape instead shuffled every
-        # occurrence of every hot shingle into one window partition
-        # before discarding it.  Identical result set (same cap
-        # semantics, same oracle SQL).
-        hot = (
-            out.groupBy("shingle")
-            .agg(F.count("*").alias("_df"))
-            .filter(F.col("_df") > max_df)
-            .select("shingle")
-        )
-        # restore (id, shingle) order: the USING-column join puts the
-        # join key first
-        out = out.join(F.broadcast(hot), "shingle", "left_anti").select(
-            "id", "shingle"
-        )
-    elif max_df_strategy == "window":
-        # Fallback when the over-cap vocabulary outgrows the
-        # broadcast threshold (a pathological corpus where the
-        # boilerplate dictionary itself is huge): single-pass COUNT
-        # window over shingle.  WindowExec buffers one shingle's
-        # rows at a time and spills to disk, so a 10M-doc
-        # boilerplate shingle is slow disk I/O for that one key,
-        # never an OOM — but every hot occurrence transits the
-        # shuffle before being dropped, which is why this is no
-        # longer the default.
-        w = Window.partitionBy("shingle")
-        out = (
-            out.withColumn("_df", F.count("*").over(w))
-            .filter(F.col("_df") <= max_df)
-            .drop("_df")
-        )
-    else:
-        raise ValueError(f"unknown max_df_strategy {max_df_strategy!r}")
-    return out
+def _apply_df_cap(out: DataFrame, max_df: int) -> DataFrame:
+    """Drop shingles whose document frequency exceeds ``max_df``.
+
+    Map-side stop-shingle drop (guide §2.3/§3.2): df comes from a
+    partial-agg ``groupBy(shingle).count()`` — a 10^9-df boilerplate
+    shingle moves ONE row per map partition through that shuffle, not
+    10^9 rows — then the (small by construction: at most
+    total_occurrences/max_df entries) over-cap set broadcast-anti-joins
+    the shingle stream, so boilerplate rows are dropped IN the scan
+    stage and never transit any shuffle at all.  On an uncached input
+    the shingle derivation runs twice (count side + join side) — cheap
+    codegen; the pair generators cache the base so it runs once.  A
+    count window over shingle gives the same rows but shuffles every
+    occurrence of every hot shingle before discarding it."""
+    hot = (
+        out.groupBy("shingle")
+        .agg(F.count("*").alias("_df"))
+        .filter(F.col("_df") > max_df)
+        .select("shingle")
+    )
+    # restore (id, shingle) order: the USING-column join puts the join
+    # key first
+    return out.join(F.broadcast(hot), "shingle", "left_anti").select(
+        "id", "shingle"
+    )
 
 
 def _shingle_base(df: DataFrame, n: int, id_col: str = "doc_id") -> DataFrame:

@@ -36,6 +36,7 @@ neighbor's distance is certified by the ring guarantee.
 
 from __future__ import annotations
 
+import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -292,13 +293,24 @@ def _annulus_offsets_df(spark: SparkSession, r_lo: int, r_hi: int) -> DataFrame:
     kNN runs in flat e7 space, matching the reference kd-tree's
     geometry).  Pass r_lo=-1 to include the center cell — the annulus
     delta means each disk cell is visited exactly once across rounds."""
-    rows = [
-        (dx, dy)
-        for dx in range(-r_hi, r_hi + 1)
-        for dy in range(-r_hi, r_hi + 1)
-        if r_lo < max(abs(dx), abs(dy)) <= r_hi
-    ]
-    return spark.createDataFrame(rows, schema="dx LONG, dy LONG")
+    span = np.arange(-r_hi, r_hi + 1, dtype=np.int64)
+    dx, dy = (a.ravel() for a in np.meshgrid(span, span, indexing="ij"))
+    ring = np.maximum(np.abs(dx), np.abs(dy))
+    keep = (r_lo < ring) & (ring <= r_hi)
+    return spark.createDataFrame(pa.table({"dx": dx[keep], "dy": dy[keep]}))
+
+
+# knn's driver-built frames come from Arrow tables, which plan as a
+# LocalTableScan; a frame built from a Python list is an RDD scan whose
+# first action starts the Python worker pool.
+_KNN_QUERY_SCHEMA = pa.schema(
+    [("qid", pa.int64()), ("qx", pa.int64()), ("qy", pa.int64())]
+)
+# the ring loop's running top-k rows (carry); results add the rank
+_KNN_CARRY_SCHEMA = pa.schema(
+    [(c, pa.int64()) for c in ("qid", "qcx", "qcy", "qx", "qy", "pid")]
+    + [("dist2", pa.decimal128(38, 0))]
+)
 
 
 def _dist2_col():
@@ -367,14 +379,14 @@ def knn(
         q_rows = (
             queries.select("qid", "lon_e7", "lat_e7")
             .limit(brute_max_queries + 1)
-            .collect()
+            .toArrow()
         )
-        if len(q_rows) <= brute_max_queries and (
-            max(len(q_rows), 1) * (est_bytes // 8 + 1) <= brute_max_pairs
+        if q_rows.num_rows <= brute_max_queries and (
+            max(q_rows.num_rows, 1) * (est_bytes // 8 + 1) <= brute_max_pairs
         ):
             qs = spark.createDataFrame(
-                [(r.qid, r.lon_e7, r.lat_e7) for r in q_rows],
-                schema="qid LONG, qx LONG, qy LONG",
+                q_rows.rename_columns(_KNN_QUERY_SCHEMA.names)
+                .cast(_KNN_QUERY_SCHEMA)
             )
             ps = points.select(
                 F.col("pid"), F.col("lon_e7").alias("px"),
@@ -423,11 +435,9 @@ def knn(
         cells.axis_tile_col(F.col("lat_e7"), level).alias("qcy"),
     )
 
-    out_schema = (
-        "qid LONG, qcx LONG, qcy LONG, qx LONG, qy LONG, pid LONG, "
-        "dist2 DECIMAL(38,0), rank INT"
+    results = spark.createDataFrame(
+        _KNN_CARRY_SCHEMA.append(pa.field("rank", pa.int32())).empty_table()
     )
-    results = spark.createDataFrame([], schema=out_schema)
     pt = pt.cache()
     # localCheckpoint truncates the lineage each round — without it the
     # anti-join chain re-derives every prior round's plan (exponential
@@ -468,7 +478,7 @@ def knn(
     # scanned, its survivors live in carry.  Disk cells are therefore
     # visited once each instead of once per round (at r=128 the full
     # rescan was 66k offsets per pending query per round).
-    carry = spark.createDataFrame([], schema=out_schema.rsplit(", ", 1)[0])
+    carry = spark.createDataFrame(_KNN_CARRY_SCHEMA.empty_table())
     for _ in range(max_rounds):
         if n_pending == 0:
             break

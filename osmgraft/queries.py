@@ -560,10 +560,11 @@ def ann_topk(spark, sf_dir):
     candidate pair run OUTSIDE whole-stage codegen (and an unrolled
     codegen expression regresses worse: projection collapse inlines
     the 64-element array build into every term).  Instead the corpus
-    streams through ONE vectorized Arrow pass that quantizes and
-    matrix-multiplies against the (tiny, driver-collected, broadcast)
-    query matrix in int64 numpy; only (pid, qid, dot) rows come back.
-    Measured 2.02 -> 0.73 s at sf1.0.
+    streams through ONE vectorized Arrow pass
+    (``similarity._driver_scan``) that quantizes and matrix-multiplies
+    against the (tiny, driver-read, broadcast) query matrix in int64
+    numpy; only (pid, qid, dot) rows come back.  Measured 2.02 -> 0.73 s
+    at sf1.0.
 
     Exactness: quantization is round-half-away-from-zero of
     ``embedding[d] * 1000`` — implemented exactly in numpy via
@@ -576,51 +577,30 @@ def ann_topk(spark, sf_dir):
     from zero.  Dot products are int64-exact.  A pytest pins
     element-wise quantization equality vs the JVM expression over the
     shipped corpora."""
-    e = _read_spread(spark, sf_dir, "embeddings")
     import numpy as np
+    import pyarrow as pa
 
-    from .similarity import quantize_e3_np
-
-    # query side: filter pushes to the parquet scan; bounded driver
-    # residency (the vec_id < 10 literal bounds the collect at 10 rows)
-    qrows = (
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        .filter(F.col("vec_id") < 10)
-        .select("vec_id", "embedding")
-        .collect()
+    e = _read_spread(spark, sf_dir, "embeddings")
+    # query side: the filter pushes to the parquet scan (at most 10 rows)
+    qs = spark.read.parquet(f"{sf_dir}/embeddings.parquet").filter(
+        F.col("vec_id") < 10
     )
-    qids = np.array([r.vec_id for r in qrows], dtype=np.int64)
-    qm = quantize_e3_np(np.array([r.embedding for r in qrows], dtype=np.float64))
-    bc = spark.sparkContext.broadcast((qids, qm.T.copy()))
 
-    def dots(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        from osmgraft.similarity import int_matmul_exact_np as _mm
-        from osmgraft.similarity import quantize_e3_np as _q
-
-        qids_, qmT = bc.value
-        qm_ = qmT.T  # _mm transposes internally
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            pids = b.column("vec_id").to_numpy(zero_copy_only=False)
-            emb = b.column("embedding")
-            if isinstance(emb, pa.ChunkedArray):
-                emb = emb.combine_chunks()
-            flat = emb.flatten().to_numpy(zero_copy_only=False)
-            pm = _q(flat.reshape(len(pids), -1).astype(np.float64))
-            d = _mm(pm, qm_)  # (n, nq) exact inner products (BLAS path)
-            n, nq = d.shape
-            yield pa.record_batch({
-                "pid": pa.array(np.repeat(pids, nq).astype(np.int64)),
-                "qid": pa.array(np.tile(qids_, n)),
-                "dot": pa.array(d.ravel()),
+    def dots_emit(qids, Q):
+        def emit(b, M, D):
+            n, nq = D.shape
+            return pa.record_batch({
+                "pid": pa.array(np.repeat(
+                    b.column("vec_id").to_numpy(zero_copy_only=False), nq
+                ).astype(np.int64)),
+                "qid": pa.array(np.tile(qids, n)),
+                "dot": pa.array(D.ravel()),
             })
+        return emit
 
-    out = e.select("vec_id", "embedding").mapInArrow(
-        dots, "pid long, qid long, dot long"
+    out = similarity._driver_scan(
+        e, similarity._driver_matrix(qs, "query set", empty_ok=True),
+        dots_emit, "pid long, qid long, dot long",
     )
     w = Window.partitionBy("qid").orderBy(F.col("dot").desc(), F.col("pid").asc())
     return (

@@ -9,10 +9,20 @@
   engines agree bit-for-bit.
 * float cosine top-k via F.aggregate/zip_with (JVM-side fold) for the
   production path where cross-engine bit-equality is not required.
+
+Every kernel that scores the corpus against a small vector set (IVF
+centroids, k-means|| centers, ann_topk's queries, the exact near-dup
+baseline's whole corpus) reads that set to the driver once with
+:func:`_driver_matrix` and streams the corpus through one
+:func:`_driver_scan`.  Centers live on the driver between rounds as a
+numpy ``(cids, C)`` pair; no round re-derives an earlier one.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window, functions as F
 
 DIM = 64
@@ -37,9 +47,6 @@ def vector_matrix(vecs, dtype):
     would fail with a bare numpy shape error, or, when the lengths sum
     to a multiple of the row count, misalign rows and vectors
     silently."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
     if isinstance(vecs, pa.ChunkedArray):
         vecs = vecs.combine_chunks()
     flat = vecs.flatten()
@@ -74,8 +81,6 @@ def int_matmul_exact_np(A, Bt, as_int=True):
     (unreachable for e3-quantized embeddings, but the guard keeps the
     function total; that path always returns int64).
     """
-    import numpy as np
-
     amax = int(np.abs(A).max(initial=0))
     bmax = int(np.abs(Bt).max(initial=0))
     dim = A.shape[1] if A.ndim == 2 else len(A)
@@ -98,11 +103,93 @@ def quantize_e3_np(m):
     boundary, and at the boundary every engine rounds away from
     zero.  A pytest pins element-wise equality vs the JVM expression
     over the shipped corpora and adversarial boundary values."""
-    import numpy as np
-
     a = np.abs(m) * 1000.0
     fl = np.floor(a)
     return (np.sign(m) * (fl + (a - fl >= 0.5))).astype(np.int64)
+
+
+class VectorSetSizeError(ValueError):
+    """A vector set read to the driver that is empty or holds more than
+    ``_DRIVER_MAX_VECTORS`` vectors."""
+
+
+# Largest vector set read to the driver and broadcast: 16 MB of int64 at
+# dim 64, above dedup_embedding_cosine_exact's whole corpus at sf1.0
+# (20k vectors).
+_DRIVER_MAX_VECTORS = 1 << 15
+# Largest block of dots one emit call receives: 32 MB of int64.
+_DOT_BLOCK = 4_000_000
+
+
+def _driver_matrix(df: DataFrame, what: str, empty_ok: bool = False):
+    """``(ids, M)`` of a bounded vector set read to the driver with one
+    ``limit().toArrow()``: its ``vec_id`` values ascending and the
+    matching e3-quantized int64 matrix.  Raises
+    :class:`VectorSetSizeError` when the set holds more than
+    ``_DRIVER_MAX_VECTORS`` vectors or, unless ``empty_ok``, none, and
+    :class:`VectorShapeError` on a NULL vector."""
+    t = df.select("vec_id", "embedding").limit(_DRIVER_MAX_VECTORS + 1).toArrow()
+    if t.num_rows > _DRIVER_MAX_VECTORS:
+        raise VectorSetSizeError(
+            f"{what} holds more than {_DRIVER_MAX_VECTORS} vectors, "
+            f"too many to read to the driver"
+        )
+    if t.num_rows == 0 and not empty_ok:
+        raise VectorSetSizeError(f"empty {what}: no vectors to score against")
+    t = t.sort_by("vec_id")
+    ids = t.column("vec_id").to_numpy().astype(np.int64)
+    return ids, quantize_e3_np(vector_matrix(t.column("embedding"), np.float64))
+
+
+def _driver_scan(df: DataFrame, ids_matrix, make_emit, schema: str) -> DataFrame:
+    """Stream ``df``'s (vec_id, embedding) rows against a driver vector
+    set ``(ids, C)`` from :func:`_driver_matrix`, broadcast once.  Each
+    Arrow batch is quantized like ``C`` and cut into row blocks of at
+    most ``_DOT_BLOCK`` dots.  ``make_emit(ids, C)`` runs once per task
+    and returns ``emit(batch, M, D)``, which gets each block's rows, their
+    quantized matrix and the exact dots ``D = M @ C.T``
+    (:func:`int_matmul_exact_np`) and returns one record batch of
+    ``schema``.  An empty set emits nothing."""
+    bc = df.sparkSession.sparkContext.broadcast(ids_matrix)
+
+    def run(batches):
+        ids, C = bc.value
+        if not len(ids):
+            return
+        emit = make_emit(ids, C)
+        rows = max(1, _DOT_BLOCK // len(ids))
+        for b in batches:
+            for s in range(0, b.num_rows, rows):
+                part = b.slice(s, rows)
+                M = quantize_e3_np(vector_matrix(part.column("embedding"), np.float64))
+                yield emit(part, M, int_matmul_exact_np(M, C))
+
+    return df.select("vec_id", "embedding").mapInArrow(run, schema)
+
+
+def _argmax_emit(cids, C):
+    """(vec_id, centroid_id) of the largest dot; ``cids`` ascending, so
+    ties go to the lowest id."""
+    def emit(b, M, D):
+        return pa.record_batch({
+            "vec_id": b.column("vec_id").cast(pa.int64()),
+            "centroid_id": pa.array(cids[np.argmax(D, axis=1)]),
+        })
+    return emit
+
+
+def _argmin_emit(cids, C):
+    """(vec_id, centroid_id) of the least squared distance
+    ``|m|^2 + |c|^2 - 2 m.c`` (exact int64), ties to the lowest id."""
+    nc = (C * C).sum(axis=1)
+
+    def emit(b, M, D):
+        d2 = (M * M).sum(axis=1)[:, None] + nc - 2 * D
+        return pa.record_batch({
+            "vec_id": b.column("vec_id").cast(pa.int64()),
+            "centroid_id": pa.array(cids[np.argmin(d2, axis=1)]),
+        })
+    return emit
 
 
 def _plane_coeff(i: int, d: int) -> int:
@@ -290,21 +377,12 @@ def _ivf_bucket_topk_np(
     ``(dot^2 * 1e6) div nb = q*1e6 + (r*1e6) div nb``, and by
     Cauchy-Schwarz ``q <= na``, so every term stays far below 2^63.
     """
-    import numpy as np
-
     spark = df.sparkSession
-    crows = sorted(
-        df.filter(F.col("vec_id") < n_centroids)
-        .select("vec_id", "embedding")
-        .collect(),
-        key=lambda r: r.vec_id,
+    cents = _driver_matrix(
+        df.filter(F.col("vec_id") < n_centroids),
+        "centroid set (seed: the vec_ids below n_centroids)",
     )
-    cids = np.array([r.vec_id for r in crows], dtype=np.int64)
-    cm = quantize_e3_np(
-        np.array([r.embedding for r in crows], dtype=np.float64)
-    )
-    bc = spark.sparkContext.broadcast((cids, cm))
-    npb = min(nprobe, len(crows)) or 1
+    npb = min(nprobe, len(cents[0])) or 1
 
     # Salted scoring groups: a tiny codebook (the degenerate-by-design
     # first-n seeding) funnels the whole corpus into a handful of
@@ -323,27 +401,12 @@ def _ivf_bucket_topk_np(
     par = spark.sparkContext.defaultParallelism
     n_salts = max(1, min(16, par // max(n_centroids, 1)))
 
-    def assign(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        from osmgraft.similarity import int_matmul_exact_np as mm
-        from osmgraft.similarity import quantize_e3_np as qz
-        from osmgraft.similarity import vector_matrix as vm
-
-        cids_, cm_ = bc.value
-        for b in batches:
-            if b.num_rows == 0:
-                continue
+    def assign_emit(cids, C):
+        def emit(b, M, D):
             vids = b.column("vec_id").to_numpy(zero_copy_only=False)
-            emb = b.column("embedding")
-            if isinstance(emb, pa.ChunkedArray):
-                emb = emb.combine_chunks()
             # normalize the passthrough to the declared array<double>
             # (the source column may be array<float>)
-            emb = emb.cast(pa.list_(pa.float64()))
-            M = qz(vm(emb, np.float64))
-            D = mm(M, cm_)
+            emb = b.column("embedding").cast(pa.list_(pa.float64()))
             # (dot desc, cid asc): columns are cid-ascending, stable sort
             ordc = np.argsort(-D, axis=1, kind="stable")[:, :npb]
             n = len(vids)
@@ -355,7 +418,7 @@ def _ivf_bucket_topk_np(
             # the index row of the vector's own salt group
             take = np.repeat(np.arange(n), npb)
             rn = np.tile(np.arange(1, npb + 1), n)
-            cen = cids_[ordc.ravel()]
+            cen = cids[ordc.ravel()]
             salt = np.repeat(sv, npb)
             is_probe = np.ones(n * npb, dtype=bool)
             is_index = rn == 1
@@ -367,13 +430,13 @@ def _ivf_bucket_topk_np(
                 take = np.concatenate([take, take2])
                 rn = np.concatenate(
                     [rn, np.ones(len(take2), dtype=rn.dtype)])
-                cen = np.concatenate([cen, cids_[ordc[take2, 0]]])
+                cen = np.concatenate([cen, cids[ordc[take2, 0]]])
                 salt = np.concatenate([salt, all_salt[rep_mask]])
                 is_probe = np.concatenate(
                     [is_probe, np.zeros(len(take2), dtype=bool)])
                 is_index = np.concatenate(
                     [is_index, np.ones(len(take2), dtype=bool)])
-            yield pa.record_batch({
+            return pa.record_batch({
                 "vec_id": pa.array(vids[take]),
                 "embedding": emb.take(pa.array(take)),
                 "centroid_id": pa.array(cen),
@@ -381,9 +444,10 @@ def _ivf_bucket_topk_np(
                 "is_probe": pa.array(is_probe),
                 "is_index": pa.array(is_index),
             })
+        return emit
 
-    rows = df.select("vec_id", "embedding").mapInArrow(
-        assign,
+    rows = _driver_scan(
+        df, cents, assign_emit,
         "vec_id long, embedding array<double>, centroid_id long, "
         "salt int, is_probe boolean, is_index boolean",
     )
@@ -504,68 +568,6 @@ def ivf_topk(df: DataFrame, k: int = 5, n_centroids: int = 8) -> DataFrame:
     return _ivf_bucket_topk_np(df, k, n_centroids, nprobe=1, cosine=False)
 
 
-def _nearest_centroid(
-    vecs: DataFrame, cents: DataFrame, out_vec: str | None = None
-) -> DataFrame:
-    """Assign each (vec_id, qvec) to the centroid (cid, cvec) with the
-    highest quantized inner product, ties -> lowest cid.  ``out_vec``
-    optionally carries qvec through under that name.
-
-    One Arrow pass vs the driver-collected center set (late r6, guide
-    §4.2, same move as :func:`_centroid_scan_np`): the former shape was
-    a broadcast crossJoin whose every (vector, centroid) row paid an
-    interpreted 64-step ``zip_with`` dot fold, followed by a per-vec_id
-    window top-1 (a full exchange+sort of corpus x n_centroids rows).
-    ``cents`` was already broadcast-sized by contract, so collecting it
-    is the same bounded driver residency; dots are exact via
-    :func:`int_matmul_exact_np`, and centers scanned in ascending-cid
-    column order make ``argmax``'s first-maximum the lowest cid —
-    identical tie-breaks.  No shuffle at all in the assignment."""
-    import numpy as np
-
-    spark = vecs.sparkSession
-    rows = sorted(cents.collect(), key=lambda r: r["cid"])
-    if not rows:
-        # checked here on the driver: an empty center matrix otherwise
-        # fails inside numpy on the executors (argmax of a 0-wide block)
-        raise ValueError(
-            "empty centroid set: no centers to assign vectors to "
-            "(seed='first' needs vec_ids below n_centroids)"
-        )
-    cids = np.array([r["cid"] for r in rows], dtype=np.int64)
-    C = np.array([list(r["cvec"]) for r in rows], dtype=np.int64)
-    bc = spark.sparkContext.broadcast((cids, C))
-
-    def run(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        from osmgraft.similarity import int_matmul_exact_np as mm
-        from osmgraft.similarity import vector_matrix as vm
-
-        cids_, C_ = bc.value
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            vids = b.column("vec_id").to_numpy(zero_copy_only=False)
-            qv = b.column("qvec")
-            if isinstance(qv, pa.ChunkedArray):
-                qv = qv.combine_chunks()
-            best = np.argmax(mm(vm(qv, np.int64), C_), axis=1)
-            out = {
-                "vec_id": pa.array(vids.astype(np.int64)),
-                "centroid_id": pa.array(cids_[best]),
-            }
-            if out_vec:
-                out[out_vec] = qv
-            yield pa.record_batch(out)
-
-    schema = "vec_id long, centroid_id long" + (
-        f", {out_vec} array<bigint>" if out_vec else ""
-    )
-    return vecs.select("vec_id", "qvec").mapInArrow(run, schema)
-
-
 def ivf_train_assign(
     df: DataFrame, n_centroids: int = 8, iters: int = 1, seed: str = "first"
 ) -> DataFrame:
@@ -581,105 +583,134 @@ def ivf_train_assign(
     ``floor(sum(component) / count)`` per centroid — exact in both
     engines (sums stay under 2^53, floor-of-exact-double division);
     a centroid that attracts no vectors keeps its previous position.
-    Each iteration is one broadcast-quantizer pass + one
-    (centroid, dim) groupBy — the 100 TB shape: the train shuffle is
-    ``n_centroids * dim`` rows, independent of corpus size.
+
+    The centers live on the driver between rounds as a numpy
+    ``(cids, C)`` pair.  Each iteration is one :func:`_driver_scan`
+    that emits per-batch, per-centroid component sums, and one
+    ``(centroid_id, d)`` groupBy of ``n_centroids * dim`` rows collected
+    to the driver — the train shuffle is independent of corpus size,
+    and no round re-runs an earlier one.
     Output: (vec_id, centroid_id)."""
-    q = quantized(df).select("vec_id", "qvec")
     if seed == "kmeans||":
-        cents = kmeans_parallel_seed(df, n_centroids)
+        cents = _kmeans_parallel_centers(df, n_centroids)
     elif seed == "first":
-        cents = q.filter(F.col("vec_id") < n_centroids).select(
-            F.col("vec_id").alias("cid"), F.col("qvec").alias("cvec")
+        cents = _driver_matrix(
+            df.filter(F.col("vec_id") < n_centroids),
+            "centroid set (seed='first' takes the vec_ids below n_centroids)",
         )
     else:
         raise ValueError(f"unknown seed strategy {seed!r}")
+
+    def sums_emit(cids, C):
+        def emit(b, M, D):
+            best = np.argmax(D, axis=1)
+            n = np.bincount(best, minlength=len(cids))
+            S = np.zeros(C.shape, dtype=np.int64)
+            np.add.at(S, best, M)
+            hit, dim = np.flatnonzero(n), C.shape[1]
+            return pa.record_batch({
+                "centroid_id": pa.array(np.repeat(cids[hit], dim)),
+                "d": pa.array(np.tile(np.arange(dim), len(hit))),
+                "s": pa.array(S[hit].ravel()),
+                "n": pa.array(np.repeat(n[hit], dim)),
+            })
+        return emit
+
     for _ in range(iters):
-        assigned = _nearest_centroid(q, cents, out_vec="qv")
-        comp = assigned.select(
-            "centroid_id", F.posexplode("qv").alias("d", "x")
+        cids, C = cents
+        t = (
+            _driver_scan(df, cents, sums_emit,
+                         "centroid_id long, d long, s long, n long")
+            .groupBy("centroid_id", "d")
+            .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
+            .toArrow()
         )
-        means = (
-            comp.groupBy("centroid_id", "d")
-            .agg(
-                F.floor(
-                    F.sum("x").cast("double") / F.count("*")
-                ).cast("bigint").alias("m")
-            )
-            .groupBy("centroid_id")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("d", "m"))),
-                    lambda s: s["m"],
-                ).alias("new_cvec")
-            )
-        )
-        cents = (
-            cents.join(
-                means.withColumnRenamed("centroid_id", "cid"), "cid", "left"
-            )
-            .select(
-                "cid", F.coalesce("new_cvec", "cvec").alias("cvec")
-            )
-        )
-    return _nearest_centroid(q, cents)
+        C = C.copy()
+        C[np.searchsorted(cids, t.column("centroid_id").to_numpy()),
+          t.column("d").to_numpy()] = np.floor(
+            t.column("s").to_numpy().astype(np.float64)
+            / t.column("n").to_numpy()
+        ).astype(np.int64)
+        cents = (cids, C)
+    return _driver_scan(df, cents, _argmax_emit,
+                        "vec_id long, centroid_id long")
 
 
-def _centroid_scan_np(df: DataFrame, cents_rows, want: str) -> DataFrame:
-    """One vectorized Arrow pass over the corpus vs a driver-resident
-    center set (r6, guide §4.2): the former shape was a broadcast
-    crossJoin whose every (vector, centroid) row paid an interpreted
-    64-step ``zip_with`` distance fold.  Distances are exact int64 via
-    ``d2 = |q|^2 + |c|^2 - 2*(q . c)`` (every term < 2^53 for
-    e3-quantized vectors; the dot runs through
-    :func:`int_matmul_exact_np`), identical to the fold.
+def _kmeans_parallel_centers(
+    df: DataFrame, n_centroids: int, l: int | None = None, rounds: int = 2
+):
+    """The :func:`kmeans_parallel_seed` codebook as a driver ``(cids, C)``
+    pair, cids = 0..n_centroids-1 in seat order."""
+    if l is None:
+        l = 2 * n_centroids
 
-    ``want='mind2'`` -> (vec_id, d2) with d2 = min over centers;
-    ``want='argmin'`` -> (vec_id, cid) of the nearest center, ties ->
-    lowest cid (centers are scanned in ascending-cid column order and
-    argmin takes the first minimum).
-    """
-    import numpy as np
+    def mind2_emit(cids, C):
+        nc = (C * C).sum(axis=1)
 
-    spark = df.sparkSession
-    rows = sorted(cents_rows, key=lambda cv: cv[0])
-    cids = np.array([c for c, _ in rows], dtype=np.int64)
-    C = np.array([v for _, v in rows], dtype=np.int64)
-    bc = spark.sparkContext.broadcast((cids, C))
+        def emit(b, M, D):
+            d2 = (M * M).sum(axis=1)[:, None] + nc - 2 * D
+            return pa.record_batch({
+                "vec_id": b.column("vec_id").cast(pa.int64()),
+                "d2": pa.array(d2.min(axis=1)),
+                "embedding": b.column("embedding").cast(pa.list_(pa.float64())),
+            })
+        return emit
 
-    def run(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        from osmgraft.similarity import int_matmul_exact_np as mm
-        from osmgraft.similarity import quantize_e3_np as qz
-        from osmgraft.similarity import vector_matrix as vm
-
-        cids_, C_ = bc.value
-        ncb = (C_ * C_).sum(axis=1)
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            vids = b.column("vec_id").to_numpy(zero_copy_only=False)
-            M = qz(vm(b.column("embedding"), np.float64))
-            dot = mm(M, C_)
-            naq = (M * M).sum(axis=1)
-            d2 = naq[:, None] + ncb[None, :] - 2 * dot
-            if want == "mind2":
-                yield pa.record_batch({
-                    "vec_id": pa.array(vids.astype(np.int64)),
-                    "d2": pa.array(d2.min(axis=1)),
-                })
-            else:
-                yield pa.record_batch({
-                    "vec_id": pa.array(vids.astype(np.int64)),
-                    "cid": pa.array(cids_[np.argmin(d2, axis=1)]),
-                })
-
-    schema = (
-        "vec_id long, d2 long" if want == "mind2" else "vec_id long, cid long"
+    cids, C = _driver_matrix(
+        df.orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id").limit(1),
+        "corpus",
     )
-    return df.select("vec_id", "embedding").mapInArrow(run, schema)
+    for _ in range(rounds):
+        # d2 > 0 keeps current centers (and exact duplicates of them)
+        # from re-entering, so candidate cids stay unique; the top-l
+        # rows carry their vectors, so no second pass fetches them
+        far_ids, far = _driver_matrix(
+            _driver_scan(df, (cids, C), mind2_emit,
+                         "vec_id long, d2 long, embedding array<double>")
+            .filter(F.col("d2") > 0)
+            .orderBy(F.col("d2").desc(), F.col("vec_id").asc())
+            .limit(l),
+            "candidate set",
+            empty_ok=True,
+        )
+        if len(far_ids):
+            cids = np.concatenate([cids, far_ids])
+            order = np.argsort(cids)
+            cids, C = cids[order], np.concatenate([C, far])[order]
+    t = (
+        _driver_scan(df, (cids, C), _argmin_emit,
+                     "vec_id long, centroid_id long")
+        .groupBy("centroid_id")
+        .count()
+        .toArrow()
+    )
+    weights = dict(zip(t.column("centroid_id").to_pylist(),
+                       t.column("count").to_pylist()))
+    # Final selection over <= 1 + l*rounds candidates: GREEDY WEIGHTED
+    # FARTHEST-POINT (the deterministic stand-in for the paper's
+    # weighted k-means++ recluster), plain python over the driver-
+    # resident candidate set.  Seat 1 = highest attraction weight
+    # (ties -> lowest vec_id); each further seat maximizes
+    # weight * min-squared-distance-to-seated (ties -> lowest vec_id),
+    # so a single dense cluster can claim at most one seat until every
+    # other weighted region is represented — closing the r4-advice
+    # hot-bucket caveat of pure weight ranking.  The product is taken
+    # in Python ints, so weight * d2 cannot overflow at corpus scale
+    # (the oracle uses HUGEINT for the same product).
+    def _d2(i, j):
+        return int(((C[i] - C[j]) ** 2).sum())
+
+    w = [weights.get(int(c), 0) for c in cids]
+    remaining = sorted(range(len(cids)), key=lambda i: (-w[i], cids[i]))
+    final = [remaining.pop(0)]
+    while len(final) < n_centroids and remaining:
+        best = min(
+            remaining,
+            key=lambda i: (-w[i] * min(_d2(i, j) for j in final), cids[i]),
+        )
+        remaining.remove(best)
+        final.append(best)
+    return np.arange(len(final), dtype=np.int64), C[final]
 
 
 def kmeans_parallel_seed(
@@ -711,94 +742,21 @@ def kmeans_parallel_seed(
       ``md5(vec_id)`` — a deterministic uniform draw that is NOT the
       lowest id (so sorted corpora get no special treatment).
 
-    Scale shape: the center set never exceeds ``1 + l*rounds`` rows, so
-    every distance pass is a broadcast nearest-neighbor scan; top-l is
-    TakeOrderedAndProject (no global sort shuffle); attraction weights
+    Scale shape: the center set never exceeds ``1 + l*rounds`` rows and
+    lives on the driver between rounds as a numpy ``(cids, C)`` pair,
+    so each round is one :func:`_driver_scan` whose top-``l`` rows
+    (TakeOrderedAndProject, no global sort shuffle) carry their vectors
+    back, and no round re-derives an earlier one; attraction weights
     are one partial-agg groupBy.  Total: ``rounds + 2`` passes over the
     corpus, each embarrassingly parallel.
 
     Output: (cid, cvec), cid = 0..n_centroids-1 in weight order.
     """
-    if l is None:
-        l = 2 * n_centroids
-    spark = df.sparkSession
-    q = quantized(df).select("vec_id", "qvec")
-    _schema = "cid LONG, cvec ARRAY<BIGINT>"
-
-    # The center set is MATERIALIZED DRIVER-SIDE between rounds (it
-    # never exceeds 1 + l*rounds rows of dim bigints — k-means
-    # codebooks are driver-resident in every production ANN system).
-    # Kept fully declarative, every broadcast of the center set would
-    # re-derive all prior rounds' corpus passes inside its own plan;
-    # with literal centers each corpus pass executes exactly once per
-    # round — the 100 TB shape.  Values are identical either way
-    # (same arithmetic, same tie rules; oracle-checked).
-    def cents_df(rows):
-        return spark.createDataFrame(
-            [(int(c), [int(x) for x in v]) for c, v in rows], schema=_schema
-        )
-
-    first = (
-        q.withColumn("hk", F.md5(F.col("vec_id").cast("string")))
-        .orderBy("hk", "vec_id")
-        .limit(1)
-        .select("vec_id", "qvec")
-        .collect()
-    )
-    cents_rows = [(r.vec_id, r.qvec) for r in first]
-    for _ in range(rounds):
-        # distance pass = ONE vectorized Arrow scan (r6; the former
-        # broadcast crossJoin paid an interpreted fold per
-        # (vector, center) row — see _centroid_scan_np).  d2 > 0 keeps
-        # current centers (and exact duplicates of them) from
-        # re-entering, so candidate cids stay unique.
-        cand_ids = [
-            r.vec_id
-            for r in _centroid_scan_np(df, cents_rows, "mind2")
-            .filter(F.col("d2") > 0)
-            .orderBy(F.col("d2").desc(), F.col("vec_id").asc())
-            .limit(l)
-            .collect()
-        ]
-        cand_vecs = {
-            r.vec_id: r.qvec
-            for r in q.filter(F.col("vec_id").isin(cand_ids)).collect()
-        }
-        cents_rows += [(i, cand_vecs[i]) for i in cand_ids]
-    weights = {
-        r.cid: r.weight
-        for r in _centroid_scan_np(df, cents_rows, "argmin")
-        .groupBy("cid")
-        .agg(F.count("*").alias("weight"))
-        .collect()
-    }
-    # Final selection over <= 1 + l*rounds candidates: GREEDY WEIGHTED
-    # FARTHEST-POINT (the deterministic stand-in for the paper's
-    # weighted k-means++ recluster), plain python over the driver-
-    # resident candidate set.  Seat 1 = highest attraction weight
-    # (ties -> lowest vec_id); each further seat maximizes
-    # weight * min-squared-distance-to-seated (ties -> lowest vec_id),
-    # so a single dense cluster can claim at most one seat until every
-    # other weighted region is represented — closing the r4-advice
-    # hot-bucket caveat of pure weight ranking.  Python ints are
-    # arbitrary precision, so weight * d2 cannot overflow at corpus
-    # scale (the oracle uses HUGEINT for the same product).
-    def _d2(a, b):
-        return sum((x - y) * (x - y) for x, y in zip(a, b))
-
-    remaining = sorted(
-        cents_rows, key=lambda cv: (-weights.get(cv[0], 0), cv[0])
-    )
-    final = [remaining.pop(0)]
-    while len(final) < n_centroids and remaining:
-        best_i, best_key = 0, None
-        for i, (cid, v) in enumerate(remaining):
-            score = weights.get(cid, 0) * min(_d2(v, sv) for _, sv in final)
-            key = (-score, cid)
-            if best_key is None or key < best_key:
-                best_i, best_key = i, key
-        final.append(remaining.pop(best_i))
-    return cents_df([(i, v) for i, (_, v) in enumerate(final)])
+    cids, C = _kmeans_parallel_centers(df, n_centroids, l, rounds)
+    return df.sparkSession.createDataFrame(pa.table({
+        "cid": pa.array(cids),
+        "cvec": pa.array(C.tolist(), pa.list_(pa.int64())),
+    }))
 
 
 def kmeans_parallel_assign(
@@ -807,11 +765,8 @@ def kmeans_parallel_assign(
     """Nearest-centroid assignment under the k-means|| codebook by
     exact quantized squared euclidean distance (ties -> lowest cid) —
     one broadcast pass.  Output: (vec_id, centroid_id)."""
-    cents = kmeans_parallel_seed(df, n_centroids, l, rounds)
-    cents_rows = [(r.cid, r.cvec) for r in cents.collect()]
-    return _centroid_scan_np(df, cents_rows, "argmin").select(
-        "vec_id", F.col("cid").alias("centroid_id")
-    )
+    cents = _kmeans_parallel_centers(df, n_centroids, l, rounds)
+    return _driver_scan(df, cents, _argmin_emit, "vec_id long, centroid_id long")
 
 
 def ivf_topk_multiprobe(
@@ -951,10 +906,11 @@ def embedding_near_dup_pairs_exact(
     r6 shape (guide §4.2): the former broadcast cross join evaluated an
     interpreted 64-step dot fold plus DECIMAL(38,0) compares per pair —
     at 20k vectors (200M pairs) that ran for HOURS.  Now one
-    ``mapInArrow`` pass streams the corpus against the collected
-    quantized matrix (O(n) driver/executor residency — acceptable for a
-    declared small-scale baseline, exactly like the former broadcast
-    side) and evaluates the identical integer threshold test
+    :func:`_driver_scan` streams the corpus against the whole quantized
+    corpus read to the driver (O(n) driver/executor residency —
+    acceptable for a declared small-scale baseline; a corpus above
+    ``_DRIVER_MAX_VECTORS`` raises :class:`VectorSetSizeError`) and
+    evaluates the identical integer threshold test
     ``dot > 0 AND dot^2 * 10^4 >= t2num * na * nb`` without any int128
     intermediate: with ``q, rem = divmod(na * nb, 10^4)`` and
     ``L = dot^2 - t2num * q`` (|L| < 2^63 since dot^2 <= na*nb by
@@ -963,59 +919,36 @@ def embedding_near_dup_pairs_exact(
     right side (< 10^8) cannot win, so the multiply only happens where
     it provably fits.  Measured: hours -> ~8 s at sf1.0; identical
     pairs (DuckDB parity)."""
-    import numpy as np
-
-    spark = df.sparkSession
     t2num = int(round(threshold * 100)) ** 2
-    rows = df.select("vec_id", "embedding").collect()
-    rows.sort(key=lambda r: r.vec_id)
-    pids = np.array([r.vec_id for r in rows], dtype=np.int64)
-    P = quantize_e3_np(np.array([r.embedding for r in rows],
-                                dtype=np.float64))
-    n2p = (P * P).sum(axis=1)
-    bc = spark.sparkContext.broadcast((pids, P, n2p))
 
-    def pairs(batches):
-        import numpy as np
-        import pyarrow as pa
+    def pair_emit(pids, P):
+        n2p = (P * P).sum(axis=1)
 
-        from osmgraft.similarity import int_matmul_exact_np as mm
-        from osmgraft.similarity import quantize_e3_np as qz
-        from osmgraft.similarity import vector_matrix as vm
-
-        pids_, P_, n2p_ = bc.value
-        for b in batches:
-            if b.num_rows == 0:
-                continue
+        def emit(b, M, D):
             vids = b.column("vec_id").to_numpy(zero_copy_only=False)
-            M = qz(vm(b.column("embedding"), np.float64))
             n2q = (M * M).sum(axis=1)
             out_a, out_b = [], []
-            chunk = max(1, 4_000_000 // max(len(P_), 1))
-            for s in range(0, len(M), chunk):
-                D = mm(M[s:s + chunk], P_)
-                for i in range(D.shape[0]):
-                    g = s + i
-                    d = D[i]
-                    cand = (pids_ > vids[g]) & (d > 0)
-                    if not cand.any():
-                        continue
-                    dv = d[cand]
-                    q_, rem = np.divmod(n2q[g] * n2p_[cand], 10_000)
-                    L = dv * dv - t2num * q_
-                    rhs = t2num * rem
-                    ok = (L >= 10_000_000_000) | (
-                        (L >= 0) & (L * 10_000 >= rhs)
-                    )
-                    if ok.any():
-                        hit = pids_[cand][ok]
-                        out_a.extend([int(vids[g])] * len(hit))
-                        out_b.extend(hit.tolist())
-            yield pa.record_batch({
+            for g in range(len(D)):
+                d = D[g]
+                cand = (pids > vids[g]) & (d > 0)
+                if not cand.any():
+                    continue
+                dv = d[cand]
+                q_, rem = np.divmod(n2q[g] * n2p[cand], 10_000)
+                L = dv * dv - t2num * q_
+                rhs = t2num * rem
+                ok = (L >= 10_000_000_000) | ((L >= 0) & (L * 10_000 >= rhs))
+                if ok.any():
+                    hit = pids[cand][ok]
+                    out_a.extend([int(vids[g])] * len(hit))
+                    out_b.extend(hit.tolist())
+            return pa.record_batch({
                 "vec_a": pa.array(out_a, type=pa.int64()),
                 "vec_b": pa.array(out_b, type=pa.int64()),
             })
+        return emit
 
-    return df.select("vec_id", "embedding").mapInArrow(
-        pairs, "vec_a long, vec_b long"
+    return _driver_scan(
+        df, _driver_matrix(df, "corpus", empty_ok=True), pair_emit,
+        "vec_a long, vec_b long",
     )

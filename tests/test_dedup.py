@@ -1,7 +1,7 @@
 """Dedup-family unit tests (shingles, simhash banding, LSH shapes)."""
 
 import pytest
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 from osmgraft import dedup
 
@@ -306,16 +306,19 @@ def test_small_pair_set_labels_on_driver(spark):
 
 
 def test_df_cap_strategies_equivalent(spark):
-    # the broadcast-anti-join default and the window fallback implement
-    # the SAME cap semantics: identical (id, shingle) row sets
+    # the broadcast anti-join cap keeps the same (id, shingle) rows as
+    # a count window over shingle, kept here as the reference
     rows = [(i, f"x y z uniq{i} u{i} v{i}") for i in range(50)]
     rows += [(100 + i, f"a b c tail{i} t{i} w{i}") for i in range(3)]
     d = _docs(spark, rows)
-    aj = dedup.shingles(d, n=3, max_df=4, max_df_strategy="anti_join")
-    wd = dedup.shingles(d, n=3, max_df=4, max_df_strategy="window")
+    aj = dedup.shingles(d, n=3, max_df=4)
+    wd = (
+        dedup.shingles(d, n=3)
+        .withColumn("_df", F.count("*").over(Window.partitionBy("shingle")))
+        .filter(F.col("_df") <= 4)
+        .drop("_df")
+    )
     assert sorted(map(tuple, aj.collect())) == sorted(map(tuple, wd.collect()))
-    with pytest.raises(ValueError):
-        dedup.shingles(d, n=3, max_df=4, max_df_strategy="nope")
 
 
 def test_df_cap_anti_join_drops_map_side(spark):
@@ -334,13 +337,6 @@ def test_df_cap_anti_join_drops_map_side(spark):
     # exactly one hash-partitioned exchange: the df-count groupBy
     # (HashAggregate partial -> Exchange -> HashAggregate final)
     assert plan.count("Exchange hashpartitioning") == 1
-    # the window fallback instead shuffles the full stream into a
-    # window sort (no partial aggregation)
-    wplan = (
-        dedup.shingles(d, n=3, max_df=4, max_df_strategy="window")
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "Window" in wplan
 
 
 def test_repeated_dedup_calls_keep_checkpoint_count_bounded(spark):

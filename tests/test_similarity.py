@@ -343,28 +343,114 @@ def test_quantize_e3_np_matches_jvm_round(spark, emb):
         assert got == jvm_edge[i], (v, got, jvm_edge[i])
 
 
-def _null_vector_corpus(spark, n=24, dim=8):
+def _null_vector_corpus(spark, n=24, dim=8, null_id=13):
     rows = [
-        (i, None if i == 13 else [float((i * 7 + d * 3) % 11 - 5) for d in range(dim)])
+        (i, None if i == null_id else [float((i * 7 + d * 3) % 11 - 5) for d in range(dim)])
         for i in range(n)
     ]
     return spark.createDataFrame(rows, schema="vec_id LONG, embedding ARRAY<FLOAT>")
 
 
 def test_null_embedding_is_a_named_error(spark):
-    """A NULL embedding reaching the Arrow kernels raises
-    ``VectorShapeError`` naming the NULL, not a numpy reshape failure
-    (the NULL sits above the first-n seed ids, so it reaches the
-    executors' assignment pass in both operators)."""
+    """A NULL embedding raises ``VectorShapeError`` naming the NULL, not a
+    numpy failure.  Above the first-n seed ids it reaches the executors'
+    assignment pass in both operators; among the seeds (vec_id 1) the
+    driver's read of the center set raises it."""
     from osmgraft import similarity
 
-    e = _null_vector_corpus(spark)
-    for run in (
-        lambda: similarity.ivf_train_assign(e, n_centroids=4, iters=1),
-        lambda: similarity.cosine_topk_ivf(e, k=3, n_centroids=4),
-    ):
+    def runs(e):
+        return (
+            lambda: similarity.ivf_train_assign(e, n_centroids=4, iters=1),
+            lambda: similarity.cosine_topk_ivf(e, k=3, n_centroids=4),
+        )
+
+    for run in runs(_null_vector_corpus(spark)):
         with pytest.raises(Exception, match="VectorShapeError: NULL vector"):
             run().collect()
+    for run in runs(_null_vector_corpus(spark, null_id=1)):
+        with pytest.raises(similarity.VectorShapeError, match="NULL vector"):
+            run().collect()
+
+
+def test_ann_topk_null_embedding_is_a_named_error(spark, sf_dir, tmp_path):
+    """ann_topk's corpus pass reads vectors through ``vector_matrix``: a
+    NULL embedding (here vec_id 17, outside the query set) raises
+    ``VectorShapeError``, not a numpy reshape error or misaligned rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from osmgraft import queries
+
+    t = pq.read_table(f"{sf_dir}/embeddings.parquet")
+    vids = t.column("vec_id").to_pylist()
+    emb = pa.array(
+        [None if v == 17 else e for v, e in zip(vids, t.column("embedding").to_pylist())],
+        t.schema.field("embedding").type,
+    )
+    t = t.set_column(t.schema.get_field_index("embedding"), "embedding", emb)
+    pq.write_table(t, tmp_path / "embeddings.parquet")
+    with pytest.raises(Exception, match="VectorShapeError: NULL vector"):
+        queries.ann_topk(spark, str(tmp_path)).collect()
+
+
+def test_exact_near_dup_refuses_a_corpus_above_the_driver_bound(
+    spark, emb, monkeypatch
+):
+    """embedding_near_dup_pairs_exact reads the whole corpus to the
+    driver; above ``_DRIVER_MAX_VECTORS`` that read is a named error.
+    The real bound leaves room for the sf1.0 corpus (20k vectors)."""
+    from osmgraft import similarity
+
+    assert similarity._DRIVER_MAX_VECTORS >= 20_000
+    monkeypatch.setattr(similarity, "_DRIVER_MAX_VECTORS", emb.count() - 1)
+    with pytest.raises(similarity.VectorSetSizeError, match="more than"):
+        similarity.embedding_near_dup_pairs_exact(emb, threshold=0.5)
+    monkeypatch.setattr(similarity, "_DRIVER_MAX_VECTORS", emb.count())
+    similarity.embedding_near_dup_pairs_exact(emb, threshold=0.5).count()
+
+
+def _lloyd_reference(rows, n_centroids, iters):
+    """First-n seeded Lloyd over e3-quantized vectors: argmax-dot
+    assignment (ties -> lowest cid), ``floor(sum / count)`` update, an
+    empty centroid keeps its place.  rows: {vec_id: embedding}."""
+    from osmgraft.similarity import quantize_e3_np
+
+    ids = np.array(sorted(rows), dtype=np.int64)
+    M = quantize_e3_np(np.array([rows[i] for i in ids], dtype=np.float64))
+    seed = ids < n_centroids
+    cids, C = ids[seed], M[seed].copy()
+    for _ in range(iters):
+        best = np.argmax(M @ C.T, axis=1)
+        for j in range(len(cids)):
+            if (best == j).any():
+                C[j] = np.floor(M[best == j].sum(axis=0) / (best == j).sum())
+    return dict(zip(ids.tolist(), cids[np.argmax(M @ C.T, axis=1)].tolist()))
+
+
+def test_ivf_train_jobs_linear_in_iters(spark, sf_dir):
+    """Centers stay on the driver between Lloyd rounds, so a round never
+    re-runs an earlier one: the job count grows by the same amount per
+    iteration.  The assignment equals a numpy Lloyd reference."""
+    from osmgraft.similarity import ivf_train_assign
+
+    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    sc = spark.sparkContext
+    jobs, got = [], {}
+    try:
+        for iters in (1, 2, 3, 4):
+            group = f"ivf-train-probe-{iters}"
+            sc.setJobGroup(group, "ivf_train_assign job-count probe")
+            got[iters] = {
+                r.vec_id: r.centroid_id
+                for r in ivf_train_assign(e, n_centroids=8, iters=iters).collect()
+            }
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs[1] - jobs[0] == jobs[3] - jobs[2], jobs
+    rows = {r.vec_id: r.embedding for r in e.collect()}
+    for iters in (1, 2):
+        assert got[iters] == _lloyd_reference(rows, 8, iters), iters
 
 
 def test_vector_matrix_rejects_ragged_rows():

@@ -1,5 +1,6 @@
 """End-to-end spatial join + kNN vs pure-Python oracles (golden fixtures)."""
 
+import re
 from collections import Counter
 
 import numpy as np
@@ -247,3 +248,37 @@ def test_knn_precomputed_r0_identical(spark, entities):
         }
         assert got == base, f"r0={forced}"
     assert base
+
+
+def test_knn_driver_frames_are_local_table_scans(spark):
+    """knn's driver-built frames (ring offsets, the brute route's query
+    set, the ring loop's empty result and carry frames) come from Arrow
+    tables: they plan as LocalTableScan, never as the ``Scan
+    ExistingRDD`` of a Python-list frame, whose first action starts the
+    Python worker pool."""
+    from osmgraft.join import _annulus_offsets_df
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    offs = _annulus_offsets_df(spark, 0, 2)
+    assert "LocalTableScan" in plan(offs)
+    assert sorted(map(tuple, offs.collect())) == sorted(
+        (dx, dy) for dx in range(-2, 3) for dy in range(-2, 3)
+        if 0 < max(abs(dx), abs(dy)) <= 2
+    )
+    pts = spark.range(400).select(
+        F.col("id").alias("pid"),
+        (F.col("id") * 7919 % 1000 * 100_000).alias("lon_e7"),
+        (F.col("id") * 104_729 % 1000 * 100_000).alias("lat_e7"),
+    )
+    qs = pts.filter("pid < 20").withColumnRenamed("pid", "qid")
+    brute = knn(spark, qs, pts, k=3)
+    ring = knn(spark, qs, pts, k=3, brute_max_pairs=0)
+    assert "LocalTableScan" in plan(brute)
+    assert "ExistingRDD" not in plan(brute)
+    # the ring loop's own localCheckpoints (they carry the `done` flag)
+    # are its only RDD scans
+    scans = re.findall(r"Scan ExistingRDD\[([^\]]*)\]", plan(ring))
+    assert scans and all("done#" in cols for cols in scans), scans
+    assert sorted(map(tuple, brute.collect())) == sorted(map(tuple, ring.collect()))
