@@ -28,10 +28,13 @@ ride the same pass: the points left-join the cover and every point row
 gains an INSIDE entry per empty boundary.
 
 kNN (north_rule addition; no reference analog — the reference's kd-trees
-``osmc/2DTree.c`` serve viewport lookups): iterative k-ring expansion on
-the same grid with an exact integer distance refine and a
-``row_number() <= k`` top-k; ring radius doubles until the k-th
-neighbor's distance is certified by the ring guarantee.
+``osmc/2DTree.c`` serve viewport lookups) runs in a fixed number of
+passes: one aggregate gives the exact point count per occupied cell of
+a 64 x 64 grid, numpy prefix sums on the driver turn the counts into a
+certified search radius per query cell, and one join of the queries to
+the points of the cells within that radius, with an exact integer
+distance and a ``row_number() <= k`` top-k, gives the rows.  No loop,
+no checkpoint.
 """
 
 from __future__ import annotations
@@ -284,33 +287,31 @@ def _salted_sortmerge(
 
 
 # ---------------------------------------------------------------------------
-# kNN via k-ring expansion + exact integer distance refine (SURVEY.md J9)
+# kNN: exact cell histogram -> certified radius per query cell -> one join
+# (SURVEY.md J9)
 # ---------------------------------------------------------------------------
 
+KNN_LEVEL = 6  # a 64 x 64 grid; one WORLD scale on both axes, so cells are square
+_KNN_SIDE = 1 << KNN_LEVEL
+_KNN_PAIR_BLOCK = 1 << 20  # query-cell x occupied-cell distances per numpy block
 
-def _annulus_offsets_df(spark: SparkSession, r_lo: int, r_hi: int) -> DataFrame:
-    """Chebyshev annulus offsets r_lo < max(|dx|,|dy|) <= r_hi (no wrap:
-    kNN runs in flat e7 space, matching the reference kd-tree's
-    geometry).  Pass r_lo=-1 to include the center cell — the annulus
-    delta means each disk cell is visited exactly once across rounds."""
-    span = np.arange(-r_hi, r_hi + 1, dtype=np.int64)
-    dx, dy = (a.ravel() for a in np.meshgrid(span, span, indexing="ij"))
-    ring = np.maximum(np.abs(dx), np.abs(dy))
-    keep = (r_lo < ring) & (ring <= r_hi)
-    return spark.createDataFrame(pa.table({"dx": dx[keep], "dy": dy[keep]}))
-
-
-# knn's driver-built frames come from Arrow tables, which plan as a
-# LocalTableScan; a frame built from a Python list is an RDD scan whose
-# first action starts the Python worker pool.
+# the brute route's query frame comes from an Arrow table, which plans
+# as a LocalTableScan; a frame built from a Python list is an RDD scan
+# whose first action starts the Python worker pool.
 _KNN_QUERY_SCHEMA = pa.schema(
     [("qid", pa.int64()), ("qx", pa.int64()), ("qy", pa.int64())]
 )
-# the ring loop's running top-k rows (carry); results add the rank
-_KNN_CARRY_SCHEMA = pa.schema(
-    [(c, pa.int64()) for c in ("qid", "qcx", "qcy", "qx", "qy", "pid")]
-    + [("dist2", pa.decimal128(38, 0))]
-)
+
+
+class NullCoordinateError(ValueError):
+    """A kNN query or point row with a NULL ``lon_e7`` or ``lat_e7``."""
+
+
+_NULL_COORD_MSG = "kNN query and point rows need non-NULL lon_e7 and lat_e7"
+
+
+def _null_coord(x, y):
+    return x.isNull() | y.isNull()
 
 
 def _dist2_col():
@@ -322,42 +323,97 @@ def _dist2_col():
     return (dx * dx + dy * dy).cast("decimal(38,0)").alias("dist2")
 
 
+def _top_k(cand: DataFrame, k: int) -> DataFrame:
+    """(qid, pid, px, py, qx, qy) candidate rows -> the k nearest per
+    qid by exact ``dist2``, ties broken by pid."""
+    w = Window.partitionBy("qid").orderBy(F.col("dist2").asc(), F.col("pid").asc())
+    return (
+        cand.select("qid", "pid", _dist2_col())
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("qid", "pid", "rank", "dist2")
+    )
+
+
+def _knn_cell_pairs(
+    occupied: np.ndarray, counts: np.ndarray, qcells: np.ndarray, k: int
+) -> pa.Table:
+    """(qkey, key) rows: each query cell paired with every occupied cell
+    within its certified Chebyshev radius.
+
+    ``occupied`` are the point cells (``cx * 64 + cy``), ``counts`` their
+    points with both coordinates in [-HALF_WORLD, HALF_WORLD], and
+    ``qcells`` the distinct query cells (-1: a query outside that range).
+
+    A grid coordinate v lies in its cell's CLOSED extent [c*w, (c+1)*w]
+    (v + HALF_WORLD, cell width w; +HALF_WORLD clamps into the last cell,
+    on its upper edge).  So with r the smallest Chebyshev radius whose
+    disk holds k counted points, the k-th neighbor of an in-range query
+    is within D = sqrt(2)*(r+1)*w, and a point m cells away on an axis is
+    at least (m-1)*w away: every point within D lies within
+    R = floor(sqrt(2)*(r+1)) + 1 cells.  A point outside the range clamps
+    into an edge cell but is only farther from an in-range query than
+    that cell; it is a candidate, never counted.  A query with fewer
+    than k counted points, or outside the range, pairs with every
+    occupied cell."""
+    n = _KNN_SIDE
+    grid = np.zeros(n * n, np.int64)
+    grid[occupied] = counts
+    prefix = np.zeros((n + 1, n + 1), np.int64)
+    prefix[1:, 1:] = grid.reshape(n, n).cumsum(0).cumsum(1)
+    qx, qy = np.divmod(qcells, n)
+    r = np.arange(n)
+    x0, x1 = (np.clip(qx[:, None] + d, 0, n) for d in (-r, r + 1))
+    y0, y1 = (np.clip(qy[:, None] + d, 0, n) for d in (-r, r + 1))
+    disk = prefix[x1, y1] - prefix[x0, y1] - prefix[x1, y0] + prefix[x0, y0]
+    enough = disk >= k
+    radius = np.where(
+        enough.any(1) & (qcells >= 0),
+        np.floor(np.sqrt(2.0) * (enough.argmax(1) + 1)).astype(np.int64) + 1,
+        2 * n,
+    )
+    ox, oy = np.divmod(occupied, n)
+    step = max(1, _KNN_PAIR_BLOCK // max(occupied.size, 1))
+    qkey, key = [np.empty(0, np.int32)], [np.empty(0, np.int32)]
+    for s in range(0, qcells.size, step):
+        b = slice(s, s + step)
+        cheb = np.maximum(np.abs(qx[b, None] - ox), np.abs(qy[b, None] - oy))
+        i, j = np.nonzero(cheb <= radius[b, None])
+        qkey.append(qcells[b][i].astype(np.int32))
+        key.append(occupied[j].astype(np.int32))
+    return pa.table({"qkey": np.concatenate(qkey), "key": np.concatenate(key)})
+
+
 def knn(
     spark: SparkSession,
     queries: DataFrame,
     points: DataFrame,
     k: int,
-    level: int = 6,
-    max_rounds: int = 8,
-    r0: int | None = None,
     brute_max_pairs: int = 64_000_000,
     brute_max_queries: int = 8192,
 ) -> DataFrame:
     """For each query row (qid, lon_e7, lat_e7) the k nearest point rows
     (pid, lon_e7, lat_e7) by exact squared euclidean distance in e7 units
     (DECIMAL(38,0) — dx^2 overflows int64 at antipodal range), ties broken
-    by pid.  Iteratively widens the candidate ring; a query is finished
-    once its k-th distance is certified by the ring guarantee
-    (any point beyond ring r is at distance > r * cell_extent).
+    by pid.  A NULL coordinate on either side raises
+    :class:`NullCoordinateError`.
 
-    Cost-based small-input branch (r6, guide §1.2 "the distributed
-    algorithm"): when the query set is tiny and the estimated
-    |Q| x |P| fits ``brute_max_pairs``, the ring loop's per-round
-    driver-synchronized jobs (checkpoint + anti-join + count, x N
-    rounds) cost more than simply scoring every pair once — so
-    collect the queries (ONE early-terminating limited pass; the
-    limit bounds driver residency), broadcast them, and stream the
-    points through ONE exact-distance pass with a window top-k (the
-    same computation as the ring path's certified result and the
-    uncertified-remainder fallback below; results are identical by
-    construction — exact kNN is exact either way, same tie-break).
-    |P| is estimated from optimizer plan statistics (no extra pass;
-    a wrong estimate only changes which plan runs, never the rows);
-    at corpus scale the estimate overflows the bound and the ring
-    path (which never materializes all pairs) takes over.
+    One aggregate counts the points per occupied cell of the
+    :data:`KNN_LEVEL` grid (and lists the query cells); the driver turns
+    the counts into a certified search radius per query cell
+    (:func:`_knn_cell_pairs`); one join of queries -> (query cell,
+    occupied cell) pairs -> points, the exact distance and a top-k window
+    give the result.  Distances are exact and every point that can
+    reach a query's top k is a candidate, so the rows equal the brute
+    result by construction.
+
+    Small-input route: when the query set is tiny and the estimated
+    |Q| x |P| fits ``brute_max_pairs``, collect the queries (one limited
+    pass), broadcast them, and stream the points through one
+    exact-distance pass with the same top-k window.  |P| is estimated
+    from optimizer plan statistics (no extra pass; a wrong estimate only
+    changes which plan runs, never the rows).
     """
-    cell_w = cells.WORLD // (1 << level)  # lon cell extent in e7 units
-
     try:
         est_bytes = int(
             points._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
@@ -365,16 +421,14 @@ def knn(
     except Exception:
         est_bytes = None
     # |P| estimate = est_bytes / 8: plan stats carry COMPRESSED
-    # file bytes through the width-scaled projections (r6 review
-    # fix — a 24 B/row divisor could UNDERcount rows on a
-    # dictionary/RLE-compressed source and mis-route a large input
-    # to brute).  8 B/row is at/below the practical compressed
-    # floor for 3-long rows, so the estimate errs high (toward the
-    # ring path); on the in-repo derivation shapes stats report
-    # ~87 B/row, i.e. ~11x overestimation — still far under the
-    # bound for the bench-sized inputs this branch targets.
-    # |Q| >= 1 in the bound below, so when |P| alone exceeds it the
-    # query collect cannot change the route and is skipped.
+    # file bytes through the width-scaled projections, and 8 B/row is
+    # at/below the practical compressed floor for 3-long rows, so the
+    # estimate errs high (toward the histogram path); on the in-repo
+    # derivation shapes stats report ~87 B/row, i.e. ~11x
+    # overestimation — still far under the bound for the bench-sized
+    # inputs this route targets.  |Q| >= 1 in the bound below, so
+    # when |P| alone exceeds it the query collect cannot change the
+    # route and is skipped.
     if est_bytes is not None and est_bytes // 8 + 1 <= brute_max_pairs:
         q_rows = (
             queries.select("qid", "lon_e7", "lat_e7")
@@ -384,6 +438,14 @@ def knn(
         if q_rows.num_rows <= brute_max_queries and (
             max(q_rows.num_rows, 1) * (est_bytes // 8 + 1) <= brute_max_pairs
         ):
+            # a NULL distance would sort first in the top-k window
+            if (
+                q_rows["lon_e7"].null_count or q_rows["lat_e7"].null_count
+                or not points.filter(
+                    _null_coord(F.col("lon_e7"), F.col("lat_e7"))
+                ).isEmpty()
+            ):
+                raise NullCoordinateError(_NULL_COORD_MSG)
             qs = spark.createDataFrame(
                 q_rows.rename_columns(_KNN_QUERY_SCHEMA.names)
                 .cast(_KNN_QUERY_SCHEMA)
@@ -396,157 +458,53 @@ def knn(
             # plans 1-2 partitions, and the per-point work here is heavy
             # (|Q| DECIMAL(38,0) distance evaluations per row), so one
             # narrow exchange buys |cores|-way parallelism.  The spread
-            # decision reuses the plan-stats estimate that routed us
-            # into this branch (late r6): under one 128 MB scan split
-            # the scan plans ~1 partition, so spread; the former
-            # ``ps.rdd.getNumPartitions()`` probe forced a
-            # DataFrame->RDD conversion on the driver (~0.1 s per
-            # call).  Larger inputs skip the exchange and keep the
-            # scan's own parallelism (production behavior unchanged).
+            # decision reuses the plan-stats estimate that chose this
+            # route: under one 128 MB scan split the scan plans ~1
+            # partition, so spread (``rdd.getNumPartitions()`` would
+            # cost a DataFrame->RDD conversion on the driver, ~0.1 s).
+            # Larger inputs keep the scan's own parallelism.
             par = spark.sparkContext.defaultParallelism
             if est_bytes < (128 << 20):
                 ps = ps.repartition(par)
-            w_rank = Window.partitionBy("qid").orderBy(
-                F.col("dist2").asc(), F.col("pid").asc()
-            )
-            return (
-                ps.crossJoin(F.broadcast(qs))
-                .select("qid", "pid", _dist2_col())
-                .withColumn("rank", F.row_number().over(w_rank))
-                .filter(F.col("rank") <= k)
-                .select("qid", "pid", "rank", "dist2")
-            )
+            return _top_k(ps.crossJoin(F.broadcast(qs)), k)
 
+    x, y = F.col("lon_e7"), F.col("lat_e7")
+    # axis_tile_col alone clamps a NULL into the last cell (least and
+    # greatest skip NULLs): the NULL test comes first
+    null = _null_coord(x, y)
+    key = (
+        cells.axis_tile_col(x, KNN_LEVEL) * _KNN_SIDE
+        + cells.axis_tile_col(y, KNN_LEVEL)
+    ).cast("int")
+    h = cells.HALF_WORLD
+    in_range = x.between(-h, h) & y.between(-h, h)
     pt = points.select(
-        F.col("pid"),
-        F.col("lon_e7").alias("px"),
-        F.col("lat_e7").alias("py"),
-        cells.axis_tile_col(F.col("lon_e7"), level).alias("cx"),
-        cells.axis_tile_col(F.col("lat_e7"), level).alias("cy"),
+        "pid", x.alias("px"), y.alias("py"), F.when(~null, key).alias("key"),
+        in_range.cast("int").alias("_in"),
     )
-    # NOT cached: consumed exactly once, by the initial `pending`
-    # localCheckpoint (r6 — the r5 cache added a storage entry and an
-    # unpersist for zero reuse).
     qt = queries.select(
-        F.col("qid"),
-        F.col("lon_e7").alias("qx"),
-        F.col("lat_e7").alias("qy"),
-        cells.axis_tile_col(F.col("lon_e7"), level).alias("qcx"),
-        cells.axis_tile_col(F.col("lat_e7"), level).alias("qcy"),
+        "qid", x.alias("qx"), y.alias("qy"),
+        F.when(null, None).when(in_range, key).otherwise(-1).alias("qkey"),
     )
-
-    results = spark.createDataFrame(
-        _KNN_CARRY_SCHEMA.append(pa.field("rank", pa.int32())).empty_table()
+    # the one driver read: in-range point count per occupied cell
+    # (side 0) and the distinct query cells (side 1)
+    hist = (
+        pt.select(F.lit(0).alias("side"), "key", "_in")
+        .unionByName(
+            qt.select(F.lit(1).alias("side"), F.col("qkey").alias("key"),
+                      F.lit(0).alias("_in"))
+        )
+        .groupBy("side", "key")
+        .agg(F.sum("_in").alias("n"))
+        .toArrow()
     )
-    pt = pt.cache()
-    # localCheckpoint truncates the lineage each round — without it the
-    # anti-join chain re-derives every prior round's plan (exponential
-    # driver/plan cost across iterations)
-    pending = qt.localCheckpoint(eager=True)
-    n_pending = pending.count()
-    # density-derived initial radius: every ring round costs ~3
-    # driver-synchronized jobs, so starting at r=1 wastes 2-3 rounds
-    # whenever k neighbors need a wider disk.  Expected points in the
-    # (2r+1)^2 disk = lam * (2r+1)^2 with lam = points per occupied
-    # cell; aim for ~36k candidates.  Certification needs the k-th
-    # neighbor inside the ring's INSCRIBED euclidean radius (area
-    # ratio pi/4) and clustered data concentrates candidates away
-    # from sparse queries, so a tight aim (4k) routinely fails to
-    # certify round one; measured on the sf0.1 corpus (3000 queries,
-    # k=5): aim 4k -> 3.56 s, 36k -> 1.75 s, 144k -> 1.80 s, 400k ->
-    # 1.98 s — a wide flat optimum past ~36k, so the extra candidate
-    # compute is cheap next to a wasted driver-synchronized round.
-    # Correctness is radius-based certification — r0 only changes how
-    # much of the disk the first annulus covers, never the guarantee —
-    # so repeated callers can pass a precomputed r0 and skip the stats
-    # job entirely, and the stats job itself uses an HLL sketch for the
-    # occupied-cell count (single partial-agg pass over the cached pt,
-    # no distinct expand/shuffle; the estimate feeds a heuristic).
-    if r0 is None:
-        stats = pt.agg(
-            F.count("*").alias("n"),
-            F.approx_count_distinct(
-                F.concat_ws(",", "cx", "cy"), rsd=0.05
-            ).alias("cells"),
-        ).collect()[0]
-        lam = max(float(stats["n"]) / max(int(stats["cells"]), 1), 1e-9)
-        r0 = int(((36.0 * k / lam) ** 0.5 - 1.0) / 2.0) + 1
-    r_prev, r = -1, min(max(int(r0), 1), 64)
-    w = Window.partitionBy("qid").orderBy(F.col("dist2").asc(), F.col("pid").asc())
-    # carry = running top-k per still-pending query; each round joins
-    # ONLY the new annulus cells (r_prev, r] — the inner disk was already
-    # scanned, its survivors live in carry.  Disk cells are therefore
-    # visited once each instead of once per round (at r=128 the full
-    # rescan was 66k offsets per pending query per round).
-    carry = spark.createDataFrame(_KNN_CARRY_SCHEMA.empty_table())
-    for _ in range(max_rounds):
-        if n_pending == 0:
-            break
-        offs = _annulus_offsets_df(spark, r_prev, r)
-        cand = (
-            pending.crossJoin(F.broadcast(offs))
-            .withColumn("cx", F.col("qcx") + F.col("dx"))
-            .withColumn("cy", F.col("qcy") + F.col("dy"))
-            .join(pt, ["cx", "cy"])
-        )
-        cand = cand.select(
-            "qid", "qcx", "qcy", "qx", "qy", "pid", _dist2_col()
-        )
-        # certification: k-th distance within the ring guarantee radius
-        # (any non-candidate point is > r * cell_w away on some axis).
-        # The guarantee literal is shipped as a decimal STRING: at
-        # r >= 64 the squared radius exceeds int64 and a plain lit()
-        # cannot cross py4j as a long.
-        g2 = (int(r) * int(cell_w)) ** 2
-        g2_lit = F.lit(str(g2)).cast("decimal(38,0)")
-        wq = Window.partitionBy("qid")
-        # a point lies in exactly one cell and each cell is visited once,
-        # so carry ∪ cand has no duplicate (qid, pid).  The certification
-        # aggregate (per-qid survivor count + k-th distance) is FUSED
-        # into this same pass as a second window over the identical
-        # partitioning — the rows are already qid-partitioned for the
-        # rank window, so no extra exchange and no separate
-        # groupBy-agg job per round (the former done_ids plan).
-        ranked = (
-            carry.unionByName(cand)
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .withColumn(
-                "done",
-                (F.count("*").over(wq) >= k)
-                & (F.max("dist2").over(wq) <= g2_lit),
-            )
-            .localCheckpoint(eager=True)
-        )
-        results = results.unionByName(ranked.filter("done").drop("done"))
-        done_ids = ranked.filter("done").select("qid").distinct()
-        # pending is NOT re-checkpointed per round (r6): each round adds
-        # one broadcast anti-join against ids derived from the round's
-        # CHECKPOINTED `ranked`, so the plan stays shallow across the
-        # <= max_rounds iterations and re-evaluation is a cheap hash
-        # probe.  The per-round eager checkpoint + count were two extra
-        # driver-synchronized jobs per round; the pending count is now
-        # derived from the same `ranked` scan that builds done_ids.
-        pending = pending.join(F.broadcast(done_ids), "qid", "left_anti")
-        carry = ranked.filter(~F.col("done")).drop("rank", "done")
-        n_pending -= done_ids.count()
-        r_prev, r = r, r * 2
+    if hist["key"].null_count:
+        raise NullCoordinateError(_NULL_COORD_MSG)
+    side, cell, n = (hist[c].to_numpy() for c in ("side", "key", "n"))
+    pairs = _knn_cell_pairs(cell[side == 0], n[side == 0], cell[side == 1], k)
+    cand = (
+        qt.join(F.broadcast(spark.createDataFrame(pairs)), "qkey")
+        .join(pt, "key")
+    )
+    return _top_k(cand, k)
 
-    if n_pending > 0:
-        # brute-force fallback for queries the ring search never certified
-        # (e.g. k > points in a huge radius) — exact, small remainder
-        rest = pending.crossJoin(pt).select(
-            "qid", "qcx", "qcy", "qx", "qy", "pid", _dist2_col()
-        )
-        rest = rest.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-        results = results.unionByName(rest)
-
-    # cache lifecycle ends HERE, not at session end: the ring loop (the
-    # cache's only repeated consumer) has executed, and every returned
-    # row derives from localCheckpoint blocks (or, for the rare brute
-    # fallback, recomputes the narrow pt scan once).  Leaving pt cached
-    # leaked a storage entry per call into the session — on a
-    # long-lived executor that is memory a 100 TB job never gets back,
-    # and in the bench it left GC debris for whatever query ran next.
-    pt.unpersist()
-    return results.select("qid", "pid", "rank", "dist2")

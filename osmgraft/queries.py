@@ -312,7 +312,7 @@ def geo_pip_join_distcover(spark, sf_dir):
     """,
 )
 def geo_knn(spark, sf_dir):
-    """kNN via k-ring expansion + exact integer distance refinement."""
+    """kNN, k=5, by exact integer distance."""
     ents = synth.geo_entities_df(spark, sf_dir)
     pid = (F.col("doc_id") * 10 + F.col("ent_idx")).alias("pid")
     pts = ents.select(pid, "lon_e7", "lat_e7")
@@ -2396,8 +2396,9 @@ def geo_pip_join_compact(spark, sf_dir):
     """,
 )
 def knn_ring_vs_bruteforce(spark, sf_dir):
-    """kNN over a sparser point set (forces multi-round ring expansion
-    + the brute-force fallback path) — k=3."""
+    """kNN over a sparser point set, k=3, on the cell-histogram path
+    (``brute_max_pairs=0``: inputs this small would otherwise take the
+    brute route, which ``geo_knn`` already checks)."""
     pts = synth.geo_entities_df(spark, sf_dir).filter(
         F.col("doc_id") % 2 == 0
     ).select(
@@ -2407,7 +2408,7 @@ def knn_ring_vs_bruteforce(spark, sf_dir):
     qs = pts.filter(F.col("pid") < 600).select(
         F.col("pid").alias("qid"), "lon_e7", "lat_e7"
     )
-    return knn(spark, qs, pts, k=3).select(
+    return knn(spark, qs, pts, k=3, brute_max_pairs=0).select(
         "qid", "pid", F.col("rank").cast("int").alias("rank")
     )
 

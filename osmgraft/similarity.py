@@ -274,71 +274,6 @@ def lsh_banded_candidate_pairs(
     )
 
 
-def cosine_topk(
-    queries: DataFrame, points: DataFrame, k: int = 10
-) -> DataFrame:
-    """Float cosine top-k — the EXACT BASELINE: a broadcast cross join,
-    valid only while the point set fits the broadcast threshold and the
-    query set is bounded.  The scale path is :func:`cosine_topk_ivf`
-    (IVF-bucketed equi-join candidates).
-
-    queries(qid, embedding), points(pid, embedding) ->
-    (qid, pid, rank, cosine)."""
-    q = queries.select(
-        F.col("qid"),
-        F.transform("embedding", lambda x: x.cast("double")).alias("qe"),
-    )
-    p = points.select(
-        F.col("pid"),
-        F.transform("embedding", lambda x: x.cast("double")).alias("pe"),
-    )
-    dot = F.aggregate(
-        F.zip_with("qe", "pe", lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    norm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(c, F.lit(0.0), lambda acc, x: acc + x * x)
-    )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("cosine").desc(), F.col("pid").asc()
-    )
-    return (
-        q.crossJoin(F.broadcast(p))
-        .withColumn("cosine", dot / (norm(F.col("qe")) * norm(F.col("pe"))))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "pid", "rank", "cosine")
-    )
-
-
-def ivf_assign(df: DataFrame, n_centroids: int = 8) -> DataFrame:
-    """IVF coarse quantizer: deterministic centroids (the first
-    ``n_centroids`` vectors by vec_id — a seed-free, engine-portable
-    stand-in for a k-means codebook), each vector assigned to the
-    centroid with the highest quantized inner product (ties -> lowest
-    centroid id).  Output: (vec_id, centroid_id)."""
-    q = quantized(df).select("vec_id", "qvec")
-    cents = q.filter(F.col("vec_id") < n_centroids).select(
-        F.col("vec_id").alias("cid"), F.col("qvec").alias("cvec")
-    )
-    dot = F.aggregate(
-        F.zip_with("qvec", "cvec", lambda a, b: a * b),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("dot").desc(), F.col("cid").asc()
-    )
-    return (
-        q.crossJoin(F.broadcast(cents))
-        .withColumn("dot", dot)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", F.col("cid").alias("centroid_id"))
-    )
-
-
 def _ivf_bucket_topk_np(
     df: DataFrame, k: int, n_centroids: int, nprobe: int, cosine: bool
 ) -> DataFrame:

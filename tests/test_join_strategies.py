@@ -114,14 +114,13 @@ def test_cover_df_emits_inside_and_segment_rows(spark):
 
 
 def test_knn_certification_fused_job_count(spark, sf_dir):
-    """r3 verdict item 3: the per-round certification aggregate
-    (per-qid survivor count + k-th distance) is fused into the ranking
-    window pass as a second window over the same qid partitioning —
-    no separate groupBy-certify plan per ring round.  Measured on this
-    exact call (sf0.001, 150 queries, k=5): 32 driver-synchronized
-    jobs before the fusion, 26 after.  Bound at 28 so a reintroduced
-    per-round certification job fails loudly without being brittle to
-    minor Spark job accounting changes."""
+    """The histogram path certifies every query's search radius from one
+    driver read of exact per-cell point counts, then runs one join: a
+    fixed number of jobs whatever the density, no round loop.  Measured
+    on this exact call (sf0.001, 150 queries, k=5, plus the count): 8
+    jobs.  Bound at 10 so a reintroduced loop round or stats job fails
+    loudly without being brittle to minor Spark job accounting
+    changes."""
     from osmgraft.join import knn
 
     sc = spark.sparkContext
@@ -135,20 +134,17 @@ def test_knn_certification_fused_job_count(spark, sf_dir):
         qs = pts.filter(F.col("pid") < 300).select(
             F.col("pid").alias("qid"), "lon_e7", "lat_e7"
         )
-        # brute_max_pairs=0 forces the ring loop: this probe guards the
-        # RING path's certification fusion (the r6 default for inputs
-        # this small is the single-pass brute branch, which runs far
-        # fewer jobs and has no certification stage to regress)
+        # brute_max_pairs=0 forces the histogram path (the default for
+        # inputs this small is the single-pass brute route)
         out = knn(spark, qs, pts, k=5, brute_max_pairs=0)
         assert out.count() == 150
         jobs = sc.statusTracker().getJobIdsForGroup("knn-fused-probe")
-        # PINNED TO SPARK 4.1.2 job accounting: the <=28 budget depends
-        # on this version's AQE stage->job mapping and the r0 stats job.
-        # If this fails right after a Spark upgrade, recalibrate the
-        # budget (count jobs of a known-good run) before suspecting a
-        # certification-fusion regression.
-        assert len(jobs) <= 28, (
-            f"kNN ran {len(jobs)} jobs — certification fusion regressed "
+        # PINNED TO SPARK 4.1.2 job accounting: the <=10 budget depends
+        # on this version's AQE stage->job mapping.  If this fails right
+        # after a Spark upgrade, recalibrate the budget (count jobs of a
+        # known-good run) before suspecting a fixed-pass regression.
+        assert len(jobs) <= 10, (
+            f"kNN ran {len(jobs)} jobs — a loop round or stats job came back "
             f"(or Spark-version job accounting changed; budget pinned to 4.1.2)?"
         )
     finally:

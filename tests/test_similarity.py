@@ -3,11 +3,74 @@ stubbed codec behavior."""
 
 import numpy as np
 import pytest
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from osmgraft.similarity import cosine_topk, lsh_buckets
+from osmgraft.similarity import lsh_buckets, quantized
 
 pytestmark = pytest.mark.spark
+
+
+def cosine_topk(
+    queries: DataFrame, points: DataFrame, k: int = 10
+) -> DataFrame:
+    """Reference float cosine top-k: a broadcast cross join of the
+    queries and every point.
+
+    queries(qid, embedding), points(pid, embedding) ->
+    (qid, pid, rank, cosine)."""
+    q = queries.select(
+        F.col("qid"),
+        F.transform("embedding", lambda x: x.cast("double")).alias("qe"),
+    )
+    p = points.select(
+        F.col("pid"),
+        F.transform("embedding", lambda x: x.cast("double")).alias("pe"),
+    )
+    dot = F.aggregate(
+        F.zip_with("qe", "pe", lambda a, b: a * b),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+    norm = lambda c: F.sqrt(  # noqa: E731
+        F.aggregate(c, F.lit(0.0), lambda acc, x: acc + x * x)
+    )
+    w = Window.partitionBy("qid").orderBy(
+        F.col("cosine").desc(), F.col("pid").asc()
+    )
+    return (
+        q.crossJoin(F.broadcast(p))
+        .withColumn("cosine", dot / (norm(F.col("qe")) * norm(F.col("pe"))))
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("qid", "pid", "rank", "cosine")
+    )
+
+
+def ivf_assign(df: DataFrame, n_centroids: int = 8) -> DataFrame:
+    """Reference IVF coarse quantizer: the first ``n_centroids`` vectors
+    by vec_id are the centroids, and each vector goes to the centroid
+    with the highest quantized inner product (ties -> lowest centroid
+    id).  Output: (vec_id, centroid_id)."""
+    q = quantized(df).select("vec_id", "qvec")
+    cents = q.filter(F.col("vec_id") < n_centroids).select(
+        F.col("vec_id").alias("cid"), F.col("qvec").alias("cvec")
+    )
+    dot = F.aggregate(
+        F.zip_with("qvec", "cvec", lambda a, b: a * b),
+        F.lit(0).cast("bigint"),
+        lambda acc, x: acc + x,
+    )
+    w = Window.partitionBy("vec_id").orderBy(
+        F.col("dot").desc(), F.col("cid").asc()
+    )
+    return (
+        q.crossJoin(F.broadcast(cents))
+        .withColumn("dot", dot)
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .select("vec_id", F.col("cid").alias("centroid_id"))
+    )
 
 
 @pytest.fixture(scope="module")
@@ -123,7 +186,7 @@ def test_banded_near_dup_plan_has_no_crossjoin(spark, emb):
 
 
 def test_cosine_topk_ivf_ranks_by_true_cosine_within_bucket(spark, emb):
-    from osmgraft.similarity import cosine_topk_ivf, ivf_assign, quantized
+    from osmgraft.similarity import cosine_topk_ivf
 
     out = cosine_topk_ivf(emb, k=5, n_centroids=8)
     rows = out.collect()
@@ -226,7 +289,7 @@ def test_kmeans_parallel_seed_beats_first_n_on_sorted_corpus(spark):
     co-locate under any seeding — imbalance is the failure mode.)"""
     from collections import Counter
 
-    from osmgraft.similarity import ivf_assign, kmeans_parallel_assign
+    from osmgraft.similarity import kmeans_parallel_assign
 
     emb = _clustered_emb(spark).cache()  # 4 clusters x 50, sorted
     n = emb.count()

@@ -1,15 +1,16 @@
 """End-to-end spatial join + kNN vs pure-Python oracles (golden fixtures)."""
 
-import re
 from collections import Counter
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from osmgraft import synth
 from osmgraft.geometry import pip_matches
-from osmgraft.join import knn, spatial_join
+from osmgraft.join import NullCoordinateError, knn, spatial_join
 
 pytestmark = pytest.mark.spark
 
@@ -193,6 +194,22 @@ def test_empty_polygon_attach_with_distributed_cover(spark, sf_dir):
     ents.unpersist()
 
 
+def _knn_reference(P, Q, k):
+    """Numpy brute-force kNN: {(qid, pid, rank, dist2)} over (id, x, y)
+    rows, exact squared distance (Python ints), ties by pid."""
+    P = np.asarray(P, dtype=np.int64).reshape(-1, 3)
+    out = set()
+    for qid, qx, qy in Q:
+        d2 = (P[:, 1] - qx).astype(object) ** 2 + (P[:, 2] - qy).astype(object) ** 2
+        order = sorted(zip(d2, P[:, 0].tolist()))[:k]
+        out |= {(qid, pid, i + 1, int(d)) for i, (d, pid) in enumerate(order)}
+    return out
+
+
+def _knn_rows(df):
+    return {(r.qid, r.pid, r.rank, int(r.dist2)) for r in df.collect()}
+
+
 def test_knn_matches_bruteforce(spark, entities):
     pts = entities.select(
         (F.col("doc_id") * 10 + F.col("ent_idx")).alias("pid"), "lon_e7", "lat_e7"
@@ -201,72 +218,128 @@ def test_knn_matches_bruteforce(spark, entities):
         F.col("pid").alias("qid"), "lon_e7", "lat_e7"
     )
     k = 5
-    got = knn(spark, qs, pts, k=k).collect()
-    by_q = {}
-    for r in got:
-        by_q.setdefault(r.qid, []).append((r.rank, r.pid, int(r.dist2)))
+    got = _knn_rows(knn(spark, qs, pts, k=k))
+    # the cost-based brute route and the histogram path must agree
+    # exactly (brute_max_pairs=0 forces the histogram path)
+    assert _knn_rows(knn(spark, qs, pts, k=k, brute_max_pairs=0)) == got
 
-    # the r6 cost-based brute branch and the ring path must agree
-    # exactly (brute_max_pairs=0 forces the ring loop)
-    ring = knn(spark, qs, pts, k=k, brute_max_pairs=0).collect()
-    ring_set = {(r.qid, r.rank, r.pid, int(r.dist2)) for r in ring}
-    got_set = {(r.qid, r.rank, r.pid, int(r.dist2)) for r in got}
-    assert ring_set == got_set
-
-    # brute-force oracle
     prows = pts.collect()
-    qrows = qs.collect()
-    P = np.array([(r.pid, r.lon_e7, r.lat_e7) for r in prows], dtype=np.int64)
-    for q in qrows:
-        d2 = (P[:, 1] - q.lon_e7).astype(object) ** 2 + (
-            P[:, 2] - q.lat_e7
-        ).astype(object) ** 2
-        order = sorted(zip(d2, P[:, 0].tolist()))[:k]
-        want = [(i + 1, pid, int(d)) for i, (d, pid) in enumerate(order)]
-        assert sorted(by_q[q.qid]) == want, f"qid={q.qid}"
+    P = [(r.pid, r.lon_e7, r.lat_e7) for r in prows]
+    Q = [(r.pid, r.lon_e7, r.lat_e7) for r in prows if r.pid < 300]
+    assert got == _knn_reference(P, Q, k)
 
 
-def test_knn_precomputed_r0_identical(spark, entities):
-    """r0 is a performance hint only: any starting radius yields the
-    same certified result set (radius-based certification)."""
-    pts = entities.select(
-        (F.col("doc_id") * 10 + F.col("ent_idx")).alias("pid"), "lon_e7", "lat_e7"
-    )
-    qs = pts.filter(F.col("pid") < 200).select(
-        F.col("pid").alias("qid"), "lon_e7", "lat_e7"
-    )
-    base = {
-        (r.qid, r.rank, r.pid, int(r.dist2))
-        for r in knn(spark, qs, pts, k=3, brute_max_pairs=0).collect()
+_H = 1_800_000_000  # HALF_WORLD: the kNN grid spans [-_H, _H] on both axes
+_W = 56_250_000  # kNN grid cell width: WORLD / 64; cell 32 starts at 0
+
+
+def _knn_cases():
+    rng = np.random.default_rng(3)
+    blob = rng.normal(0, 2e7, (300, 2)).astype(np.int64) + [1_000_000_000, 400_000_000]
+    spread = rng.integers(-_H, _H, (40, 2)) // [1, 2]
+    xy = np.vstack([blob, spread])
+    clustered = [(i, int(x), int(y)) for i, (x, y) in enumerate(xy)]
+    lattice = [
+        (i * 10 + j, i * 10_000_000, j * 10_000_000)
+        for i in range(10) for j in range(10)
+    ]
+    edges = [
+        (0, _H, 0), (1, -_H, 0), (2, 0, 900_000_000), (3, 0, -900_000_000),
+        (4, _H, 900_000_000), (5, 1_700_000_000, 850_000_000),
+        (6, -_H + 1, -899_999_999),
+    ]
+    return {
+        "clustered": (
+            clustered,
+            clustered[::7] + [(1000, -1_700_000_000, -800_000_000)],
+        ),
+        # equal distances everywhere: the pid tie-break decides
+        "ties": (
+            lattice,
+            [(0, 45_000_000, 45_000_000), (1, 5_000_000, 0), (2, 0, 0)],
+        ),
+        "k_gt_points": (clustered[:3], [(0, 0, 0), (1, _H, 900_000_000)]),
+        "lon180_lat90": (
+            edges,
+            [(0, _H, 900_000_000), (1, -_H, -900_000_000), (2, 1_790_000_000, 0),
+             (3, 0, 0)],
+        ),
+        # one counted point across the query's own cell (~sqrt(2) cell
+        # widths away) certifies radius 0; the nearer point sits two
+        # cells away, so the candidate disk must reach past sqrt(2)
+        "radius_corner": (
+            [(0, _W - 1, _W - 1), (1, -_W - 1, 1)],
+            [(0, 1, 1)],
+        ),
+        # a point at lon 3.5e9 clamps into the last grid cell; counted
+        # there, it would certify a one-cell radius for query 0, whose
+        # nearest neighbor is the point at lon 1.0e9
+        "out_of_grid": (
+            [(0, 3_500_000_000, 0), (1, 1_000_000_000, 0),
+             (2, -2_000_000_000, 10)],
+            [(0, 1_750_000_000, 0), (1, 4_000_000_000, 0), (2, -_H, 0)],
+        ),
     }
-    for forced in (1, 7, 64):
-        got = {
-            (r.qid, r.rank, r.pid, int(r.dist2))
-            for r in knn(
-                spark, qs, pts, k=3, r0=forced, brute_max_pairs=0
-            ).collect()
-        }
-        assert got == base, f"r0={forced}"
-    assert base
+
+
+@pytest.mark.parametrize("case", sorted(_knn_cases()))
+def test_knn_histogram_path_equals_brute_route_and_reference(spark, case):
+    def frame(rows, id_col):
+        cols = zip(*rows)
+        return spark.createDataFrame(pa.table({
+            c: pa.array(v, pa.int64())
+            for c, v in zip((id_col, "lon_e7", "lat_e7"), cols)
+        }))
+
+    P, Q = _knn_cases()[case]
+    pts, qs = frame(P, "pid"), frame(Q, "qid")
+    for k in (1, 5, 10):
+        want = _knn_reference(P, Q, k)
+        assert _knn_rows(knn(spark, qs, pts, k=k)) == want, k
+        assert _knn_rows(knn(spark, qs, pts, k=k, brute_max_pairs=0)) == want, k
+
+
+def test_knn_null_coordinate_is_a_named_error(spark, tmp_path):
+    """A NULL coordinate has no distance (a NULL dist2 would sort first
+    in the top-k window) and no grid cell.  Both routes raise, for a
+    point or a query."""
+
+    path = str(tmp_path / "pts.parquet")
+    pq.write_table(pa.table({
+        "pid": pa.array([1, 2, 3, 4, 5], pa.int64()),
+        "lon_e7": pa.array([100, 130, None, 150, 200], pa.int64()),
+        "lat_e7": pa.array([100, 130, 110, 150, 200], pa.int64()),
+    }), path)
+    pts = spark.read.parquet(path)
+    qs = spark.createDataFrame(pa.table({
+        "qid": pa.array([1], pa.int64()), "lon_e7": pa.array([110], pa.int64()),
+        "lat_e7": pa.array([110], pa.int64()),
+    }))
+    null_q = spark.createDataFrame(pa.table({
+        "qid": pa.array([1], pa.int64()), "lon_e7": pa.array([110], pa.int64()),
+        "lat_e7": pa.array([None], pa.int64()),
+    }))
+    good_pts = pts.filter(F.col("lon_e7").isNotNull())
+    for brute_max_pairs in (64_000_000, 0):
+        with pytest.raises(NullCoordinateError):
+            knn(spark, qs, pts, k=2, brute_max_pairs=brute_max_pairs)
+        with pytest.raises(NullCoordinateError):
+            knn(spark, null_q, good_pts, k=2, brute_max_pairs=brute_max_pairs)
+        got = knn(spark, qs, good_pts, k=2, brute_max_pairs=brute_max_pairs)
+        assert sorted((r.rank, r.pid) for r in got.collect()) == [(1, 1), (2, 2)]
 
 
 def test_knn_driver_frames_are_local_table_scans(spark):
-    """knn's driver-built frames (ring offsets, the brute route's query
-    set, the ring loop's empty result and carry frames) come from Arrow
-    tables: they plan as LocalTableScan, never as the ``Scan
-    ExistingRDD`` of a Python-list frame, whose first action starts the
-    Python worker pool."""
-    from osmgraft.join import _annulus_offsets_df
+    """knn's driver-built frames (the brute route's query set, the
+    histogram path's cell pairs) come from Arrow tables: they plan as
+    LocalTableScan, never as the ``Scan ExistingRDD`` of a Python-list
+    frame, whose first action starts the Python worker pool.  The
+    histogram path has no checkpoint either (that, too, would scan as
+    an RDD)."""
 
     def plan(df):
         return df._jdf.queryExecution().executedPlan().toString()
 
-    offs = _annulus_offsets_df(spark, 0, 2)
-    assert "LocalTableScan" in plan(offs)
-    assert sorted(map(tuple, offs.collect())) == sorted(
-        (dx, dy) for dx in range(-2, 3) for dy in range(-2, 3)
-        if 0 < max(abs(dx), abs(dy)) <= 2
-    )
     pts = spark.range(400).select(
         F.col("id").alias("pid"),
         (F.col("id") * 7919 % 1000 * 100_000).alias("lon_e7"),
@@ -274,11 +347,8 @@ def test_knn_driver_frames_are_local_table_scans(spark):
     )
     qs = pts.filter("pid < 20").withColumnRenamed("pid", "qid")
     brute = knn(spark, qs, pts, k=3)
-    ring = knn(spark, qs, pts, k=3, brute_max_pairs=0)
-    assert "LocalTableScan" in plan(brute)
-    assert "ExistingRDD" not in plan(brute)
-    # the ring loop's own localCheckpoints (they carry the `done` flag)
-    # are its only RDD scans
-    scans = re.findall(r"Scan ExistingRDD\[([^\]]*)\]", plan(ring))
-    assert scans and all("done#" in cols for cols in scans), scans
-    assert sorted(map(tuple, brute.collect())) == sorted(map(tuple, ring.collect()))
+    hist = knn(spark, qs, pts, k=3, brute_max_pairs=0)
+    for df in (brute, hist):
+        assert "LocalTableScan" in plan(df)
+        assert "ExistingRDD" not in plan(df)
+    assert sorted(map(tuple, brute.collect())) == sorted(map(tuple, hist.collect()))
