@@ -10,10 +10,9 @@ Reference semantics:
   * J4 — a relation belongs iff any member belongs; relation-type
     members consult the already-accepted set -> iterate to fixpoint
     (``osmc/obm.c:333-375``; the reference logs "found in %i
-    iterations").  Driver loop of semi-joins; each iteration joins only
-    the not-yet-accepted relations (monotone frontier), so the loop
-    converges in <= nesting-depth rounds and unreachable cycles
-    terminate naturally.
+    iterations").  As there, the accepted set grows in one process: a
+    worklist on the driver, over one bounded read of the direct hits
+    and relation edges, monotone and so cycle-safe.
   * J7 — multipolygon assembly: ``type=multipolygon`` relations grouped
     over their outer/inner way members, '' role counts as outer
     (``osmc/mapper.c:522``), invalid roles / non-way members skipped
@@ -23,6 +22,10 @@ Reference semantics:
 
 from __future__ import annotations
 
+from functools import reduce
+
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -61,67 +64,106 @@ def way_clip_resequence(
     )
 
 
+def _members(relations: DataFrame) -> DataFrame:
+    """(relation_id, seq, ref, mtype, role): one row per member, ``seq``
+    its 0-based position."""
+    return relations.select(
+        "relation_id", F.posexplode("members").alias("seq", "m")
+    ).select(
+        "relation_id", "seq", F.col("m.ref").alias("ref"),
+        F.col("m.type").alias("mtype"), F.col("m.role").alias("role"),
+    )
+
+
+def _ring_members(relations: DataFrame) -> DataFrame:
+    """(relation_id, seq, way_id, ring_role) of the ``type=multipolygon``
+    relations' way members with role outer, inner or '' ('' counts as
+    outer, mapper.c:522); other members are skipped (mapper.c:529-532)."""
+    mem = _members(relations.filter(F.col("tags").getItem("type") == "multipolygon"))
+    return mem.filter(
+        (F.col("mtype") == "way") & F.col("role").isin("outer", "inner", "")
+    ).select(
+        "relation_id", "seq", F.col("ref").alias("way_id"),
+        F.when(F.col("role") == "inner", "inner").otherwise("outer").alias("ring_role"),
+    )
+
+
+def _member_regions(node_regions, way_regions, accepted=None) -> DataFrame:
+    """(mtype, ref, boundary_id): the boundaries of each node, way and,
+    given ``accepted``, relation, keyed as a member."""
+    tables = [("node", node_regions, "node_id"), ("way", way_regions, "way_id")]
+    if accepted is not None:
+        tables.append(("relation", accepted, "relation_id"))
+    return reduce(DataFrame.unionByName, (
+        df.select(F.lit(t).alias("mtype"), F.col(c).alias("ref"), "boundary_id")
+        for t, df, c in tables
+    ))
+
+
+class ClosureSizeError(ValueError):
+    """More than ``_DRIVER_MAX_ROWS`` rows read or accepted by
+    :func:`relation_closure`."""
+
+
+# Largest closure input, and accepted set, on the driver (the bound of
+# ``dedup._DRIVER_MAX_PAIRS``).
+_DRIVER_MAX_ROWS = 1 << 20
+
+
 def relation_closure(
     relations: DataFrame,
     node_regions: DataFrame,
     way_regions: DataFrame,
-    max_iterations: int = 50,
 ) -> DataFrame:
     """J4: fixpoint of (relation_id, boundary_id) membership.
 
     relations(relation_id, members ARRAY<STRUCT<ref, type, role>>).
     Base: relations whose node/way members hit a region directly.
-    Step: relations whose relation-type members are already accepted.
-    Converged when a round accepts nothing new; a ``RuntimeError``
-    rather than a partial closure when ``max_iterations`` rounds all
-    found more (nesting deeper than the cap).
-    """
-    edges = relations.select(
-        "relation_id", F.explode("members").alias("m")
-    ).select(
-        "relation_id",
-        F.col("m.ref").alias("ref"),
-        F.col("m.type").alias("mtype"),
-    )
-    node_hits = (
-        edges.filter(F.col("mtype") == "node")
-        .join(node_regions, edges.ref == node_regions.node_id)
-        .select("relation_id", "boundary_id")
-    )
-    way_hits = (
-        edges.filter(F.col("mtype") == "way")
-        .join(way_regions, edges.ref == way_regions.way_id)
-        .select("relation_id", "boundary_id")
-    )
-    # materialize the base once and truncate lineage each round —
-    # otherwise every fixpoint iteration lazily recomputes the upstream
-    # spatial joins that produced node_regions / way_regions
-    accepted = (
-        node_hits.unionByName(way_hits).distinct().localCheckpoint(eager=True)
-    )
-    rel_edges = edges.filter(F.col("mtype") == "relation").localCheckpoint(
-        eager=True
-    )
+    Step: a relation holds every boundary of its relation-type members.
 
-    for _ in range(max_iterations):
-        new = (
-            rel_edges.join(
-                F.broadcast(accepted.withColumnRenamed("relation_id", "child_id")),
-                rel_edges.ref == F.col("child_id"),
-            )
-            .select("relation_id", "boundary_id")
-            .distinct()
-            .join(accepted, ["relation_id", "boundary_id"], "left_anti")
-            .localCheckpoint(eager=True)
+    One ``limit().toArrow()`` reads the base pairs and the relation
+    edges (parent ``relation_id``, child ``ref``); a driver worklist
+    hands each accepted pair to the child's parents until nothing is
+    added.  As in the recursive-CTE oracle, a NULL ``ref`` joins nothing
+    and a NULL ``relation_id`` is kept.  Returns an Arrow-built frame
+    typed as the base pairs; :class:`ClosureSizeError` above
+    ``_DRIVER_MAX_ROWS`` rows read or accepted.
+    """
+    edges = _members(relations)
+    hits = edges.join(_member_regions(node_regions, way_regions), ["mtype", "ref"])
+    t = (
+        hits.select("relation_id", "boundary_id", F.lit(0).alias("side"))
+        .unionByName(
+            edges.filter(F.col("mtype") == "relation")
+            .select("relation_id", "ref", F.lit(1).alias("side")),
+            allowMissingColumns=True,
         )
-        if new.isEmpty():
-            break
-        accepted = accepted.unionByName(new).localCheckpoint(eager=True)
-    else:
-        raise RuntimeError(
-            f"relation_closure not converged after {max_iterations} rounds"
+        .limit(_DRIVER_MAX_ROWS + 1)
+        .toArrow()
+    )
+    is_edge = pc.equal(t["side"], 1)
+    rel_edges, base = t.filter(is_edge), t.filter(pc.invert(is_edge))
+    parents = {}
+    for p, c in zip(*(rel_edges[k].to_pylist() for k in ("relation_id", "ref"))):
+        parents.setdefault(c, []).append(p)
+    parents.pop(None, None)  # a NULL ref joins nothing
+    accepted = set(zip(*(base[k].to_pylist() for k in ("relation_id", "boundary_id"))))
+    work = list(accepted)
+    while work and len(accepted) <= _DRIVER_MAX_ROWS:
+        child, boundary = work.pop()
+        for p in parents.get(child, ()):
+            if (p, boundary) not in accepted:
+                accepted.add((p, boundary))
+                work.append((p, boundary))
+    if max(t.num_rows, len(accepted)) > _DRIVER_MAX_ROWS:
+        raise ClosureSizeError(
+            f"relation_closure reads or accepts more than {_DRIVER_MAX_ROWS} rows"
         )
-    return accepted
+    pairs = list(accepted)
+    return relations.sparkSession.createDataFrame(pa.table({
+        "relation_id": pa.array([r for r, _ in pairs], t["relation_id"].type),
+        "boundary_id": pa.array([b for _, b in pairs], t["boundary_id"].type),
+    }))
 
 
 def relation_member_filter(
@@ -133,27 +175,10 @@ def relation_member_filter(
     """J5: for accepted (relation, region) pairs, keep only members that
     belong to that region (node/way by region table, relation by
     acceptance), densely re-sequenced (olm.c:312-341)."""
-    mem = relations.select(
-        "relation_id", F.posexplode("members").alias("seq", "m")
-    ).select(
-        "relation_id", "seq",
-        F.col("m.ref").alias("ref"), F.col("m.type").alias("mtype"),
-        F.col("m.role").alias("role"),
+    kept = _members(relations).join(accepted, "relation_id").join(
+        _member_regions(node_regions, way_regions, accepted),
+        ["mtype", "ref", "boundary_id"], "left_semi",
     )
-    pairs = mem.join(accepted, "relation_id")
-    node_keep = pairs.filter(F.col("mtype") == "node").join(
-        node_regions.withColumnRenamed("node_id", "ref"), ["ref", "boundary_id"],
-        "left_semi",
-    )
-    way_keep = pairs.filter(F.col("mtype") == "way").join(
-        way_regions.withColumnRenamed("way_id", "ref"), ["ref", "boundary_id"],
-        "left_semi",
-    )
-    rel_keep = pairs.filter(F.col("mtype") == "relation").join(
-        accepted.withColumnRenamed("relation_id", "ref"), ["ref", "boundary_id"],
-        "left_semi",
-    )
-    kept = node_keep.unionByName(way_keep).unionByName(rel_keep)
     w = Window.partitionBy("relation_id", "boundary_id").orderBy("seq")
     return kept.withColumn("new_seq", F.row_number().over(w) - 1).select(
         "relation_id", "boundary_id", "new_seq", "ref", "mtype", "role"
@@ -170,22 +195,8 @@ def multipolygon_rings(
     the J6 resolution join).  Non-way members and invalid roles are
     skipped (mapper.c:529-532); '' role counts as outer (mapper.c:522).
     """
-    mp = relations.filter(
-        F.col("tags").getItem("type") == "multipolygon"
-    )
-    mem = mp.select("relation_id", F.explode("members").alias("m")).select(
-        "relation_id",
-        F.col("m.ref").alias("way_id"),
-        F.col("m.type").alias("mtype"),
-        F.col("m.role").alias("role"),
-    )
-    valid = mem.filter(
-        (F.col("mtype") == "way") & F.col("role").isin("outer", "inner", "")
-    ).withColumn(
-        "ring_role", F.when(F.col("role") == "inner", "inner").otherwise("outer")
-    )
     ring_nodes = (
-        valid.join(ways.select("way_id", "nodes"), "way_id")
+        _ring_members(relations).join(ways.select("way_id", "nodes"), "way_id")
         .select(
             "relation_id", "way_id", "ring_role",
             F.explode("nodes").alias("node_id"),
@@ -231,22 +242,9 @@ def multipolygon_geometry(
     Output: (relation_id, part_idx, ring_way_id, role, seq,
     lon_e7, lat_e7).
     """
-    mp = relations.filter(F.col("tags").getItem("type") == "multipolygon")
-    mem = mp.select(
-        "relation_id", F.posexplode("members").alias("mpos", "m")
-    ).select(
-        "relation_id",
-        "mpos",
-        F.col("m.ref").alias("ring_way_id"),
-        F.col("m.type").alias("mtype"),
-        F.col("m.role").alias("mrole"),
-    )
-    valid = mem.filter(
-        (F.col("mtype") == "way") & F.col("mrole").isin("outer", "inner", "")
-    ).select(
-        "relation_id", "mpos", "ring_way_id",
-        F.when(F.col("mrole") == "inner", "inner").otherwise("outer")
-        .alias("role"),
+    valid = _ring_members(relations).select(
+        "relation_id", F.col("seq").alias("mpos"),
+        F.col("way_id").alias("ring_way_id"), F.col("ring_role").alias("role"),
     )
     found = valid.join(
         ways.select(F.col("way_id").alias("ring_way_id"), "nodes"),

@@ -26,6 +26,7 @@ from __future__ import annotations
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
@@ -630,17 +631,17 @@ def simhash_hamming_pairs(sh: DataFrame, max_hamming: int = 2) -> DataFrame:
     row on each side (band rows are corpus-sized, not pair-sized) — a
     fixed +16 bytes/row for dropping the pair-sized exchange.
 
-    Cache lifecycle (r6, same pattern as the minhash/jaccard pair
-    builders): the input fingerprint subtree feeds both join sides —
-    uncached, each branch re-ran the full simhash derivation.  Cached
-    eagerly, consumed by the eager result checkpoint, unpersisted
-    before return.
+    Cache lifecycle: the input fingerprint subtree feeds both join
+    sides, so an input the caller has not persisted is cached eagerly
+    here and unpersisted after the eager result checkpoint; a
+    caller-persisted input keeps its cache entry.
 
     Input: (doc_id, sim_hi, sim_lo).  Output: (doc_a, doc_b, hamming).
     """
     assert max_hamming <= 3, "4 fixed bands guarantee recall only to 3"
-    sh = sh.cache()
-    sh.count()  # eager populate: cold-cache consumers race
+    owned = sh.storageLevel == StorageLevel.NONE
+    if owned:
+        sh.cache().count()  # eager populate: cold-cache consumers race
     mask = F.lit(0xFFFF).cast("bigint")
     bands = sh.select(
         "doc_id", "sim_hi", "sim_lo",
@@ -678,5 +679,6 @@ def simhash_hamming_pairs(sh: DataFrame, max_hamming: int = 2) -> DataFrame:
         .distinct()
     )
     out = out.localCheckpoint(eager=True)  # pair set: band-bounded
-    sh.unpersist()
+    if owned:
+        sh.unpersist()
     return out

@@ -962,8 +962,8 @@ def _closure_inputs(spark, sf_dir):
         .select(F.col("id").alias("node_id"), "lon_e7", "lat_e7")
         .join(F.broadcast(node_refs), "node_id", "left_semi")
     )
-    # materialize both region tables: the closure fixpoint and member
-    # filter consume them repeatedly (every iteration / three joins)
+    # materialize both region tables: the member filter reads them again
+    # after the closure (unmaterialized, it reruns the spatial join)
     node_regions = spatial_join(spark, nodes, synth.boundaries()).select(
         "node_id", "boundary_id"
     ).localCheckpoint(eager=True)

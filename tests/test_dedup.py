@@ -1,6 +1,7 @@
 """Dedup-family unit tests (shingles, simhash banding, LSH shapes)."""
 
 import pytest
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window, functions as F
 
 from osmgraft import dedup
@@ -75,6 +76,23 @@ def test_simhash_pairs_plan_has_no_theta_join(spark):
     )._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
+
+
+def test_simhash_pairs_keep_the_callers_cache(spark):
+    # a caller-persisted input keeps its cache entry; an input the call
+    # cached for itself is released again
+    d = _docs(spark, [(i, f"tok{i % 3} a b c d") for i in range(12)])
+    fresh = dedup.simhash(d, bits=64)
+    want = sorted(dedup.simhash_hamming_pairs(fresh, max_hamming=2).collect())
+    assert fresh.storageLevel == StorageLevel.NONE
+    held = dedup.simhash(d, bits=64).persist(StorageLevel.MEMORY_AND_DISK)
+    held.count()
+    try:
+        got = sorted(dedup.simhash_hamming_pairs(held, max_hamming=2).collect())
+        assert held.storageLevel == StorageLevel.MEMORY_AND_DISK
+        assert got == want and len(want) == 18  # 3 groups of 4 equal docs
+    finally:
+        held.unpersist()
 
 
 def test_max_df_drops_boilerplate_shingle(spark):
