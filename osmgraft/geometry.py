@@ -240,7 +240,7 @@ def _cell_segments(poly: Polygon, cov):
     return meets, inside, np.concatenate(rows), np.concatenate(cols)
 
 
-def refine_cover(poly: Polygon, level: int, compacted: bool = False):
+def refine_cover(poly: Polygon, level: int):
     """The exact-superset cover of a non-empty polygon with what its
     refine needs per cell: ``(cell, inside, offsets, segs)``.
 
@@ -251,9 +251,7 @@ def refine_cover(poly: Polygon, level: int, compacted: bool = False):
     1]]`` (upward, see :func:`_upward`): the segments whose closed
     y-range meets the cell's and whose max x is at least the cell's min
     x.  Only those can be CROSSING or TOUCHING for a point in the cell,
-    so they decide it as the full list does.  ``compacted=True``
-    collapses complete sibling quartets into parents (mixed-level
-    cover); lists are computed on each cell's own rectangle.
+    so they decide it as the full list does.
     """
     (_, ya, xa), (_, yb, xb) = (
         cells.cell_decode(cells.lonlat_cell(x, y, level))
@@ -262,9 +260,6 @@ def refine_cover(poly: Polygon, level: int, compacted: bool = False):
     gy, gx = np.meshgrid(np.arange(ya, yb + 1), np.arange(xa, xb + 1), indexing="ij")
     cov = cells.cell_id(gx.ravel(), gy.ravel(), level)
     meets, inside, rows, cols = _cell_segments(poly, cov)
-    if compacted:
-        cov = cells.compact(cov[meets | inside])
-        meets, inside, rows, cols = _cell_segments(poly, cov)
     keep = meets | inside
     counts = np.bincount(rows, minlength=cov.size)[keep]
     offsets = np.concatenate([[0], np.cumsum(counts)]).astype(np.int32)
@@ -272,7 +267,7 @@ def refine_cover(poly: Polygon, level: int, compacted: bool = False):
     return cov[keep], inside[keep], offsets, tuple(v[cols] for v in segs)
 
 
-def polygon_cover(poly: Polygon, level: int, compacted: bool = False):
+def polygon_cover(poly: Polygon, level: int):
     """Exact-superset cell cover of a polygon on the lon/lat grid (the
     cells of :func:`refine_cover`); the residual PIP refine removes
     false positives.
@@ -282,4 +277,4 @@ def polygon_cover(poly: Polygon, level: int, compacted: bool = False):
     """
     if poly.n_segments == 0:
         return np.array([cells.cell_id(0, 0, 0)], dtype=np.int64)
-    return refine_cover(poly, level, compacted=compacted)[0]
+    return refine_cover(poly, level)[0]

@@ -14,6 +14,9 @@ as a **two-phase join**:
    project -> broadcast-hash-join runs in one stage, which is the
    100 TB-safe shape (the probe side streams; skewed hot cells are
    irrelevant to a broadcast join because there is no shuffle by key).
+   This is the join's only physical shape: no salted sort-merge and no
+   mixed-level cover, since the cover is held whole on the driver
+   either way.
 2. **Exact refine** — surviving (point, boundary) candidate pairs run
    the reference's ray-cast parity test (``osmc/CountryPolygon.c:59-126``)
    as a SQL expression over the candidate's cover entry: a cell that
@@ -49,7 +52,7 @@ from . import cells
 from .geometry import OUTSIDE, Polygon, refine_cover, refine_sql
 
 DEFAULT_COVER_LEVEL = 9  # ~0.7 deg cells: fine enough to hug boundaries,
-# coarse enough that planet-scale covers stay broadcastable
+# coarse enough to keep the broadcast cover small
 
 
 _SEG_NAMES = ["x0", "y0", "x1", "y1"]
@@ -66,27 +69,17 @@ _ENTRY = "struct<boundary_id:bigint,_inside:boolean,_segs:%s>" % (
 )
 
 
-def cover_df(
-    spark: SparkSession,
-    polys: list[Polygon],
-    level: int,
-    compacted: bool = False,
-) -> DataFrame:
+def cover_df(spark: SparkSession, polys: list[Polygon], level: int) -> DataFrame:
     """:data:`_COVER_SCHEMA` rows: the exact-superset cover of every
     non-empty polygon, one row per (boundary_id, cell) with its refine
     geometry (``geometry.refine_cover``).  Built on the driver for every
     polygon count, as one Arrow table, so creating it starts no Python
-    worker.
-
-    ``compacted=True`` collapses complete sibling quartets into parents
-    (mixed-level cover, H3-compact analog) — smaller broadcast for
-    large boundaries; the point side then joins on every ancestor level
-    present in the cover."""
+    worker."""
     batches = []
     for p in polys:
         if p.n_segments == 0:
             continue
-        cell, inside, offsets, segs = refine_cover(p, level, compacted=compacted)
+        cell, inside, offsets, segs = refine_cover(p, level)
         seg_arr = pa.StructArray.from_arrays(list(segs), names=_SEG_NAMES)
         batches.append(pa.RecordBatch.from_arrays(
             [
@@ -117,88 +110,41 @@ def spatial_join(
     polys: list[Polygon],
     level: int = DEFAULT_COVER_LEVEL,
     keep_position: bool = False,
-    strategy: str = "broadcast",
-    compact_cover: bool = False,
-    salt_buckets: int = 8,
-    hot_cell_threshold: int | None = None,
 ) -> DataFrame:
     """points(.. lon_e7, lat_e7 ..) x polygons -> one row per (point,
     boundary) match.  Multi-assign (a point can match several
     boundaries); BOUNDARY counts as a match (``osmc/obm.c:28-30``).
-    Every strategy and polygon count builds the cover with
-    :func:`cover_df` on the driver, so the join runs no Python.
 
-    Physical strategies:
-      * ``broadcast`` (default) — the cover broadcasts; the big side
-        never shuffles and key skew is irrelevant.  Right whenever the
-        (compacted) planet cover fits the broadcast threshold.
-      * ``sortmerge`` — for covers too large to broadcast: shuffle both
-        sides on cell with **explicit hot-cell salting** (dense urban
-        cells are split into ``salt_buckets`` sub-keys on the point
-        side; the cover side replicates into every bucket), plus AQE
-        skew-join as the backstop.  Salting only re-keys the shuffle —
-        join results are identical (verified in tests).
-
-    ``compact_cover`` joins against a mixed-level compacted cover: the
-    point side explodes into one ancestor cell per level present
-    (<= level+1 rows, typically 3-5) — smaller build side for one extra
-    narrow explode.
+    One physical shape for every polygon count: :func:`cover_df` builds
+    the cover on the driver and the points join it as a broadcast, so
+    the big side never shuffles, key skew is irrelevant and the join
+    runs no Python.  A cover too large to broadcast would already be
+    too large to build: it is one local relation in driver memory
+    before the join is planned.
     """
-    cov = cover_df(spark, polys, level, compacted=compact_cover)
-    if compact_cover:
-        # an empty cover (only empty polygons) still needs one level,
-        # so every point row survives to pick up the empties
-        levels = sorted(
-            {r.cell >> 52 for r in cov.select("cell").distinct().collect()}
-        ) or [level]
-        anc = F.array(
-            *[
-                cells.lonlat_cell_col(F.col("lon_e7"), F.col("lat_e7"), lv)
-                for lv in levels
-            ]
-        )
-        pt = points.select("*", F.posexplode(anc).alias("_lvl", "cell"))
-    else:
-        pt = points.withColumn(
-            "cell",
-            cells.lonlat_cell_col(F.col("lon_e7"), F.col("lat_e7"), level),
-        )
-
-    # One candidate shape for every strategy: join the points to the
-    # per-cell aggregated cover (cell -> array of entries) and explode
-    # cover entries ++ empty (match-everything) polygon entries in the
-    # same pass.  With empties the join is LEFT, so every point row
-    # survives to pick them up; the points subtree is evaluated once (a
-    # separate cross-join branch would be a Union, and Spark does not
-    # share a subtree across union branches).
+    pt = points.withColumn(
+        "cell", cells.lonlat_cell_col(F.col("lon_e7"), F.col("lat_e7"), level)
+    )
+    # Join the points to the per-cell aggregated cover (cell -> array of
+    # entries) and explode cover entries ++ empty (match-everything)
+    # polygon entries in the same pass.  With empties the join is LEFT,
+    # so every point row survives to pick them up; the points subtree
+    # is evaluated once (a separate cross-join branch would be a Union,
+    # and Spark does not share a subtree across union branches).
     empty_ids = [p.boundary_id for p in polys if p.n_segments == 0]
-    cov_agg = cov.groupBy("cell").agg(
+    cov_agg = cover_df(spark, polys, level).groupBy("cell").agg(
         F.collect_list(
             F.struct("boundary_id", F.col("inside").alias("_inside"),
                      F.col("segs").alias("_segs"))
         ).alias("_cov")
     )
-    how = "left" if empty_ids else "inner"
-    if strategy == "broadcast":
-        cand = pt.join(F.broadcast(cov_agg), "cell", how)
-    elif strategy == "sortmerge":
-        cand = _salted_sortmerge(
-            spark, pt, cov_agg, salt_buckets, hot_cell_threshold, how
-        )
-    else:
-        raise ValueError(f"unknown strategy {strategy!r}")
+    cand = pt.join(F.broadcast(cov_agg), "cell", "left" if empty_ids else "inner")
 
-    no_entries = F.expr(f"CAST(array() AS array<{_ENTRY}>)")
-    entries = F.coalesce(F.col("_cov"), no_entries)
+    entries = F.coalesce(F.col("_cov"), F.expr(f"CAST(array() AS array<{_ENTRY}>)"))
     if empty_ids:
         ids = ", ".join(f"struct({int(i)}L, true, array())" for i in empty_ids)
-        empties = F.expr(f"CAST(array({ids}) AS array<{_ENTRY}>)")
-        if compact_cover:
-            # one row per ancestor level: attach the empties on the
-            # first level's row only, so each point gets each id once
-            empties = F.when(F.col("_lvl") == 0, empties).otherwise(no_entries)
-        entries = F.concat(entries, empties)
-    cand = cand.select("*", F.inline(entries)).drop("_cov", "_lvl")
+        entries = F.concat(entries, F.expr(f"CAST(array({ids}) AS array<{_ENTRY}>)"))
+    cand = cand.select("*", F.inline(entries)).drop("_cov")
 
     position = F.expr(refine_sql("lon_e7", "lat_e7", "_inside", "_segs"))
     refined = (
@@ -207,83 +153,6 @@ def spatial_join(
         .drop("cell", "_inside", "_segs")
     )
     return refined if keep_position else refined.drop("position")
-
-
-def _salted_sortmerge(
-    spark: SparkSession,
-    pt: DataFrame,
-    cov: DataFrame,
-    salt_buckets: int,
-    hot_cell_threshold: int | None,
-    how: str,
-) -> DataFrame:
-    """Sort-merge cell join (``how``: inner or left) of the points to
-    the per-cell cover with explicit hot-cell salting.
-
-    Hot cells (observed point count above threshold) get per-row salt on
-    the probe side; the (small) cover side replicates each hot cell into
-    every salt bucket.  Salting only changes the shuffle key — the join
-    result set is exactly the broadcast join's (probe-side salting +
-    build-side replication preserves the cross product per cell).
-
-    The hot-cell list comes from a SAMPLED count (SURVEY §4): hotness
-    is a heuristic, and salting is result-preserving by construction,
-    so sampling can only change *which* cells get pre-salted — AQE
-    skew-join remains the backstop for a hot cell the sample misses.
-    At 100 TB a full ``groupBy(cell).count()`` ahead of the real join
-    would itself be a full-scan shuffle; the 2% sample keeps the stats
-    job proportional to skew detection, not to the corpus.
-    """
-    sample_fraction = 0.02
-    stats = (
-        pt.sample(fraction=sample_fraction, seed=42).groupBy("cell").count()
-    )
-    if hot_cell_threshold is None:
-        # cells whose sampled count exceeds 4x the sampled mean (the
-        # same heuristic as a full pass, evaluated in sample space)
-        row = stats.agg(
-            F.expr("percentile_approx(count, 0.999)").alias("p999"),
-            F.avg("count").alias("mean"),
-        ).collect()[0]
-        if row["mean"] is None:
-            # empty sample (stats has no rows): no cell is pre-salted;
-            # AQE skew-join handles any residual skew
-            hot_cell_threshold = 1
-        else:
-            hot_cell_threshold = max(int(row["mean"] * 4) + 1, int(row["p999"]))
-    else:
-        # caller threshold is in full-scan units — scale to sample space
-        hot_cell_threshold = max(1, int(hot_cell_threshold * sample_fraction))
-    # hot-cell set stays a broadcast-joined DataFrame, never a driver
-    # literal — an F.array literal in the plan degenerates when a dense
-    # planet has millions of hot cells
-    hot_df = (
-        stats.filter(F.col("count") >= hot_cell_threshold)
-        .select("cell", F.lit(True).alias("is_hot"))
-    )
-    is_hot = F.coalesce(F.col("is_hot"), F.lit(False))
-
-    salted_pt = (
-        pt.join(F.broadcast(hot_df), "cell", "left")
-        .withColumn(
-            "salt",
-            F.when(is_hot, F.pmod(F.xxhash64("lon_e7", "lat_e7"), salt_buckets))
-            .otherwise(F.lit(0))
-            .cast("int"),
-        )
-        .drop("is_hot")
-    )
-    buckets = spark.range(salt_buckets).select(F.col("id").cast("int").alias("salt"))
-    salted_cov = (
-        cov.join(F.broadcast(hot_df), "cell", "left")
-        .crossJoin(F.broadcast(buckets))
-        .filter((F.col("salt") == 0) | is_hot)
-        .drop("is_hot")
-    )
-
-    return (
-        salted_pt.hint("merge").join(salted_cov, ["cell", "salt"], how).drop("salt")
-    )
 
 
 # ---------------------------------------------------------------------------

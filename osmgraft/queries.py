@@ -2360,21 +2360,26 @@ def created_by_filter(spark, sf_dir):
 
 @_register("geo_pip_join_salted", pip_sql(_PTS, "doc_id, ent_idx"))
 def geo_pip_join_salted(spark, sf_dir):
-    """Flagship join via the salted sort-merge path (same result set —
-    the strategy only re-keys the shuffle; exercises skew handling)."""
+    """The flagship join on ``spatial_join``'s one broadcast-cover
+    shape, as ``geo_pip_join`` runs it.  The name predates the removal
+    of the salted sort-merge strategy; it is kept, with its oracle, as
+    declared, since the declared query set is not renamed or pruned."""
     pts = synth.geo_entities_df(spark, sf_dir)
-    return spatial_join(
-        spark, pts, synth.boundaries(), strategy="sortmerge", salt_buckets=4
-    ).select("doc_id", "ent_idx", "boundary_id")
+    return spatial_join(spark, pts, synth.boundaries()).select(
+        "doc_id", "ent_idx", "boundary_id"
+    )
 
 
 @_register("geo_pip_join_compact", pip_sql(_PTS, "doc_id, ent_idx"))
 def geo_pip_join_compact(spark, sf_dir):
-    """Flagship join against the compacted mixed-level cover."""
+    """The flagship join on ``spatial_join``'s one broadcast-cover
+    shape, as ``geo_pip_join`` runs it.  The name predates the removal
+    of the compacted-cover option; it is kept, with its oracle, as
+    declared, since the declared query set is not renamed or pruned."""
     pts = synth.geo_entities_df(spark, sf_dir)
-    return spatial_join(
-        spark, pts, synth.boundaries(), compact_cover=True
-    ).select("doc_id", "ent_idx", "boundary_id")
+    return spatial_join(spark, pts, synth.boundaries()).select(
+        "doc_id", "ent_idx", "boundary_id"
+    )
 
 
 @_register(
@@ -3004,15 +3009,18 @@ def media_resize(spark, sf_dir):
 # queries (CORRECTNESS_r02 held exactly the first 50 keys in
 # registration order).  Registration above is grouped by topic, which
 # left the production dedup/ANN paths past the window while redundant
-# strategy variants sat inside it.  Demote the variants to the tail so
+# variants sat inside it.  Demote the variants to the tail so
 # every production operator carries a green CORRECTNESS row; each
 # demoted variant re-verifies an operator whose primary query stays in
 # the window, and all of them remain covered by the local parity
 # replica in tests/ (same oracle SQL, sf0.001 + sf0.01).  Documented in
 # COVERAGE.md ("Driver gate window").
 _GATE_TAIL = [
-    "geo_pip_join_salted",     # J1 via the salted sort-merge path (primary: geo_pip_join)
-    "geo_pip_join_compact",    # J1 via the compacted mixed-level cover
+    "geo_pip_join_salted",     # J1 again on the one broadcast-cover shape
+                               # (primary: geo_pip_join); name kept from the
+                               # deleted salted sort-merge variant
+    "geo_pip_join_compact",    # J1 again on the same shape; name kept from
+                               # the deleted compacted-cover variant
     "knn_ring_vs_bruteforce",  # J9 on a sparser point set (primary: geo_knn)
     "ann_ivf_topk_nprobe",     # recall-dial variant (primary: ann_ivf_topk)
     "ann_ivf_trained",         # codebook-training variant of ann_ivf_topk

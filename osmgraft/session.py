@@ -39,10 +39,7 @@ def get_spark(
         # fewer, larger Arrow batches: halves per-batch scheduling and
         # (de)serialization overhead on the mapInPandas hot path; 20k
         # rows of ~1 KB page text is ~20 MB per in-flight batch per core
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            os.environ.get("SPARK_GRAFT_ARROW_BATCH", "20000"),
-        )
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "20000")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
@@ -66,9 +63,7 @@ def get_spark(
 # on this host (measured r6: the 0.6 MB sf0.1 corpus regressed
 # corpus_clean 0.34->0.58 with an unconditional spread; the 5.9 MB
 # sf1.0 corpus gains 2-11 s on the shingle/token queries).
-SPREAD_MIN_BYTES_PER_PART = int(
-    os.environ.get("SPARK_GRAFT_SPREAD_MIN_BYTES_PER_PART", str(128 * 1024))
-)
+SPREAD_MIN_BYTES_PER_PART = 128 * 1024
 
 
 def spread_scan(df: DataFrame, min_parts: int | None = None) -> DataFrame:

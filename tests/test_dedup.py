@@ -1,5 +1,6 @@
 """Dedup-family unit tests (shingles, simhash banding, LSH shapes)."""
 
+import pyarrow as pa
 import pytest
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window, functions as F
@@ -9,8 +10,22 @@ from osmgraft import dedup
 pytestmark = pytest.mark.spark
 
 
+# Input frames come from Arrow tables: they plan as a LocalTableScan,
+# where a frame built from a Python list is an RDD scan whose every
+# action runs Python tasks.
+def _frame(spark, rows, schema: pa.Schema) -> DataFrame:
+    cols = list(zip(*rows)) if rows else [[] for _ in schema]
+    return spark.createDataFrame(pa.table(
+        [pa.array(c, f.type) for c, f in zip(cols, schema)], schema=schema
+    ))
+
+
 def _docs(spark, rows):
-    return spark.createDataFrame(rows, "doc_id LONG, text STRING")
+    return _frame(spark, rows, pa.schema([("doc_id", pa.int64()), ("text", pa.string())]))
+
+
+def _pairs(spark, rows, id_type=pa.int64()):
+    return _frame(spark, rows, pa.schema([("doc_a", id_type), ("doc_b", id_type)]))
 
 
 def test_shingles_short_docs_yield_none(spark):
@@ -218,9 +233,8 @@ def connected_components(
 
 def test_connected_components_chain_triangle_and_pair(spark):
     # chain 1-2-3-4 (diameter 3), triangle 10-11-12, isolated pair 20-21
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (10, 12), (20, 21)],
-        schema="doc_a LONG, doc_b LONG",
+    pairs = _pairs(
+        spark, [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (10, 12), (20, 21)]
     )
     got = {
         r.doc_id: (r.cluster_id, r.n_members)
@@ -237,9 +251,7 @@ def test_connected_components_raises_when_round_capped(spark, monkeypatch):
     # a 64-node path needs >1 star round; max_rounds=1 on the shuffle
     # loop must not silently return a partial labeling
     monkeypatch.setattr(dedup, "_DRIVER_MAX_PAIRS", 0)
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(1, 64)], schema="doc_a LONG, doc_b LONG"
-    )
+    pairs = _pairs(spark, [(i, i + 1) for i in range(1, 64)])
     with pytest.raises(RuntimeError):
         dedup.connected_components_star(pairs, max_rounds=1)
 
@@ -260,20 +272,20 @@ def _random_graph():
 
 # (id type, pairs, expected rows or None for "as the min-label reference")
 _COMPONENT_CASES = {
-    "random": ("LONG", _random_graph(), None),
-    "empty": ("LONG", [], None),
-    "self_pair": ("LONG", [(5, 5), (1, 2), (2, 2)], None),
+    "random": (pa.int64(), _random_graph(), None),
+    "empty": (pa.int64(), [], None),
+    "self_pair": (pa.int64(), [(5, 5), (1, 2), (2, 2)], None),
     "duplicate_and_reversed": (
-        "LONG", [(1, 2), (2, 1), (1, 2), (3, 4), (4, 3), (2, 3), (9, 8)], None
+        pa.int64(), [(1, 2), (2, 1), (1, 2), (3, 4), (4, 3), (2, 3), (9, 8)], None
     ),
     # a NULL side contributes only its non-NULL side, as a node (the
     # reference above would make NULL a node of its own)
     "null_side": (
-        "LONG",
+        pa.int64(),
         [(1, None), (None, 2), (None, None), (3, 4), (4, None)],
         [(1, 1, 1), (2, 2, 1), (3, 3, 2), (4, 3, 2)],
     ),
-    "int_ids": ("INT", [(7, 3), (3, 1), (20, 21)], None),
+    "int_ids": (pa.int32(), [(7, 3), (3, 1), (20, 21)], None),
 }
 
 
@@ -283,7 +295,7 @@ def test_star_components_equal_label_propagation(spark, monkeypatch, path, case)
     from collections import Counter
 
     id_type, pairs, rows = _COMPONENT_CASES[case]
-    df = spark.createDataFrame(pairs, schema=f"doc_a {id_type}, doc_b {id_type}")
+    df = _pairs(spark, pairs, id_type)
     if rows is None:
         rows = connected_components(df, max_rounds=50).collect()
     expected = Counter(tuple(r) for r in rows)
@@ -308,10 +320,7 @@ def test_small_pair_set_labels_on_driver(spark):
     # the only work, and the result is a local relation with no shuffle
     # (the large-star/small-star loop runs dozens of jobs here)
     sc = spark.sparkContext
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(30)] + [(100, 101)],
-        schema="doc_a LONG, doc_b LONG",
-    ).repartition(8)
+    pairs = _pairs(spark, [(i, i + 1) for i in range(30)] + [(100, 101)]).repartition(8)
     sc.setJobGroup("cc-driver-probe", "connected components job-count probe")
     try:
         out = dedup.connected_components_star(pairs)

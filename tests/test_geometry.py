@@ -8,6 +8,7 @@ including BOUNDARY / collinear / endpoint / empty-polygon cases.
 import math
 
 import numpy as np
+import pyarrow as pa
 import pytest
 
 from osmgraft import cells
@@ -155,7 +156,7 @@ def test_cover_compact_preserves_coverage():
     p = Polygon(1, "sq", [square(0, 0, 50_000_000)])
     level = 8
     cov = polygon_cover(p, level)
-    comp = polygon_cover(p, level, compacted=True)
+    comp = cells.compact(cov)
     assert set(cells.uncompact(comp, level).tolist()) == set(cov.tolist())
     assert comp.size <= cov.size
 
@@ -261,16 +262,19 @@ def _refine_points(polys, level):
     return sorted(pts)
 
 
-def _refine_case(spark, polys, level, **kw):
+def _refine_case(spark, polys, level):
     """spatial_join(keep_position=True) rows vs the oracle's non-OUTSIDE
     (point, boundary, position) triples."""
     from osmgraft.join import spatial_join
 
     pts = _refine_points(polys, level)
-    df = spark.createDataFrame(
-        [(i, x, y) for i, (x, y) in enumerate(pts)], "pid LONG, lon_e7 LONG, lat_e7 LONG"
-    )
-    rows = spatial_join(spark, df, polys, level=level, keep_position=True, **kw).select(
+    xs, ys = zip(*pts)
+    df = spark.createDataFrame(pa.table({
+        "pid": pa.array(range(len(pts)), pa.int64()),
+        "lon_e7": pa.array(xs, pa.int64()),
+        "lat_e7": pa.array(ys, pa.int64()),
+    }))
+    rows = spatial_join(spark, df, polys, level=level, keep_position=True).select(
         "pid", "boundary_id", "position"
     ).collect()
     got = [(r.pid, r.boundary_id, r.position) for r in rows]
@@ -287,17 +291,13 @@ def _refine_case(spark, polys, level, **kw):
 
 @pytest.mark.spark
 @pytest.mark.parametrize(
-    "level, kw, many",
-    [
-        (9, {}, False),
-        (9, {"compact_cover": True}, False),
-        (6, {"strategy": "sortmerge"}, False),
-        (9, {}, True),
-    ],
-    ids=["broadcast", "compact", "sortmerge", "many"],
+    "level, many",
+    [(9, False), (6, False), (9, True)],
+    ids=["broadcast", "level6", "many"],
 )
-def test_sql_refine_matches_scalar_oracle(spark, level, kw, many):
-    """``many``: more than 64 polygons, whose cover comes from the same
+def test_sql_refine_matches_scalar_oracle(spark, level, many):
+    """``level6``: coarser cells, so each carries more segments.
+    ``many``: more than 64 polygons, whose cover comes from the same
     driver builder."""
     from osmgraft import synth
 
@@ -305,4 +305,4 @@ def test_sql_refine_matches_scalar_oracle(spark, level, kw, many):
     if many:
         polys = [p for p in polys if p.boundary_id != 7]
         polys += synth.boundaries_many(64)
-    _refine_case(spark, polys, level, **kw)
+    _refine_case(spark, polys, level)

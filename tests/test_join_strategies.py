@@ -1,6 +1,9 @@
-"""Physical-strategy equivalence: broadcast vs salted sort-merge vs
-compacted-cover joins must produce identical match sets (the skew /
-salting test of SURVEY §5.5 — the fixture is 80% clustered in 3 cells).
+"""Spatial-join invariants on skewed input: the fixture really is
+skewed (80% of points in 3 cells, SURVEY §5.5), the match multiset does
+not depend on how the points are partitioned, and the cover carries
+both INSIDE and segment rows.  The join has one physical shape (a
+broadcast cover, so hot cells never meet a shuffle by key); the kNN
+job-count probe lives here too.
 """
 
 from collections import Counter
@@ -20,7 +23,7 @@ def entities(spark, sf_dir):
 
 
 def _matches(df):
-    # a multiset: a strategy that emits a match twice must not pass
+    # a multiset: a join that emits a match twice must not pass
     return Counter((r.doc_id, r.ent_idx, r.boundary_id) for r in df.collect())
 
 
@@ -42,44 +45,6 @@ def test_skew_distribution_is_real(spark, entities):
     assert top3 > 0.5 * total, "fixture lost its hot-cell skew"
 
 
-def test_sortmerge_salted_equals_broadcast(spark, entities):
-    polys = synth.boundaries()
-    base = _matches(
-        spatial_join(spark, entities, polys).select(
-            "doc_id", "ent_idx", "boundary_id"
-        )
-    )
-    salted = _matches(
-        spatial_join(
-            spark, entities, polys, strategy="sortmerge", salt_buckets=4
-        ).select("doc_id", "ent_idx", "boundary_id")
-    )
-    assert salted == base
-    # forced-threshold variant: every cluster cell is hot
-    salted2 = _matches(
-        spatial_join(
-            spark, entities, polys, strategy="sortmerge",
-            salt_buckets=8, hot_cell_threshold=5,
-        ).select("doc_id", "ent_idx", "boundary_id")
-    )
-    assert salted2 == base
-
-
-def test_compacted_cover_equals_full(spark, entities):
-    polys = synth.boundaries()
-    base = _matches(
-        spatial_join(spark, entities, polys).select(
-            "doc_id", "ent_idx", "boundary_id"
-        )
-    )
-    comp = _matches(
-        spatial_join(spark, entities, polys, compact_cover=True).select(
-            "doc_id", "ent_idx", "boundary_id"
-        )
-    )
-    assert comp == base
-
-
 def test_repartition_invariance(spark, entities):
     """Deterministic output under repartition (SURVEY §5.4)."""
     polys = synth.boundaries()
@@ -98,19 +63,16 @@ def test_repartition_invariance(spark, entities):
 
 def test_cover_df_emits_inside_and_segment_rows(spark):
     """A box wide enough to have cells no segment meets yields INSIDE
-    rows (no segments) next to segment rows, compacted or not."""
+    rows (no segments) next to segment rows."""
     from osmgraft.geometry import Polygon, Ring
     from osmgraft.join import DEFAULT_COVER_LEVEL, cover_df
 
     polys = synth.boundaries() + [
         Polygon(50, "wide", [Ring([0, 10**8, 10**8, 0], [0, 0, 10**8, 10**8])])
     ]
-    for compacted in (False, True):
-        rows = cover_df(
-            spark, polys, DEFAULT_COVER_LEVEL, compacted=compacted
-        ).collect()
-        assert any(r.inside for r in rows) and any(not r.inside for r in rows)
-        assert all(bool(r.segs) != r.inside for r in rows)
+    rows = cover_df(spark, polys, DEFAULT_COVER_LEVEL).collect()
+    assert any(r.inside for r in rows) and any(not r.inside for r in rows)
+    assert all(bool(r.segs) != r.inside for r in rows)
 
 
 def test_knn_certification_fused_job_count(spark, sf_dir):

@@ -95,28 +95,15 @@ def _plan_node_counts(spark, df):
         spark.conf.set("spark.sql.adaptive.enabled", prev)
 
 
-@pytest.mark.parametrize(
-    "kw, point_scans, nested_loops, many",
-    [
-        ({}, 1, 0, False),
-        # points: the join side plus the 2% hot-cell sample (its
-        # broadcast is built once and reused by both salting joins);
-        # the one nested loop replicates the cover into the salt buckets
-        ({"strategy": "sortmerge", "salt_buckets": 4}, 2, 1, False),
-        ({"compact_cover": True}, 1, 0, False),
-        ({}, 1, 0, True),
-    ],
-    ids=["broadcast", "sortmerge", "compact", "many"],
-)
-def test_empty_polygon_attach_is_single_pass(
-    spark, entities, kw, point_scans, nested_loops, many
-):
-    """Every strategy attaches empty (match-everything) polygons inside
-    its one cover-join pass: the plan has no Union of a second branch
-    over the points subtree, the refine runs in the JVM (no Python
-    node), and the empty-boundary rows still carry position == INSIDE
-    via the refine column.  ``many``: more than 64 polygons, whose
-    cover subtree holds no Python node either."""
+@pytest.mark.parametrize("many", [False, True], ids=["broadcast", "many"])
+def test_empty_polygon_attach_is_single_pass(spark, entities, many):
+    """The join attaches empty (match-everything) polygons inside its
+    one broadcast-cover pass: the plan scans the points once, has one
+    broadcast hash join and no sort-merge join, no Union of a second
+    branch over the points subtree, and no Python node (the refine runs
+    in the JVM); every point matches each empty polygon with position
+    == INSIDE.  ``many``: more than 64 polygons, whose cover subtree
+    holds no Python node either."""
     from osmgraft.geometry import INSIDE, Polygon
 
     if many:
@@ -126,72 +113,49 @@ def test_empty_polygon_attach_is_single_pass(
     assert any(p.n_segments == 0 for p in polys)  # each set has a 'world'
     # plan shape on the default (position-dropped) path — the shape the
     # bench/gate queries run
-    nodes = _plan_node_counts(spark, spatial_join(spark, entities, polys, **kw))
+    nodes = _plan_node_counts(spark, spatial_join(spark, entities, polys))
     assert nodes["Union"] == 0
     for py_node in PYTHON_NODES:
         assert nodes[py_node] == 0, py_node
-    assert nodes["InMemoryTableScan"] == point_scans
-    assert nodes["BroadcastNestedLoopJoin"] == nested_loops
-    res = spatial_join(spark, entities, polys, keep_position=True, **kw)
+    assert nodes["InMemoryTableScan"] == 1
+    assert nodes["BroadcastNestedLoopJoin"] == 0
+    assert nodes["SortMergeJoin"] == 0
+    assert nodes["BroadcastHashJoin"] == 1
+    res = spatial_join(spark, entities, polys, keep_position=True)
     empty_ids = {p.boundary_id for p in polys if p.n_segments == 0}
     empty_rows = res.filter(
         F.col("boundary_id").isin(*empty_ids)
-    ).select("position").distinct().collect()
-    assert {r.position for r in empty_rows} == {INSIDE}
+    ).groupBy("boundary_id", "position").count().collect()
+    n_pts = entities.count()
+    assert {(r.boundary_id, r.position, r["count"]) for r in empty_rows} == {
+        (i, INSIDE, n_pts) for i in empty_ids
+    }
 
 
-@pytest.mark.parametrize(
-    "kw",
-    [{}, {"strategy": "sortmerge", "salt_buckets": 4}, {"compact_cover": True}],
-    ids=["broadcast", "sortmerge", "compact"],
-)
-def test_spatial_join_creates_no_broadcast_variable(spark, entities, monkeypatch, kw):
+@pytest.mark.parametrize("many", [False, True], ids=["broadcast", "many"])
+def test_spatial_join_creates_no_broadcast_variable(spark, entities, monkeypatch, many):
     """The refine reads its geometry from the cover join, not from a
     ``SparkContext.broadcast`` that nothing could release: building and
-    running the join for every strategy creates none."""
+    running the join creates none, for a few polygons or for more than
+    64."""
     def refuse(self, value):
         raise AssertionError("spatial_join created a broadcast variable")
 
     monkeypatch.setattr(type(spark.sparkContext), "broadcast", refuse)
-    polys = synth.boundaries()
-    rows = spatial_join(spark, entities, polys, **kw).select("boundary_id").collect()
+    polys = synth.boundaries() + (synth.boundaries_many(70) if many else [])
+    rows = spatial_join(spark, entities, polys).select("boundary_id").collect()
     assert {r.boundary_id for r in rows} >= {1, 5}
 
 
-@pytest.mark.parametrize(
-    "kw",
-    [{}, {"strategy": "sortmerge", "salt_buckets": 4}, {"compact_cover": True}],
-    ids=["broadcast", "sortmerge", "compact"],
-)
-def test_only_empty_polygons_match_every_point(spark, entities, kw):
-    """A boundary set with no segments at all gives an empty cover; every
-    strategy still matches every point to each empty polygon."""
+def test_only_empty_polygons_match_every_point(spark, entities):
+    """A boundary set with no segments at all gives an empty cover; the
+    join still matches every point to each empty polygon."""
     from osmgraft.geometry import Polygon
 
     polys = [Polygon(998, "world", []), Polygon(999, "world2", [])]
-    got = spatial_join(spark, entities, polys, **kw).groupBy("boundary_id").count()
+    got = spatial_join(spark, entities, polys).groupBy("boundary_id").count()
     n = entities.count()
     assert {(r.boundary_id, r["count"]) for r in got.collect()} == {(998, n), (999, n)}
-
-
-def test_empty_polygon_attach_with_distributed_cover(spark, sf_dir):
-    """The inline empty-attach also composes with a >64-polygon cover,
-    and the broadcast and sortmerge strategies agree on the same mixed
-    set."""
-    from osmgraft.geometry import Polygon
-
-    ents = synth.geo_entities_df(spark, sf_dir).cache()
-    polys = synth.boundaries_many(70) + [Polygon(999, "world", [])]
-    got = spatial_join(spark, ents, polys).select(
-        "doc_id", "ent_idx", "boundary_id"
-    )
-    n_pts = ents.count()
-    assert got.filter(F.col("boundary_id") == 999).count() == n_pts
-    sm = spatial_join(spark, ents, polys, strategy="sortmerge").select(
-        "doc_id", "ent_idx", "boundary_id"
-    )
-    assert Counter(map(tuple, got.collect())) == Counter(map(tuple, sm.collect()))
-    ents.unpersist()
 
 
 def _knn_reference(P, Q, k):
