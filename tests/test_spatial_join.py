@@ -147,6 +147,28 @@ def test_spatial_join_creates_no_broadcast_variable(spark, entities, monkeypatch
     assert {r.boundary_id for r in rows} >= {1, 5}
 
 
+def test_empty_polygon_attach_with_distributed_cover(spark, entities):
+    """The inline empty-attach also composes with a >64-polygon cover:
+    on the same mixed set the join equals the scalar point-in-polygon
+    oracle row for row, with every point matched to the empty polygon."""
+    from osmgraft.geometry import Polygon
+
+    polys = synth.boundaries_many(70) + [Polygon(999, "world", [])]
+    got = spatial_join(spark, entities, polys).select(
+        "doc_id", "ent_idx", "boundary_id"
+    )
+    got_rows = Counter(map(tuple, got.collect()))
+    pts = entities.select("doc_id", "ent_idx", "lon_e7", "lat_e7").collect()
+    assert sum(1 for _, _, b in got_rows.elements() if b == 999) == len(pts)
+    xs = np.array([r.lon_e7 for r in pts], dtype=np.int64)
+    ys = np.array([r.lat_e7 for r in pts], dtype=np.int64)
+    want = Counter()
+    for p in polys:
+        for i in np.nonzero(pip_matches(xs, ys, p))[0]:
+            want[(pts[int(i)].doc_id, pts[int(i)].ent_idx, p.boundary_id)] += 1
+    assert got_rows == want
+
+
 def test_only_empty_polygons_match_every_point(spark, entities):
     """A boundary set with no segments at all gives an empty cover; the
     join still matches every point to each empty polygon."""
