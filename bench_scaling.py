@@ -79,16 +79,15 @@ bw_sec = time.time() - t
 # compilation, whole-stage codegen class-loading and Arrow setup —
 # one-time costs a long-lived executor amortizes to zero, but which
 # would bias the shorter 4N-core run if timed.
-# engine/projection variant is pinned and reported: campaigns are only
-# comparable within a variant (r2 campaigns K-Q were arrow-full; the
-# r3+ deployment default is the jvm engine)
-engine = os.environ.get("SPARK_GRAFT_SCALING_ENGINE", "jvm")
+# the projection variant is pinned and reported: campaigns are only
+# comparable within a variant (r2 campaigns K-Q ran the since-deleted
+# arrow engine; every later one the codegen path, reported as "jvm-...")
 pruned = os.environ.get("SPARK_GRAFT_SCALING_PRUNED", "0") == "1"
 cols = ("doc_id", "ent_idx", "lat_e7", "lon_e7") if pruned else None
 dt, n_out = None, 0
 for _ in range(2):
     t0 = time.time()
-    ents = extract_entities(pages, columns=cols, engine=engine).persist(
+    ents = extract_entities(pages, columns=cols).persist(
         StorageLevel.MEMORY_AND_DISK)
     # eager-materialize before the join: a cold cache lets the join's
     # two branches race and re-run the extraction (bimodal timings)
@@ -102,7 +101,7 @@ for _ in range(2):
     ents.unpersist()
     dt = d if dt is None or d < dt else dt
 print(json.dumps({"cores": cores, "n_pages": n_pages, "n_out": n_out,
-                  "variant": engine + ("-pruned" if pruned else "-full"),
+                  "variant": "jvm" + ("-pruned" if pruned else "-full"),
                   "sec": round(dt, 3),
                   "pages_per_sec": round(n_pages / dt, 1),
                   "cpu_probe_sec": round(cpu_sec, 3),

@@ -110,6 +110,15 @@ def mercator_tile(lon_e7, lat_e7, z):
     )
 
 
+def viewport_tiles(min_lon_e7, min_lat_e7, max_lon_e7, max_lat_e7, z):
+    """Inclusive zoom-z tile ranges ``(tx0, tx1, ty0, ty1)`` covering a
+    lon/lat viewport (the axis->tile map is monotone, so the corners
+    bound the range)."""
+    tx0, ty_a = mercator_tile(np.int64(min_lon_e7), np.int64(min_lat_e7), z)
+    tx1, ty_b = mercator_tile(np.int64(max_lon_e7), np.int64(max_lat_e7), z)
+    return int(tx0), int(tx1), int(min(ty_a, ty_b)), int(max(ty_a, ty_b))
+
+
 def parent(cell, steps: int = 1):
     level, y, x = cell_decode(cell)
     nl = level - steps
@@ -223,10 +232,18 @@ def cell_bounds_e7(cell):
 # ---------------------------------------------------------------------------
 
 
-def axis_tile_col(v_e7: "Column", level: int) -> "Column":
-    t = ((v_e7 + F.lit(HALF_WORLD)) * F.lit(int(1) << level)) / F.lit(WORLD)
-    t = F.floor(t).cast("long")
-    return F.greatest(F.lit(0), F.least(F.lit((1 << level) - 1), t))
+def axis_tile_col(v_e7: "Column", level: "int | Column") -> "Column":
+    """Spark-side :func:`_axis_to_tile`: ``((v + HALF_WORLD) << level)
+    DIV WORLD`` in int64, clamped to [0, 2^level - 1]; ``level`` is an
+    int or a per-row Column.  A NULL ``v_e7`` lands in the last tile,
+    2^level - 1: ``least``/``greatest`` skip NULLs, as DuckDB's do, so
+    the tile oracles expect it."""
+    if not isinstance(level, Column):
+        level = F.lit(level)
+    n = F.call_function("shiftleft", F.lit(1).cast("long"), level)
+    v = v_e7 + F.lit(HALF_WORLD).cast("long")
+    t = F.call_function("div", v * n, F.lit(WORLD))
+    return F.greatest(F.lit(0), F.least(n - 1, t))
 
 
 def cell_col(x_idx: "Column", y_idx: "Column", level: int) -> "Column":
@@ -266,6 +283,6 @@ def mercator_y_col(lat_e7: "Column") -> "Column":
     ).cast("long")
 
 
-def mercator_tile_cols(lon_e7: "Column", lat_e7: "Column", z: int):
+def mercator_tile_cols(lon_e7: "Column", lat_e7: "Column", z: "int | Column"):
     return axis_tile_col(lon_e7, z), axis_tile_col(mercator_y_col(lat_e7), z)
 

@@ -348,11 +348,11 @@ def passage_dedup(df: DataFrame, chunk: int = 8) -> DataFrame:
 # 0.8 s of it), against 77 s and 151 s for the shuffle loop, which needs
 # dozens of jobs even for a handful of pairs.
 _DRIVER_MAX_PAIRS = 1 << 20
+# Round cap of the large-star / small-star loop: O(log n) rounds suffice.
+_STAR_MAX_ROUNDS = 30
 
 
-def connected_components_star(
-    pairs: DataFrame, max_rounds: int = 30
-) -> DataFrame:
+def connected_components_star(pairs: DataFrame) -> DataFrame:
     """Near-dup cluster assignment: (doc_id, cluster_id, n_members) for
     every non-NULL doc appearing in a candidate pair, where
     ``cluster_id`` is the minimum doc_id of the connected component —
@@ -433,7 +433,7 @@ def connected_components_star(
         )
 
     n_edges = edges.count()
-    for _ in range(max_rounds):
+    for _ in range(_STAR_MAX_ROUNDS):
         edges2 = _star(_star(edges, large=True), large=False).localCheckpoint(
             eager=True
         )
@@ -453,7 +453,7 @@ def connected_components_star(
         if converged:
             break
     else:
-        raise RuntimeError(f"not converged after {max_rounds} rounds")
+        raise RuntimeError(f"not converged after {_STAR_MAX_ROUNDS} rounds")
 
     labels = (
         nodes.join(

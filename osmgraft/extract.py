@@ -7,11 +7,10 @@ extracted ``mention`` bytes are exact substrings of the page text,
 never re-encoded (the lossless lesson of the reference's strict UTF
 pipeline, ``osmc/utf.c:95-165``).
 
-Two equality-tested engines behind :func:`extract_entities`:
-``jvm`` (default — pure whole-stage codegen for the well-formed
-mention grammar) and ``arrow`` (``mapInPandas`` streaming parser,
-UDTF-shaped, Arrow-batched; input_hint forbids per-row Python — kept
-for irregular real-world HTML).
+One extraction path, :func:`extract_entities`: a ``regexp_extract_all``
+pass that stays inside whole-stage codegen (no Python, no Arrow
+exchange).  ``tests/test_extract.py`` keeps a per-row Python parser as
+the reference it is equality-tested against.
 
 Mention grammar: ``@place{name|lat_e7|lon_e7}`` with integer e7
 coordinates (reference fixed-point contract, ``osmc/MapperTypes.h:28``).
@@ -19,17 +18,9 @@ coordinates (reference fixed-point contract, ``osmc/MapperTypes.h:28``).
 
 from __future__ import annotations
 
-import re
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-MENTION_RE = re.compile(
-    rb"@place\{([^{}|]*)\|(-?\d+)\|(-?\d+)\}"
-)
 
 ENTITY_SCHEMA = T.StructType([
     T.StructField("url", T.StringType()),
@@ -41,55 +32,7 @@ ENTITY_SCHEMA = T.StructType([
     T.StructField("mention", T.BinaryType()),  # byte-identical slice
 ])
 
-
-_FIELD_DTYPE = {
-    "url": "object",
-    "doc_id": "int64",
-    "ent_idx": "int32",
-    "name": "object",
-    "lat_e7": "int64",
-    "lon_e7": "int64",
-    "mention": "object",
-}
-
-
-def _make_extractor(out_cols: tuple[str, ...]):
-    """Batch extractor emitting only ``out_cols`` — manual projection
-    pushdown through the Arrow boundary (Catalyst cannot prune columns
-    produced by ``mapInPandas``, so unrequested output columns must
-    never be built or shipped)."""
-    want = frozenset(out_cols)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols: dict[str, list] = {c: [] for c in out_cols}
-            doc_ids = pdf["doc_id"] if "doc_id" in pdf.columns else [-1] * len(pdf)
-            urls = pdf["url"] if "url" in pdf.columns else [None] * len(pdf)
-            for url, doc_id, text in zip(urls, doc_ids, pdf["text"]):
-                raw = text.encode("utf-8")  # slice in byte space, decode names only
-                for i, m in enumerate(MENTION_RE.finditer(raw)):
-                    if "url" in want:
-                        cols["url"].append(url)
-                    if "doc_id" in want:
-                        cols["doc_id"].append(doc_id)
-                    if "ent_idx" in want:
-                        cols["ent_idx"].append(i)
-                    if "name" in want:
-                        cols["name"].append(m.group(1).decode("utf-8"))
-                    if "lat_e7" in want:
-                        cols["lat_e7"].append(int(m.group(2)))
-                    if "lon_e7" in want:
-                        cols["lon_e7"].append(int(m.group(3)))
-                    if "mention" in want:
-                        cols["mention"].append(m.group(0))
-            yield pd.DataFrame(
-                {c: pd.Series(v, dtype=_FIELD_DTYPE[c]) for c, v in cols.items()}
-            )
-
-    return run
-
-
-_extract_batches = _make_extractor(tuple(f.name for f in ENTITY_SCHEMA.fields))
+_MENTION_SQL_RE = r"@place\{([^{}|]*)\|(-?\d+)\|(-?\d+)\}"
 
 
 def _resolve_columns(columns: tuple[str, ...] | None) -> list[str]:
@@ -104,10 +47,9 @@ def _resolve_columns(columns: tuple[str, ...] | None) -> list[str]:
 
 
 def _check_passthrough(pages: DataFrame, out_fields: list[str]) -> None:
-    """Both engines fail identically (plan time, clear message) when a
-    requested passthrough column is missing from the input — previously
-    the jvm path null-filled ``url`` while the arrow path failed at
-    analysis, an equality-tested-engine divergence."""
+    """Fail at plan time, with a clear message, when a requested
+    passthrough column is missing from the input (instead of
+    null-filling it)."""
     missing = [
         c for c in ("url", "doc_id") if c in out_fields and c not in pages.columns
     ]
@@ -126,111 +68,47 @@ def extract_entities(
 ) -> DataFrame:
     """pages(url, doc_id, text, ...) -> geo entity rows (0..N per page).
 
-    ``engine="jvm"`` (default) runs the extraction entirely inside
-    whole-stage codegen (:func:`extract_entities_jvm`) — the right path
-    for the well-formed mention grammar, where the regex semantics are
-    expressible as ``regexp_extract_all``.  ``engine="arrow"`` is the
-    mapInPandas streaming parser (:func:`extract_entities_arrow`) —
-    keep it for irregular real-world HTML where extraction needs
-    imperative parsing.  The two paths are equality-tested, including
-    the byte-identity invariant on ``mention``.
+    The whole extraction stays inside whole-stage codegen
+    (``regexp_extract_all`` + ``posexplode``).  Byte-identity holds
+    because the mention is a regex match over the text: casting the
+    matched substring to binary reproduces its exact UTF-8 bytes.
 
-    ``columns`` is a projection pushed through either boundary: only
-    the requested output columns are computed and shipped (Catalyst
-    cannot prune mapInPandas output, and the zipped regexp arrays on
-    the JVM path are likewise built per requested field).  ``url`` +
-    ``mention`` are ~2/3 of the output bytes and most pipelines (e.g.
-    the tile cut) never read them.
-
-    .. versionchanged:: round 4
-       BREAKING for callers relying on null-fill: inputs missing a
-       requested passthrough column (``url``/``doc_id``) now raise
-       ``ValueError`` on BOTH engines.  Previously the jvm engine
-       null-filled where the arrow engine raised — the loud, identical
-       behavior replaces that silent divergence.
+    ``columns`` is a projection: only the requested output columns are
+    computed, and passthrough input columns that feed none of them are
+    not read.  ``url`` + ``mention`` are ~2/3 of the output bytes and
+    most pipelines (e.g. the tile cut) never read them.  Requesting a
+    passthrough column (``url``/``doc_id``) the input lacks raises
+    ``ValueError``.
     """
-    if engine == "jvm":
-        return extract_entities_jvm(pages, columns)
-    if engine == "arrow":
-        return extract_entities_arrow(pages, columns)
-    raise ValueError(f"unknown extraction engine {engine!r}")
-
-
-def extract_entities_arrow(
-    pages: DataFrame, columns: tuple[str, ...] | None = None
-) -> DataFrame:
-    """Arrow/mapInPandas extraction path (UDTF-shaped streaming parser).
-
-    Input columns that feed no requested output (e.g. ``url`` when no
-    provenance is asked for) are not shipped into Python, and
-    unrequested output columns are never built — manual projection
-    pushdown through the Arrow boundary.
-    """
+    # ``engine`` names the one path; it stays as a keyword only because
+    # bench.py passes engine="jvm".
+    if engine != "jvm":
+        raise ValueError(f"unknown extraction engine {engine!r}")
     out_fields = _resolve_columns(columns)
     _check_passthrough(pages, out_fields)
-    need_in = {"text"}
-    if "url" in out_fields:
-        need_in.add("url")
-    if "doc_id" in out_fields:
-        need_in.add("doc_id")
-    in_cols = [c for c in ("url", "doc_id", "text") if c in pages.columns and c in need_in]
-    schema = T.StructType([f for f in ENTITY_SCHEMA.fields if f.name in out_fields])
-    return pages.select(*in_cols).mapInPandas(_make_extractor(tuple(out_fields)), schema)
-
-
-_MENTION_SQL_RE = r"@place\{([^{}|]*)\|(-?\d+)\|(-?\d+)\}"
-
-
-def extract_entities_jvm(
-    pages: DataFrame, columns: tuple[str, ...] | None = None
-) -> DataFrame:
-    """JVM fast path for the well-formed mention grammar: the whole
-    extraction stays inside whole-stage codegen (``regexp_extract_all``
-    + ``arrays_zip`` + ``posexplode``) — no Python, no Arrow exchange.
-
-    Byte-identity holds because the mention is a regex match over the
-    text: casting the matched substring to binary reproduces its exact
-    UTF-8 bytes.  ``columns`` prunes both the zipped regexp arrays
-    (one ``regexp_extract_all`` per requested derived field) and the
-    passthrough input columns.
-    """
-    out_fields = _resolve_columns(columns)
-    _check_passthrough(pages, out_fields)
-    # ONE regex pass (r6, guide §1.2): extract the whole match (group 0)
-    # once, then derive name/lat/lon by slicing the short mention string
-    # — the previous shape ran one full-text regexp_extract_all per
-    # requested derived field (2-3 passes over every page).  The match
-    # grammar is rigid ("@place{" name "|" lat "|" lon "}", name matched
-    # [^{}|]*), so substring(8 .. len-8) + split('|') reproduces the
-    # regex groups exactly (equality-tested against the arrow engine and
-    # measured 0.97 -> 0.79 s per flagship extract pass at sf1.0).
-    passthrough = [
-        c for c in ("url", "doc_id") if c in pages.columns and c in out_fields
-    ]
+    # One regex pass: extract the whole match (group 0) once, then
+    # derive name/lat/lon by slicing the short mention string.  The
+    # match grammar is rigid ("@place{" name "|" lat "|" lon "}", name
+    # matched [^{}|]*), so substring(8 .. len-8) + split('|') reproduces
+    # the regex groups exactly (measured 0.97 -> 0.79 s per flagship
+    # extract pass at sf1.0 against one regex pass per derived field).
+    passthrough = [c for c in ("url", "doc_id") if c in out_fields]
     mentions = F.regexp_extract_all("text", F.lit(_MENTION_SQL_RE), F.lit(0))
     out = pages.select(
         *passthrough, F.posexplode(mentions).alias("ent_idx", "_m")
     )
-    needs_inner = any(c in out_fields for c in ("name", "lat_e7", "lon_e7"))
-    if needs_inner:
+    if any(c in out_fields for c in ("name", "lat_e7", "lon_e7")):
         out = out.withColumn(
             "_in",
             F.split(F.expr("substring(_m, 8, length(_m) - 8)"), r"\|"),
         )
-    exprs = []
-    for c in out_fields:
-        if c == "url":
-            exprs.append(F.col("url"))
-        elif c == "doc_id":
-            exprs.append(F.col("doc_id").cast("long").alias("doc_id"))
-        elif c == "ent_idx":
-            exprs.append(F.col("ent_idx").cast("int").alias("ent_idx"))
-        elif c == "name":
-            exprs.append(F.element_at("_in", 1).alias("name"))
-        elif c == "lat_e7":
-            exprs.append(F.element_at("_in", 2).cast("long").alias("lat_e7"))
-        elif c == "lon_e7":
-            exprs.append(F.element_at("_in", 3).cast("long").alias("lon_e7"))
-        elif c == "mention":
-            exprs.append(F.col("_m").cast("binary").alias("mention"))
-    return out.select(*exprs)
+    exprs = {
+        "url": F.col("url"),
+        "doc_id": F.col("doc_id").cast("long"),
+        "ent_idx": F.col("ent_idx").cast("int"),
+        "name": F.element_at("_in", 1),
+        "lat_e7": F.element_at("_in", 2).cast("long"),
+        "lon_e7": F.element_at("_in", 3).cast("long"),
+        "mention": F.col("_m").cast("binary"),
+    }
+    return out.select(*(exprs[c].alias(c) for c in out_fields))

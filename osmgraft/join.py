@@ -163,6 +163,7 @@ def spatial_join(
 KNN_LEVEL = 6  # a 64 x 64 grid; one WORLD scale on both axes, so cells are square
 _KNN_SIDE = 1 << KNN_LEVEL
 _KNN_PAIR_BLOCK = 1 << 20  # query-cell x occupied-cell distances per numpy block
+_BRUTE_MAX_QUERIES = 8192  # largest query set the brute route collects
 
 # the brute route's query frame comes from an Arrow table, which plans
 # as a LocalTableScan; a frame built from a Python list is an RDD scan
@@ -259,7 +260,6 @@ def knn(
     points: DataFrame,
     k: int,
     brute_max_pairs: int = 64_000_000,
-    brute_max_queries: int = 8192,
 ) -> DataFrame:
     """For each query row (qid, lon_e7, lat_e7) the k nearest point rows
     (pid, lon_e7, lat_e7) by exact squared euclidean distance in e7 units
@@ -301,10 +301,10 @@ def knn(
     if est_bytes is not None and est_bytes // 8 + 1 <= brute_max_pairs:
         q_rows = (
             queries.select("qid", "lon_e7", "lat_e7")
-            .limit(brute_max_queries + 1)
+            .limit(_BRUTE_MAX_QUERIES + 1)
             .toArrow()
         )
-        if q_rows.num_rows <= brute_max_queries and (
+        if q_rows.num_rows <= _BRUTE_MAX_QUERIES and (
             max(q_rows.num_rows, 1) * (est_bytes // 8 + 1) <= brute_max_pairs
         ):
             # a NULL distance would sort first in the top-k window

@@ -137,19 +137,7 @@ def geo_tile_assign(spark, sf_dir):
 _VP = (-300_000_000, 100_000_000, 300_000_000, 550_000_000)
 
 
-def _vp_tiles():
-    import numpy as np
-
-    tx0 = int(cells._axis_to_tile(np.int64(_VP[0]), 12))
-    tx1 = int(cells._axis_to_tile(np.int64(_VP[2]), 12))
-    my0 = int(cells.mercator_y_e7(np.int64(_VP[1])))
-    my1 = int(cells.mercator_y_e7(np.int64(_VP[3])))
-    ty0 = int(cells._axis_to_tile(np.int64(min(my0, my1)), 12))
-    ty1 = int(cells._axis_to_tile(np.int64(max(my0, my1)), 12))
-    return tx0, tx1, ty0, ty1
-
-
-_VP_TX0, _VP_TX1, _VP_TY0, _VP_TY1 = _vp_tiles()
+_VP_TX0, _VP_TX1, _VP_TY0, _VP_TY1 = cells.viewport_tiles(*_VP, 12)
 
 
 @_register(

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .cells import axis_tile_col, viewport_tiles
 from .geometry import Polygon, Ring
 
 E7 = 10_000_000
@@ -222,34 +223,15 @@ def viewport_query(
     4-D kd-trees (``osmc/2DTree.c``).  Here it is a z-partition prune +
     a tile-range predicate that Parquet row-group min/max stats satisfy
     because partitions are sorted by (tile_y, tile_x)."""
-    import numpy as np
-
-    from . import cells as C
-
-    tx0 = int(C._axis_to_tile(np.int64(min_lon_e7), z))
-    tx1 = int(C._axis_to_tile(np.int64(max_lon_e7), z))
-    my0 = int(C.mercator_y_e7(np.int64(min_lat_e7)))
-    my1 = int(C.mercator_y_e7(np.int64(max_lat_e7)))
-    ty0 = int(C._axis_to_tile(np.int64(min(my0, my1)), z))
-    ty1 = int(C._axis_to_tile(np.int64(max(my0, my1)), z))
+    tx0, tx1, ty0, ty1 = viewport_tiles(
+        min_lon_e7, min_lat_e7, max_lon_e7, max_lat_e7, z
+    )
     return (
         spark.read.parquet(store_path)
         .filter(F.col("z") == z)
         .filter(F.col("tile_x").between(tx0, tx1))
         .filter(F.col("tile_y").between(ty0, ty1))
     )
-
-
-def _tile_expr(col_expr: str, level: int) -> "F.Column":
-    """Exact int64 axis->tile mapping (same math as cells._axis_to_tile:
-    ((v + HALF_WORLD) << level) // WORLD, clamped); DIV on non-negative
-    longs truncates == floors, so no float path anywhere."""
-    from .cells import HALF_WORLD, WORLD
-
-    t = F.expr(
-        f"(({col_expr} + {HALF_WORLD}L) * {1 << level}L) DIV {WORLD}L"
-    )
-    return F.greatest(F.lit(0), F.least(F.lit((1 << level) - 1), t))
 
 
 def write_feature_store_4d(
@@ -271,11 +253,12 @@ def write_feature_store_4d(
     directories + Parquet row groups per level.  Indexing is in raw
     e7 lon/lat space, like the reference tree's raw int coords; the
     exact intersect predicate runs on the stored bbox ints."""
+    minx, miny, maxx, maxy = (F.col(c) for c in ("minx", "miny", "maxx", "maxy"))
     chain = None
     for lvl in range(max_level, -1, -1):
         fits = (
-            (_tile_expr("minx", lvl) == _tile_expr("maxx", lvl))
-            & (_tile_expr("miny", lvl) == _tile_expr("maxy", lvl))
+            (axis_tile_col(minx, lvl) == axis_tile_col(maxx, lvl))
+            & (axis_tile_col(miny, lvl) == axis_tile_col(maxy, lvl))
         )
         chain = F.when(fits, lvl) if chain is None else chain.when(fits, lvl)
     staged = features.withColumn("level", chain.otherwise(0).cast("int"))
@@ -284,8 +267,8 @@ def write_feature_store_4d(
     tx = F.lit(0).cast("long")
     ty = F.lit(0).cast("long")
     for lvl in range(max_level, 0, -1):
-        tx = F.when(F.col("level") == lvl, _tile_expr("minx", lvl)).otherwise(tx)
-        ty = F.when(F.col("level") == lvl, _tile_expr("miny", lvl)).otherwise(ty)
+        tx = F.when(F.col("level") == lvl, axis_tile_col(minx, lvl)).otherwise(tx)
+        ty = F.when(F.col("level") == lvl, axis_tile_col(miny, lvl)).otherwise(ty)
     staged = staged.withColumn("tile_x", tx).withColumn("tile_y", ty)
     (
         staged.repartition("level")

@@ -27,14 +27,21 @@ def tumbling_event_counts(
     events: DataFrame,
     window: str = "1 hour",
     watermark: str = "2 hours",
-    streaming: bool = False,
 ) -> DataFrame:
     """Tumbling-window counts + value sums per event_type.
 
-    Works identically on a batch or streaming DataFrame; in streaming
-    mode the watermark bounds state for late data.
+    Works identically on a batch or streaming DataFrame; on a streaming
+    one the watermark bounds state for late data.  A watermark needs a
+    TIMESTAMP event time, so a streaming TIMESTAMP_NTZ ``ts`` (the
+    events parquet's type) is windowed as a TIMESTAMP in the session
+    time zone and ``window_start`` is cast back to the input's type.
     """
-    src = events.withWatermark("ts", watermark) if streaming else events
+    ts_type = events.schema["ts"].dataType
+    src = events
+    if events.isStreaming:
+        src = events.withColumn("ts", F.col("ts").cast("timestamp")).withWatermark(
+            "ts", watermark
+        )
     return (
         src.groupBy(
             F.window("ts", window).alias("w"), F.col("event_type")
@@ -46,7 +53,7 @@ def tumbling_event_counts(
             .alias("sum_value"),
         )
         .select(
-            F.col("w.start").alias("window_start"),
+            F.col("w.start").cast(ts_type).alias("window_start"),
             "event_type",
             "n_events",
             "sum_value",

@@ -189,14 +189,15 @@ def explode_pyramid(features: DataFrame) -> DataFrame:
     """One row per (feature, z) for z in [minz, maxz] with tile coords —
     the tile-assignment stage (zoom-ranged kd-tree analog, 2DTree.h:17-22).
     """
-    out = features.withColumn("z", F.explode(F.sequence("minz", "maxz")))
-    # per-z tile coordinates via exact integer mercator gridding
-    merc = cells.mercator_y_col(F.col("lat_e7"))
-    n = F.expr("shiftleft(CAST(1 AS BIGINT), z)")
-    tx = F.floor(((F.col("lon_e7") + F.lit(cells.HALF_WORLD)) * n) / F.lit(cells.WORLD))
-    ty = F.floor(((merc + F.lit(cells.HALF_WORLD)) * n) / F.lit(cells.WORLD))
-    clamp = lambda c: F.greatest(F.lit(0).cast("long"), F.least(n - 1, c.cast("long")))  # noqa: E731
-    return out.withColumn("tile_x", clamp(tx)).withColumn("tile_y", clamp(ty))
+    # mercator y once per feature, before the explode; the per-z tile
+    # coordinates are exact integer gridding of (lon, y)
+    out = features.withColumn("_merc_y", cells.mercator_y_col(F.col("lat_e7")))
+    out = out.withColumn("z", F.explode(F.sequence("minz", "maxz")))
+    z = F.col("z")
+    return out.withColumns({
+        "tile_x": cells.axis_tile_col(F.col("lon_e7"), z),
+        "tile_y": cells.axis_tile_col(F.col("_merc_y"), z),
+    }).drop("_merc_y")
 
 
 def zoom_histogram(features: DataFrame) -> DataFrame:

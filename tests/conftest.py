@@ -19,3 +19,26 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def arrow_frame(spark):
+    """``arrow_frame(rows, schema)``: the frame ``spark.createDataFrame(
+    rows, schema)`` would give (``schema`` a DDL string or a StructType),
+    built from an Arrow table.  It plans as a LocalTableScan, where a
+    frame built from a Python list is an RDD scan whose every action
+    runs Python tasks."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    def build(rows, schema):
+        if isinstance(schema, str):
+            schema = StructType.fromDDL(schema)
+        arrow = to_arrow_schema(schema)
+        cols = list(zip(*rows)) if rows else [[] for _ in arrow]
+        return spark.createDataFrame(pa.table(
+            [pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow
+        ))
+
+    return build

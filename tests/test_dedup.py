@@ -248,12 +248,13 @@ def test_connected_components_chain_triangle_and_pair(spark):
 
 
 def test_connected_components_raises_when_round_capped(spark, monkeypatch):
-    # a 64-node path needs >1 star round; max_rounds=1 on the shuffle
+    # a 64-node path needs >1 star round; a one-round cap on the shuffle
     # loop must not silently return a partial labeling
     monkeypatch.setattr(dedup, "_DRIVER_MAX_PAIRS", 0)
+    monkeypatch.setattr(dedup, "_STAR_MAX_ROUNDS", 1)
     pairs = _pairs(spark, [(i, i + 1) for i in range(1, 64)])
     with pytest.raises(RuntimeError):
-        dedup.connected_components_star(pairs, max_rounds=1)
+        dedup.connected_components_star(pairs)
 
 
 def _random_graph():
@@ -289,29 +290,58 @@ _COMPONENT_CASES = {
 }
 
 
-@pytest.mark.parametrize("path", ["driver", "distributed"])
-@pytest.mark.parametrize("case", sorted(_COMPONENT_CASES))
-def test_star_components_equal_label_propagation(spark, monkeypatch, path, case):
+@pytest.fixture(scope="module")
+def component_results(spark):
+    """case -> (id type, expected multiset, {path: (executed plan, result
+    multiset, schema)}): the min-label reference and both paths run once
+    per case, and the case's [driver] and [distributed] tests share the
+    outcome.  Only plain values are kept, so the frames and their
+    checkpoints are released as soon as a case is computed."""
     from collections import Counter
 
-    id_type, pairs, rows = _COMPONENT_CASES[case]
-    df = _pairs(spark, pairs, id_type)
-    if rows is None:
-        rows = connected_components(df, max_rounds=50).collect()
-    expected = Counter(tuple(r) for r in rows)
-    driver = dedup.connected_components_star(df)
-    monkeypatch.setattr(dedup, "_DRIVER_MAX_PAIRS", 0)
-    distributed = dedup.connected_components_star(df)
-    got = driver if path == "driver" else distributed
+    cache = {}
+
+    def get(case):
+        if case not in cache:
+            id_type, pairs, rows = _COMPONENT_CASES[case]
+            df = _pairs(spark, pairs, id_type)
+            if rows is None:
+                rows = connected_components(df, max_rounds=50).collect()
+            out = {"driver": dedup.connected_components_star(df)}
+            with pytest.MonkeyPatch.context() as mp:
+                mp.setattr(dedup, "_DRIVER_MAX_PAIRS", 0)
+                out["distributed"] = dedup.connected_components_star(df)
+            cache[case] = (
+                df.schema["doc_a"].dataType,
+                Counter(tuple(r) for r in rows),
+                {
+                    path: (
+                        got._jdf.queryExecution().executedPlan().toString(),
+                        Counter(tuple(r) for r in got.collect()),
+                        got.schema,
+                    )
+                    for path, got in out.items()
+                },
+            )
+        return cache[case]
+
+    return get
+
+
+@pytest.mark.parametrize("path", ["driver", "distributed"])
+@pytest.mark.parametrize("case", sorted(_COMPONENT_CASES))
+def test_star_components_equal_label_propagation(component_results, path, case):
+    pairs = _COMPONENT_CASES[case][1]
+    id_type, expected, results = component_results(case)
+    plan, got, schema = results[path]
     if pairs:
         # the driver path answers from a local relation, the forced
         # path from the shuffle loop (an empty input folds to an empty
         # local relation on either path)
-        plan = got._jdf.queryExecution().executedPlan().toString()
         assert plan.startswith("LocalTableScan") == (path == "driver")
-    assert Counter(tuple(r) for r in got.collect()) == expected
-    assert driver.schema == distributed.schema
-    assert got.schema["doc_id"].dataType == df.schema["doc_a"].dataType
+    assert got == expected
+    assert results["driver"][2] == results["distributed"][2]
+    assert schema["doc_id"].dataType == id_type
     assert bool(expected) == bool(pairs)
 
 

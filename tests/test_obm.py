@@ -52,14 +52,14 @@ def _dict_tags(pairs):
     return [{"key": k, "value": v} for k, v in pairs]
 
 
-def test_way_store_roundtrip_spark(spark, tmp_path):
+def test_way_store_roundtrip_spark(spark, arrow_frame, tmp_path):
     rows = [
         (10, 20, _dict_tags([(3, "highway"), (4, "x" * 45)]),
          list(range(100, 114))),  # 14 refs -> ref-driven continuation
         (11, 21, _dict_tags([(3, "a"), (5, "b"), (6, "c")]), [7, 8, 9]),
         (12, 22, [], []),
     ]
-    df = spark.createDataFrame(rows, obm.WAY_SCHEMA)
+    df = arrow_frame(rows, obm.WAY_SCHEMA)
     stats = obm.write_obm(df, str(tmp_path / "ways"), "way")
     assert stats["n_entities"] == 3
     back = {
@@ -75,14 +75,14 @@ def test_way_store_roundtrip_spark(spark, tmp_path):
         assert got["refs"] == refs
 
 
-def test_relation_store_roundtrip_spark(spark, tmp_path):
+def test_relation_store_roundtrip_spark(spark, arrow_frame, tmp_path):
     rows = [
         (30, 40, _dict_tags([(3, "multipolygon")]),
          [{"ref": 1, "type": 4, "role": 3}, {"ref": 2, "type": 4, "role": 4},
           {"ref": 3, "type": 3, "role": 5}]),  # 3 members -> continuation
         (31, 41, [], [{"ref": 9, "type": 5, "role": 3}]),
     ]
-    df = spark.createDataFrame(rows, obm.REL_SCHEMA)
+    df = arrow_frame(rows, obm.REL_SCHEMA)
     obm.write_obm(df, str(tmp_path / "rels"), "relation")
     back = {
         r["id"]: r
@@ -95,11 +95,11 @@ def test_relation_store_roundtrip_spark(spark, tmp_path):
         assert [dict(m.asDict()) for m in got["members"]] == members
 
 
-def test_overwrite_removes_stale_partitions(spark, tmp_path):
+def test_overwrite_removes_stale_partitions(spark, arrow_frame, tmp_path):
     # first write with 4 partitions, rewrite with 1: the stale 3 files
     # must not survive to duplicate records in the scan
     path = str(tmp_path / "nodes")
-    mk = lambda n, parts: spark.createDataFrame(
+    mk = lambda n, parts: arrow_frame(
         [(i, i, i, 0, _dict_tags([(3, "v")])) for i in range(n)],
         obm.NODE_SCHEMA,
     ).repartition(parts)
@@ -109,9 +109,9 @@ def test_overwrite_removes_stale_partitions(spark, tmp_path):
     assert got.count() == 5
 
 
-def test_scan_is_parallel_per_file(spark, tmp_path):
+def test_scan_is_parallel_per_file(spark, arrow_frame, tmp_path):
     path = str(tmp_path / "nodes")
-    df = spark.createDataFrame(
+    df = arrow_frame(
         [(i, i, -i, i * 7, _dict_tags([(3, f"n{i}"), (4, "z" * 35)]))
          for i in range(200)],
         obm.NODE_SCHEMA,

@@ -406,15 +406,15 @@ def test_quantize_e3_np_matches_jvm_round(spark, emb):
         assert got == jvm_edge[i], (v, got, jvm_edge[i])
 
 
-def _null_vector_corpus(spark, n=24, dim=8, null_id=13):
+def _null_vector_corpus(arrow_frame, n=24, dim=8, null_id=13):
     rows = [
         (i, None if i == null_id else [float((i * 7 + d * 3) % 11 - 5) for d in range(dim)])
         for i in range(n)
     ]
-    return spark.createDataFrame(rows, schema="vec_id LONG, embedding ARRAY<FLOAT>")
+    return arrow_frame(rows, "vec_id LONG, embedding ARRAY<FLOAT>")
 
 
-def test_null_embedding_is_a_named_error(spark):
+def test_null_embedding_is_a_named_error(arrow_frame):
     """A NULL embedding raises ``VectorShapeError`` naming the NULL, not a
     numpy failure.  Above the first-n seed ids it reaches the executors'
     assignment pass in both operators; among the seeds (vec_id 1) the
@@ -427,10 +427,10 @@ def test_null_embedding_is_a_named_error(spark):
             lambda: similarity.cosine_topk_ivf(e, k=3, n_centroids=4),
         )
 
-    for run in runs(_null_vector_corpus(spark)):
+    for run in runs(_null_vector_corpus(arrow_frame)):
         with pytest.raises(Exception, match="VectorShapeError: NULL vector"):
             run().collect()
-    for run in runs(_null_vector_corpus(spark, null_id=1)):
+    for run in runs(_null_vector_corpus(arrow_frame, null_id=1)):
         with pytest.raises(similarity.VectorShapeError, match="NULL vector"):
             run().collect()
 

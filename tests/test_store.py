@@ -21,18 +21,16 @@ def tmp_store(spark):
     shutil.rmtree(d, ignore_errors=True)
 
 
-def _points(spark, rows):
-    return spark.createDataFrame(
-        rows, schema="pid LONG, lon_e7 LONG, lat_e7 LONG"
-    )
+def _points(arrow_frame, rows):
+    return arrow_frame(rows, "pid LONG, lon_e7 LONG, lat_e7 LONG")
 
 
 NYC_IN = (-740_000_000, 407_000_000)  # inside nyc_box + nyc_tri
 FAR = (100_000_000, 100_000_000)  # only the empty world polygon
 
 
-def test_commit_read_roundtrip_and_lineage(spark, tmp_store):
-    pts = _points(spark, [(1, *NYC_IN), (2, *FAR)])
+def test_commit_read_roundtrip_and_lineage(arrow_frame, tmp_store):
+    pts = _points(arrow_frame, [(1, *NYC_IN), (2, *FAR)])
     v = tmp_store.commit({"points": pts}, watermark="t0")
     assert v == 0
     back = tmp_store.read("points")
@@ -43,19 +41,19 @@ def test_commit_read_roundtrip_and_lineage(spark, tmp_store):
     assert tmp_store.watermark() == "t0"
 
 
-def test_merge_changes_latest_wins_and_delete(spark):
-    base = spark.createDataFrame(
+def test_merge_changes_latest_wins_and_delete(arrow_frame):
+    base = arrow_frame(
         [(1, 10, 10), (2, 20, 20), (3, 30, 30)],
-        schema="pid LONG, lon_e7 LONG, lat_e7 LONG",
+        "pid LONG, lon_e7 LONG, lat_e7 LONG",
     )
-    changes = spark.createDataFrame(
+    changes = arrow_frame(
         [
             (1, "modify", 1, 11, 11),
             (1, "modify", 2, 12, 12),  # later batch wins
             (2, "delete", 1, None, None),
             (4, "create", 1, 40, 40),
         ],
-        schema="pid LONG, op STRING, batch_id LONG, lon_e7 LONG, lat_e7 LONG",
+        "pid LONG, op STRING, batch_id LONG, lon_e7 LONG, lat_e7 LONG",
     )
     got = {
         r.pid: (r.lon_e7, r.lat_e7)
@@ -66,18 +64,18 @@ def test_merge_changes_latest_wins_and_delete(spark):
     assert got == {1: (12, 12), 3: (30, 30), 4: (40, 40)}
 
 
-def test_incremental_recut_leave_region_delete(spark, tmp_store):
+def test_incremental_recut_leave_region_delete(spark, arrow_frame, tmp_store):
     polys = synth.boundaries()
-    pts = _points(spark, [(1, *NYC_IN), (2, *FAR)])
+    pts = _points(arrow_frame, [(1, *NYC_IN), (2, *FAR)])
     matches = spatial_join(spark, pts, polys).select("pid", "boundary_id")
     tmp_store.commit({"points": pts, "matches": matches}, watermark="t0")
     base_m = {(r.pid, r.boundary_id) for r in matches.collect()}
     assert (1, 1) in base_m and (1, 2) in base_m
 
     # point 1 moves out of NYC; point 3 is created inside NYC
-    changes = spark.createDataFrame(
+    changes = arrow_frame(
         [(1, "modify", 1, *FAR), (3, "create", 1, *NYC_IN)],
-        schema="pid LONG, op STRING, batch_id LONG, lon_e7 LONG, lat_e7 LONG",
+        "pid LONG, op STRING, batch_id LONG, lon_e7 LONG, lat_e7 LONG",
     )
     apply_geo_changes(spark, tmp_store, changes, polys, watermark="t1")
 
@@ -102,17 +100,17 @@ def test_incremental_recut_leave_region_delete(spark, tmp_store):
     assert got == want
 
 
-def test_resume_identical_after_replay(spark, tmp_store):
+def test_resume_identical_after_replay(spark, arrow_frame, tmp_store):
     """Determinism/resume: replaying the same batches from snapshot 0
     yields an identical final table + counters (SURVEY §5.4)."""
     polys = synth.boundaries()
-    pts = _points(spark, [(1, *NYC_IN)])
+    pts = _points(arrow_frame, [(1, *NYC_IN)])
     matches = spatial_join(spark, pts, polys).select("pid", "boundary_id")
     tmp_store.commit({"points": pts, "matches": matches}, watermark="t0")
 
-    changes = spark.createDataFrame(
+    changes = arrow_frame(
         [(2, "create", 1, *NYC_IN)],
-        schema="pid LONG, op STRING, batch_id LONG, lon_e7 LONG, lat_e7 LONG",
+        "pid LONG, op STRING, batch_id LONG, lon_e7 LONG, lat_e7 LONG",
     )
     apply_geo_changes(spark, tmp_store, changes, polys, watermark="t1")
     m1 = tmp_store.manifest()
@@ -132,21 +130,21 @@ def test_resume_identical_after_replay(spark, tmp_store):
     )
 
 
-def test_streaming_micro_batch_apply(spark, tmp_store):
+def test_streaming_micro_batch_apply(spark, arrow_frame, tmp_store):
     """T6/T7 via Structured Streaming foreachBatch with availableNow."""
     import os
 
     from osmgraft.streaming import stream_changes_into_store
 
     polys = synth.boundaries()
-    pts = _points(spark, [(1, *FAR)])
+    pts = _points(arrow_frame, [(1, *FAR)])
     matches = spatial_join(spark, pts, polys).select("pid", "boundary_id")
     tmp_store.commit({"points": pts, "matches": matches}, watermark="t0")
 
     changes_dir = os.path.join(tmp_store.root, "changes_in")
     schema = "pid LONG, op STRING, batch_id LONG, lon_e7 LONG, lat_e7 LONG"
-    b1 = spark.createDataFrame([(2, "create", 1, *NYC_IN)], schema=schema)
-    b2 = spark.createDataFrame([(1, "modify", 2, *NYC_IN)], schema=schema)
+    b1 = arrow_frame([(2, "create", 1, *NYC_IN)], schema)
+    b2 = arrow_frame([(1, "modify", 2, *NYC_IN)], schema)
     b1.coalesce(1).write.mode("append").parquet(changes_dir)
     b2.coalesce(1).write.mode("append").parquet(changes_dir)
 
@@ -159,7 +157,7 @@ def test_streaming_micro_batch_apply(spark, tmp_store):
     assert tmp_store.current_version() >= 1
 
 
-def test_stateful_first_seen_across_batches(spark, tmp_store):
+def test_stateful_first_seen_across_batches(spark, arrow_frame, tmp_store):
     """applyInPandasWithState: duplicates dropped across micro-batches."""
     import os
 
@@ -167,11 +165,11 @@ def test_stateful_first_seen_across_batches(spark, tmp_store):
 
     src_dir = os.path.join(tmp_store.root, "dup_stream")
     schema = "fp STRING, doc_id LONG"
-    b1 = spark.createDataFrame(
-        [("a", 10), ("b", 20), ("a", 11)], schema=schema
+    b1 = arrow_frame(
+        [("a", 10), ("b", 20), ("a", 11)], schema
     )
-    b2 = spark.createDataFrame(
-        [("a", 12), ("c", 30), ("b", 21)], schema=schema
+    b2 = arrow_frame(
+        [("a", 12), ("c", 30), ("b", 21)], schema
     )
     b1.coalesce(1).write.mode("append").parquet(src_dir)
     b2.coalesce(1).write.mode("append").parquet(src_dir)

@@ -1,6 +1,8 @@
 """Catch-up planner: lag -> daily/hourly/minute batch plan
 (reference updateLFromWeb, osmc/osmc.c:451-492)."""
 
+import pytest
+
 from osmgraft.streaming import catchup_plan, files_per_trigger_for_plan
 
 
@@ -96,3 +98,24 @@ def test_next_change_file_name_rejects_unknown_period():
 
     with _pytest.raises(ValueError):
         next_change_file_name(0, "weekly")
+
+
+@pytest.mark.spark
+def test_tumbling_counts_watermark_on_streaming_input_only(spark, sf_dir):
+    """A streaming events frame gets the event-time watermark, a batch
+    one does not; only plans are built, no query is started."""
+    from osmgraft.streaming import tumbling_event_counts
+
+    path = f"{sf_dir}/events.parquet"
+    batch = spark.read.parquet(path)
+    stream = spark.readStream.schema(batch.schema).parquet(path)
+
+    def plan(df):
+        return df._jdf.queryExecution().logical().toString()
+
+    s, b = tumbling_event_counts(stream), tumbling_event_counts(batch)
+    assert stream.isStreaming and not batch.isStreaming
+    assert "EventTimeWatermark" in plan(s)
+    assert "EventTimeWatermark" not in plan(b)
+    assert s.schema["window_start"].dataType == b.schema["window_start"].dataType
+    assert not spark.streams.active
