@@ -119,12 +119,13 @@ def viewport_tiles(min_lon_e7, min_lat_e7, max_lon_e7, max_lat_e7, z):
     return int(tx0), int(tx1), int(min(ty_a, ty_b)), int(max(ty_a, ty_b))
 
 
-def parent(cell, steps: int = 1):
+def parent(cell):
+    """The containing cell one level up."""
     level, y, x = cell_decode(cell)
-    nl = level - steps
+    nl = level - 1
     if np.any(nl < 0):
         raise ValueError("parent below level 0")
-    return cell_id(x >> steps, y >> steps, 0) | (nl.astype(np.int64) << _LEVEL_SHIFT)
+    return cell_id(x >> 1, y >> 1, 0) | (nl.astype(np.int64) << _LEVEL_SHIFT)
 
 
 def children(cell):

@@ -33,11 +33,9 @@ from pyspark.sql.types import LongType, StructField, StructType
 TOKEN_SPLIT = " "
 
 
-def shingles(
-    df: DataFrame, n: int = 3, id_col: str = "doc_id",
-    max_df: int | None = None,
-) -> DataFrame:
-    """Distinct word n-gram shingles per doc: (id, shingle).
+def shingles(df: DataFrame, n: int = 3, max_df: int | None = None) -> DataFrame:
+    """Distinct word n-gram shingles per doc: (id, shingle), id the
+    ``doc_id``.
 
     ``max_df`` (document-frequency cap / stop-shingle filter): shingles
     occurring in MORE than ``max_df`` docs are dropped entirely — from
@@ -53,7 +51,7 @@ def shingles(
     rarely wider than that, boilerplate is far wider).  ``None``
     disables the cap (exact semantics, small corpora only).
     """
-    out = _shingle_base(df, n, id_col)
+    out = _shingle_base(df, n)
     if max_df is not None:
         out = _apply_df_cap(out, max_df)
     return out
@@ -86,7 +84,7 @@ def _apply_df_cap(out: DataFrame, max_df: int) -> DataFrame:
     )
 
 
-def _shingle_base(df: DataFrame, n: int, id_col: str = "doc_id") -> DataFrame:
+def _shingle_base(df: DataFrame, n: int) -> DataFrame:
     """Uncapped (id, shingle) explode.
 
     Guard: docs with < n tokens have no shingles.  Without the guard,
@@ -110,7 +108,7 @@ def _shingle_base(df: DataFrame, n: int, id_col: str = "doc_id") -> DataFrame:
     tokens concatenate identically).
     """
     toks = df.select(
-        F.col(id_col).alias("id"), F.split(F.col("text"), TOKEN_SPLIT).alias("_toks")
+        F.col("doc_id").alias("id"), F.split(F.col("text"), TOKEN_SPLIT).alias("_toks")
     )
     m = f"size(_toks) - {n - 1}"  # shingle count when size >= n
     acc = f"slice(_toks, 1, {m})"

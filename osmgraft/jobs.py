@@ -59,13 +59,13 @@ def run_tile(
     spark: SparkSession,
     features: DataFrame,
     out_dir: str,
-    store: SnapshotStore | None = None,
+    store: SnapshotStore,
 ) -> DataFrame:
     """Classified, zoom-ranged features -> tile pyramid on disk.
 
     features must carry (id, lon_e7, lat_e7, minz, maxz[, class]).
-    Returns the zoom histogram (and commits it as a metrics table when
-    a store is given) — the job-level sanity metric.
+    Returns the zoom histogram, also committed to ``store`` as a
+    metrics table — the job-level sanity metric.
     """
     pyramid = tiles.explode_pyramid(features).select(
         "id", "z", "tile_x", "tile_y",
@@ -73,12 +73,11 @@ def run_tile(
     )
     write_tile_store(pyramid, out_dir)
     hist = tiles.zoom_histogram(features)
-    if store is not None:
-        store.commit(
-            {"zoom_histogram": hist},
-            watermark=store.watermark(),  # carry the cut watermark forward
-            note=f"tile:{os.path.basename(out_dir)}",
-        )
+    store.commit(
+        {"zoom_histogram": hist},
+        watermark=store.watermark(),  # carry the cut watermark forward
+        note=f"tile:{os.path.basename(out_dir)}",
+    )
     return hist
 
 

@@ -56,45 +56,52 @@ DEFAULT_COVER_LEVEL = 9  # ~0.7 deg cells: fine enough to hug boundaries,
 
 
 _SEG_NAMES = ["x0", "y0", "x1", "y1"]
-_COVER_SCHEMA = pa.schema([
-    ("boundary_id", pa.int64()),
-    ("cell", pa.int64()),
-    ("inside", pa.bool_()),
-    ("segs", pa.list_(pa.struct([(n, pa.int64()) for n in _SEG_NAMES]))),
-])
 # cover entry of one (cell, boundary): INSIDE outright, or the segments
 # that decide the cell's points
-_ENTRY = "struct<boundary_id:bigint,_inside:boolean,_segs:%s>" % (
-    from_arrow_schema(_COVER_SCHEMA)["segs"].dataType.simpleString()
-)
+_ENTRY_TYPE = pa.struct([
+    ("boundary_id", pa.int64()),
+    ("_inside", pa.bool_()),
+    ("_segs", pa.list_(pa.struct([(n, pa.int64()) for n in _SEG_NAMES]))),
+])
+_COVER_SCHEMA = pa.schema([("cell", pa.int64()), ("_cov", pa.list_(_ENTRY_TYPE))])
+_ENTRY = from_arrow_schema(pa.schema([("e", _ENTRY_TYPE)]))["e"].dataType.simpleString()
 
 
 def cover_df(spark: SparkSession, polys: list[Polygon], level: int) -> DataFrame:
-    """:data:`_COVER_SCHEMA` rows: the exact-superset cover of every
-    non-empty polygon, one row per (boundary_id, cell) with its refine
-    geometry (``geometry.refine_cover``).  Built on the driver for every
-    polygon count, as one Arrow table, so creating it starts no Python
-    worker."""
-    batches = []
+    """:data:`_COVER_SCHEMA` rows: one row per cell of the exact-superset
+    cover of the non-empty polygons, whose ``_cov`` holds one entry per
+    polygon covering the cell, with its refine geometry
+    (``geometry.refine_cover``).  Built on the driver for every polygon
+    count, as one Arrow table already grouped by cell, so creating it
+    starts no Python worker and joining it needs no shuffle."""
+    cell_parts, entry_parts = [], []
     for p in polys:
         if p.n_segments == 0:
             continue
         cell, inside, offsets, segs = refine_cover(p, level)
         seg_arr = pa.StructArray.from_arrays(list(segs), names=_SEG_NAMES)
-        batches.append(pa.RecordBatch.from_arrays(
+        cell_parts.append(cell)
+        entry_parts.append(pa.StructArray.from_arrays(
             [
                 pa.repeat(pa.scalar(p.boundary_id, pa.int64()), cell.size),
-                pa.array(cell),
                 pa.array(inside),
                 pa.ListArray.from_arrays(pa.array(offsets), seg_arr),
             ],
-            schema=_COVER_SCHEMA,
+            fields=list(_ENTRY_TYPE),
         ))
-    # no non-empty polygon: a zero-chunk table fails inside
-    # createDataFrame, a one-empty-chunk table does not
-    table = (pa.Table.from_batches(batches, schema=_COVER_SCHEMA)
-             if batches else _COVER_SCHEMA.empty_table())
-    return spark.createDataFrame(table)
+    if not cell_parts:
+        # no non-empty polygon: a zero-chunk table fails inside
+        # createDataFrame, a one-empty-chunk table does not
+        return spark.createDataFrame(_COVER_SCHEMA.empty_table())
+    cell = np.concatenate(cell_parts)
+    order = np.argsort(cell, kind="stable")  # entries keep polygon order
+    cells_u, starts = np.unique(cell[order], return_index=True)
+    offsets = pa.array(np.append(starts, cell.size).astype(np.int32))
+    entries = pa.concat_arrays(entry_parts).take(pa.array(order))
+    return spark.createDataFrame(pa.table(
+        [pa.array(cells_u), pa.ListArray.from_arrays(offsets, entries)],
+        schema=_COVER_SCHEMA,
+    ))
 
 
 # One cover builder.  The former executor-side builder's name stays as
@@ -116,8 +123,8 @@ def spatial_join(
     boundaries); BOUNDARY counts as a match (``osmc/obm.c:28-30``).
 
     One physical shape for every polygon count: :func:`cover_df` builds
-    the cover on the driver and the points join it as a broadcast, so
-    the big side never shuffles, key skew is irrelevant and the join
+    the per-cell cover on the driver and the points join it as a
+    broadcast, so no side shuffles, key skew is irrelevant and the join
     runs no Python.  A cover too large to broadcast would already be
     too large to build: it is one local relation in driver memory
     before the join is planned.
@@ -125,20 +132,15 @@ def spatial_join(
     pt = points.withColumn(
         "cell", cells.lonlat_cell_col(F.col("lon_e7"), F.col("lat_e7"), level)
     )
-    # Join the points to the per-cell aggregated cover (cell -> array of
-    # entries) and explode cover entries ++ empty (match-everything)
-    # polygon entries in the same pass.  With empties the join is LEFT,
-    # so every point row survives to pick them up; the points subtree
-    # is evaluated once (a separate cross-join branch would be a Union,
-    # and Spark does not share a subtree across union branches).
+    # Join the points to the per-cell cover (cell -> array of entries)
+    # and explode cover entries ++ empty (match-everything) polygon
+    # entries in the same pass.  With empties the join is LEFT, so every
+    # point row survives to pick them up; the points subtree is
+    # evaluated once (a separate cross-join branch would be a Union, and
+    # Spark does not share a subtree across union branches).
     empty_ids = [p.boundary_id for p in polys if p.n_segments == 0]
-    cov_agg = cover_df(spark, polys, level).groupBy("cell").agg(
-        F.collect_list(
-            F.struct("boundary_id", F.col("inside").alias("_inside"),
-                     F.col("segs").alias("_segs"))
-        ).alias("_cov")
-    )
-    cand = pt.join(F.broadcast(cov_agg), "cell", "left" if empty_ids else "inner")
+    cov = cover_df(spark, polys, level)
+    cand = pt.join(F.broadcast(cov), "cell", "left" if empty_ids else "inner")
 
     entries = F.coalesce(F.col("_cov"), F.expr(f"CAST(array() AS array<{_ENTRY}>)"))
     if empty_ids:

@@ -1573,8 +1573,8 @@ def tile_raster_roundtrip(spark, sf_dir):
     The oracle recomputes both directions with the identical integer
     arithmetic."""
     pts = synth.geo_entities_df(spark, sf_dir)
-    raster = tiles.rasterize_points(pts, z=6, res_bits=4)
-    return tiles.vectorize_raster(raster, z=6, res_bits=4, threshold=2)
+    raster = tiles.rasterize_points(pts, z=6)
+    return tiles.vectorize_raster(raster, z=6, threshold=2)
 
 
 @_register(
@@ -1602,8 +1602,8 @@ def tile_raster_pyramid(spark, sf_dir):
     shuffle rows bounded by non-empty pixels x span, never feature
     count."""
     pts = synth.geo_entities_df(spark, sf_dir)
-    raster = tiles.rasterize_points(pts, z=6, res_bits=4)
-    return tiles.rollup_raster(raster, from_z=6, to_z=4, res_bits=4)
+    raster = tiles.rasterize_points(pts, z=6)
+    return tiles.rollup_raster(raster, from_z=6, to_z=4)
 
 
 @_register(
@@ -2648,7 +2648,7 @@ def ann_ivf_kmeanspp(spark, sf_dir):
     exact integer distances end-to-end; the oracle unrolls the same
     rounds in SQL."""
     e = _read_spread(spark, sf_dir, "embeddings")
-    return similarity.kmeans_parallel_assign(e, n_centroids=8, l=16, rounds=2)
+    return similarity.kmeans_parallel_assign(e, n_centroids=8)
 
 
 @_register(

@@ -66,7 +66,7 @@ def get_spark(
 SPREAD_MIN_BYTES_PER_PART = 128 * 1024
 
 
-def spread_scan(df: DataFrame, min_parts: int | None = None) -> DataFrame:
+def spread_scan(df: DataFrame) -> DataFrame:
     """Scale-adaptive scan spreading (guide §2.5 "input skew" / §6).
 
     A single-row-group parquet file is an unsplittable scan: EVERY
@@ -85,8 +85,7 @@ def spread_scan(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     exchange never happens — the guard, not the repartition, is the
     scale story.
     """
-    sc = df.sparkSession.sparkContext
-    target = min_parts or sc.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     try:
         size = int(
             df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
@@ -95,7 +94,9 @@ def spread_scan(df: DataFrame, min_parts: int | None = None) -> DataFrame:
         size = None
     if size is not None and size < target * SPREAD_MIN_BYTES_PER_PART:
         return df
-    if df.rdd.getNumPartitions() >= target:
+    # the JVM plan's RDD: ``df.rdd`` would re-plan the frame behind a
+    # Python RDD only to count its partitions
+    if df._jdf.queryExecution().toRdd().getNumPartitions() >= target:
         return df
     return df.repartition(target)
 

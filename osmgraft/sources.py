@@ -62,6 +62,11 @@ OSM_ELEMENT_SCHEMA = T.StructType([
 
 _CHANGE_OPS = {"create", "modify", "delete"}
 
+# The 4-D feature store's deepest quadtree level.  Its writer and its
+# reader must agree: a reader stopping short of the writer's deepest
+# level would silently drop the features stored below it.
+FEATURE_MAX_LEVEL = 12
+
 
 def _e7(v: str) -> int:
     # exact decimal-string scaling (no float round-trip): the reference
@@ -79,7 +84,7 @@ def _e7(v: str) -> int:
     return -out if neg else out
 
 
-def _parse_osm_stream(fobj, default_op=None):
+def _parse_osm_stream(fobj):
     """iterparse one OSM/OsmChange XML stream into element dicts.
 
     Constant-memory: processed <node>/<way>/<relation> subtrees are
@@ -88,7 +93,7 @@ def _parse_osm_stream(fobj, default_op=None):
     """
     import xml.etree.ElementTree as ET
 
-    op_stack = [default_op]
+    op_stack = [None]
     el_stack = []
     for event, el in ET.iterparse(fobj, events=("start", "end")):
         tag = el.tag
@@ -234,12 +239,7 @@ def viewport_query(
     )
 
 
-def write_feature_store_4d(
-    features: DataFrame,
-    path: str,
-    max_level: int = 12,
-    compression: str = "zstd",
-) -> None:
+def write_feature_store_4d(features: DataFrame, path: str) -> None:
     """J8 extended-feature sink: bbox features stored quadtree-style —
     the distributed stand-in for the reference's 4-D bbox kd-tree
     (``osmc/4DTree.c:63-154``), which serves features whose bbox
@@ -247,15 +247,15 @@ def write_feature_store_4d(
     for features spanning tiles).
 
     Each feature (id, minx, miny, maxx, maxy, ...payload) is assigned
-    the DEEPEST level in 0..max_level at which one tile fully contains
-    its bbox, then stored partitioned by that level and sorted by
+    the DEEPEST level in 0..FEATURE_MAX_LEVEL at which one tile fully
+    contains its bbox, then stored partitioned by that level and sorted by
     (tile_y, tile_x) within partitions: a viewport query prunes level
     directories + Parquet row groups per level.  Indexing is in raw
     e7 lon/lat space, like the reference tree's raw int coords; the
     exact intersect predicate runs on the stored bbox ints."""
     minx, miny, maxx, maxy = (F.col(c) for c in ("minx", "miny", "maxx", "maxy"))
     chain = None
-    for lvl in range(max_level, -1, -1):
+    for lvl in range(FEATURE_MAX_LEVEL, -1, -1):
         fits = (
             (axis_tile_col(minx, lvl) == axis_tile_col(maxx, lvl))
             & (axis_tile_col(miny, lvl) == axis_tile_col(maxy, lvl))
@@ -266,7 +266,7 @@ def write_feature_store_4d(
     # single world tile -> index 0)
     tx = F.lit(0).cast("long")
     ty = F.lit(0).cast("long")
-    for lvl in range(max_level, 0, -1):
+    for lvl in range(FEATURE_MAX_LEVEL, 0, -1):
         tx = F.when(F.col("level") == lvl, axis_tile_col(minx, lvl)).otherwise(tx)
         ty = F.when(F.col("level") == lvl, axis_tile_col(miny, lvl)).otherwise(ty)
     staged = staged.withColumn("tile_x", tx).withColumn("tile_y", ty)
@@ -274,7 +274,7 @@ def write_feature_store_4d(
         staged.repartition("level")
         .sortWithinPartitions("tile_y", "tile_x")
         .write.mode("overwrite")
-        .option("compression", compression)
+        .option("compression", "zstd")
         .partitionBy("level")
         .parquet(path)
     )
@@ -287,7 +287,6 @@ def viewport_query_4d(
     min_lat_e7: int,
     max_lon_e7: int,
     max_lat_e7: int,
-    max_level: int = 12,
 ) -> DataFrame:
     """Features whose bbox INTERSECTS the viewport (4DTree.c query
     semantics).  One pruned scan per level (partition-directory prune on
@@ -300,7 +299,7 @@ def viewport_query_4d(
     from . import cells as C
 
     parts = []
-    for lvl in range(0, max_level + 1):
+    for lvl in range(0, FEATURE_MAX_LEVEL + 1):
         tx0 = int(C._axis_to_tile(np.int64(min_lon_e7), lvl))
         tx1 = int(C._axis_to_tile(np.int64(max_lon_e7), lvl))
         ty0 = int(C._axis_to_tile(np.int64(min_lat_e7), lvl))
@@ -320,9 +319,7 @@ def viewport_query_4d(
     return reduce(DataFrame.unionByName, parts).filter(exact)
 
 
-def write_tile_store(
-    tiles: DataFrame, path: str, compression: str = "zstd"
-) -> None:
+def write_tile_store(tiles: DataFrame, path: str) -> None:
     """K4 sink: the tile pyramid partitioned by z, sorted by
     (tile_y, tile_x) within partitions — z-partition pruning + Parquet
     row-group min/max stats stand in for the reference's kd-trees."""
@@ -330,7 +327,7 @@ def write_tile_store(
         tiles.repartition("z")
         .sortWithinPartitions("tile_y", "tile_x")
         .write.mode("overwrite")
-        .option("compression", compression)
+        .option("compression", "zstd")
         .partitionBy("z")
         .parquet(path)
     )

@@ -144,18 +144,14 @@ def files_per_trigger_for_plan(plan: list[tuple[str, int]]) -> int:
     return 1
 
 
-def stateful_first_seen(
-    stream: DataFrame,
-    key_col: str = "fp",
-    timeout_ms: int = 0,
-) -> DataFrame:
+def stateful_first_seen(stream: DataFrame) -> DataFrame:
     """Custom stateful streaming operator: emit each key's FIRST row
     across micro-batches, drop later duplicates (the streaming form of
     the U2 first-write-wins dedup / Tree16 first-offset-kept semantics,
     ``osmc/Tree16.c:33-35``) — ``applyInPandasWithState`` with one
     boolean state slot per key group.
 
-    Input must carry (key_col, doc_id).  Output: (key, doc_id) of first
+    Input must carry (fp, doc_id).  Output: (key, doc_id) of first
     arrivals only.  State grows with distinct keys; bound it upstream by
     bucketing keys per time window when the stream is unbounded.
     """
@@ -183,7 +179,7 @@ def stateful_first_seen(
         if first is not None:
             yield pd.DataFrame({"key": [key[0]], "doc_id": [first]})
 
-    return stream.groupBy(F.col(key_col)).applyInPandasWithState(
+    return stream.groupBy(F.col("fp")).applyInPandasWithState(
         dedup,
         outputStructType=out_schema,
         stateStructType=state_schema,

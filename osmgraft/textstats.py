@@ -31,13 +31,14 @@ _STOP_RE = (
 )
 
 
-def stop_count_col(text_col: str = "text") -> "F.Column":
-    return F.regexp_count(F.col(text_col), F.lit(_STOP_RE))
+def stop_count_col() -> "F.Column":
+    """English stopword count of the ``text`` column."""
+    return F.regexp_count(F.col("text"), F.lit(_STOP_RE))
 
 
-def lang_id(df: DataFrame, threshold: float = 0.05) -> DataFrame:
+def lang_id(df: DataFrame) -> DataFrame:
     """Stopword-ratio language heuristic: share of tokens that are
-    English stopwords; >= threshold => 'en'."""
+    English stopwords; >= 0.05 => 'en'."""
     toks = F.split(F.col("text"), " ")
     n_stop = stop_count_col()
     ratio = n_stop.cast("double") / F.size(toks)
@@ -45,7 +46,7 @@ def lang_id(df: DataFrame, threshold: float = 0.05) -> DataFrame:
         "doc_id",
         n_stop.cast("bigint").alias("n_stop"),
         ratio.alias("stop_ratio"),
-        F.when(ratio >= threshold, "en").otherwise("other").alias("pred_lang"),
+        F.when(ratio >= 0.05, "en").otherwise("other").alias("pred_lang"),
     )
 
 
@@ -88,16 +89,17 @@ def bpe_token_count(df: DataFrame) -> DataFrame:
     )
 
 
-def url_normalize(df: DataFrame, url_col: str = "url") -> DataFrame:
+def url_normalize(df: DataFrame) -> DataFrame:
     """Crawl-grade URL canonicalization — the dedup key every web
     pipeline derives before content hashing.  All JVM regex/array ops
     (codegen, engine-portable): drop the fragment, lowercase
     scheme://host, strip the default https port, drop ``utm_*``
     tracking params, sort the remaining query params.
 
-    Output columns: (url_norm, host) appended to the input row.
+    Input must carry ``url``.  Output columns: (url_norm, host)
+    appended to the input row.
     """
-    u = F.col(url_col)
+    u = F.col("url")
     no_frag = F.regexp_replace(u, "#.*$", "")
     scheme = F.lower(F.regexp_extract(no_frag, "^([^:]+)://", 1))
     host_raw = F.lower(F.regexp_extract(no_frag, "^[^:]+://([^/?#]+)", 1))

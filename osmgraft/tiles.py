@@ -26,6 +26,10 @@ from pyspark.sql import functions as F
 from . import cells
 
 MAX_ZOOM = 18
+# Pixel bits per raster tile axis (a 16 x 16 grid).  A raster decodes
+# only with the bit count that encoded it, so every raster function
+# uses this one value.
+RASTER_BITS = 4
 
 
 def _t(key: str) -> Column:
@@ -275,29 +279,37 @@ def rollup_tiles(tiles: DataFrame, from_z: int, to_z: int) -> DataFrame:
         .groupBy("tile_x", "tile_y")
         .agg(F.count("*").alias("n"))
     )
+    return _ancestor_sum(base, "tile_x", "tile_y", "n", from_z, to_z, "long")
+
+
+def _ancestor_sum(
+    base: DataFrame, x: str, y: str, n: str, from_z: int, to_z: int, z_type: str
+) -> DataFrame:
+    """(x, y, n) rows at ``from_z`` -> (z, x, y, n) for every z in
+    [to_z, from_z]: each row is exploded into its ancestor chain (the
+    ancestor at z is (x, y) shifted right by from_z - z) and the counts
+    are summed per ancestor in one groupBy.  ``z`` is cast to
+    ``z_type``."""
     anc = base.select(
-        F.explode(F.sequence(F.lit(to_z), F.lit(from_z))).alias("z"),
-        "tile_x",
-        "tile_y",
-        "n",
+        F.explode(F.sequence(F.lit(to_z), F.lit(from_z))).alias("z"), x, y, n
     )
     return (
         anc.select(
-            F.col("z").cast("long").alias("z"),
+            F.col("z").cast(z_type).alias("z"),
             # column-valued shift count needs the SQL form
-            F.expr(f"shiftright(tile_x, {from_z} - CAST(z AS INT))").alias("tile_x"),
-            F.expr(f"shiftright(tile_y, {from_z} - CAST(z AS INT))").alias("tile_y"),
-            "n",
+            F.expr(f"shiftright({x}, {from_z} - CAST(z AS INT))").alias(x),
+            F.expr(f"shiftright({y}, {from_z} - CAST(z AS INT))").alias(y),
+            n,
         )
-        .groupBy("z", "tile_x", "tile_y")
-        .agg(F.sum("n").alias("n"))
+        .groupBy("z", x, y)
+        .agg(F.sum(n).alias(n))
     )
 
 
-def rasterize_points(points: DataFrame, z: int, res_bits: int = 4) -> DataFrame:
+def rasterize_points(points: DataFrame, z: int) -> DataFrame:
     """Vector -> raster (the north_rule's raster<->vector, forward
-    direction): bin point features into a ``2^res_bits`` x
-    ``2^res_bits`` pixel grid per z-tile (mercator y, the reference's
+    direction): bin point features into a ``2^RASTER_BITS`` x
+    ``2^RASTER_BITS`` pixel grid per z-tile (mercator y, the reference's
     tile addressing) and count per pixel.
 
     Output is the SPARSE raster encoding — one row per non-empty pixel
@@ -308,16 +320,16 @@ def rasterize_points(points: DataFrame, z: int, res_bits: int = 4) -> DataFrame:
     (groupBy tile + collect into an array), deliberately not the
     storage form.
     """
-    level = z + res_bits
-    mask = (1 << res_bits) - 1
+    level = z + RASTER_BITS
+    mask = (1 << RASTER_BITS) - 1
     gx = cells.axis_tile_col(F.col("lon_e7"), level)
     gy = cells.axis_tile_col(cells.mercator_y_col(F.col("lat_e7")), level)
     return (
         points.select(gx.alias("gx"), gy.alias("gy"))
         .select(
             F.lit(z).cast("int").alias("z"),
-            F.shiftright("gx", res_bits).alias("tile_x"),
-            F.shiftright("gy", res_bits).alias("tile_y"),
+            F.shiftright("gx", RASTER_BITS).alias("tile_x"),
+            F.shiftright("gy", RASTER_BITS).alias("tile_y"),
             F.col("gx").bitwiseAND(F.lit(mask)).cast("int").alias("px"),
             F.col("gy").bitwiseAND(F.lit(mask)).cast("int").alias("py"),
         )
@@ -326,9 +338,7 @@ def rasterize_points(points: DataFrame, z: int, res_bits: int = 4) -> DataFrame:
     )
 
 
-def vectorize_raster(
-    raster: DataFrame, z: int, res_bits: int = 4, threshold: int = 1
-) -> DataFrame:
+def vectorize_raster(raster: DataFrame, z: int, threshold: int = 1) -> DataFrame:
     """Raster -> vector (the reverse direction): pixels with
     ``n_points >= threshold`` become point features at the pixel
     center, inverse-projected with EXACT integer arithmetic in
@@ -340,67 +350,53 @@ def vectorize_raster(
 
     Pure projection — no shuffle beyond the threshold filter's scan.
     """
-    level = z + res_bits
+    level = z + RASTER_BITS
     n = 1 << level
     out = raster.filter(F.col("n_points") >= threshold).select(
         "z", "tile_x", "tile_y", "px", "py", "n_points",
         F.expr(
-            f"((2 * (shiftleft(tile_x, {res_bits}) + px) + 1) * "
+            f"((2 * (shiftleft(tile_x, {RASTER_BITS}) + px) + 1) * "
             f"{cells.WORLD}L) div {2 * n}L - {cells.HALF_WORLD}L"
         ).alias("lon_e7"),
         F.expr(
-            f"((2 * (shiftleft(tile_y, {res_bits}) + py) + 1) * "
+            f"((2 * (shiftleft(tile_y, {RASTER_BITS}) + py) + 1) * "
             f"{cells.WORLD}L) div {2 * n}L - {cells.HALF_WORLD}L"
         ).alias("my_e7"),
     )
     return out
 
 
-def rollup_raster(
-    raster: DataFrame, from_z: int, to_z: int, res_bits: int = 4
-) -> DataFrame:
+def rollup_raster(raster: DataFrame, from_z: int, to_z: int) -> DataFrame:
     """Raster pyramid (the north_rule's "between zoom-level tile
     pyramids", raster form): aggregate the sparse pixel raster from
     ``from_z`` up to every level down to ``to_z`` — the parent pixel is
     the child's global pixel index shifted right once per zoom step,
     i.e. a 2x2 box-sum downsample at each level.
 
-    Same two-shuffle ancestor-explode shape as :func:`rollup_tiles`:
-    shuffle rows = zoom span x non-empty pixels — bounded by the pixel
-    grid, never by the feature count.
+    The same ancestor explode as :func:`rollup_tiles`
+    (:func:`_ancestor_sum`, over global pixel indices): shuffle rows =
+    zoom span x non-empty pixels — bounded by the pixel grid, never by
+    the feature count.
     Input/output rows: (z, tile_x, tile_y, px, py, n_points).
     """
-    mask = (1 << res_bits) - 1
+    mask = (1 << RASTER_BITS) - 1
     base = raster.filter(F.col("z") == from_z).select(
-        (F.shiftleft("tile_x", res_bits) + F.col("px")).alias("gx"),
-        (F.shiftleft("tile_y", res_bits) + F.col("py")).alias("gy"),
+        (F.shiftleft("tile_x", RASTER_BITS) + F.col("px")).alias("gx"),
+        (F.shiftleft("tile_y", RASTER_BITS) + F.col("py")).alias("gy"),
         "n_points",
     )
-    anc = base.select(
-        F.explode(F.sequence(F.lit(to_z), F.lit(from_z))).alias("z"),
-        "gx", "gy", "n_points",
-    )
-    rolled = (
-        anc.select(
-            F.col("z").cast("int").alias("z"),
-            F.expr(f"shiftright(gx, {from_z} - z)").alias("gx"),
-            F.expr(f"shiftright(gy, {from_z} - z)").alias("gy"),
-            "n_points",
-        )
-        .groupBy("z", "gx", "gy")
-        .agg(F.sum("n_points").alias("n_points"))
-    )
+    rolled = _ancestor_sum(base, "gx", "gy", "n_points", from_z, to_z, "int")
     return rolled.select(
         "z",
-        F.shiftright("gx", res_bits).alias("tile_x"),
-        F.shiftright("gy", res_bits).alias("tile_y"),
+        F.shiftright("gx", RASTER_BITS).alias("tile_x"),
+        F.shiftright("gy", RASTER_BITS).alias("tile_y"),
         F.col("gx").bitwiseAND(F.lit(mask)).cast("int").alias("px"),
         F.col("gy").bitwiseAND(F.lit(mask)).cast("int").alias("py"),
         "n_points",
     )
 
 
-def dense_tile_raster(raster: DataFrame, res_bits: int = 4) -> DataFrame:
+def dense_tile_raster(raster: DataFrame) -> DataFrame:
     """Presentation-layer reshape: sparse pixel rows -> one dense
     row-major ``res*res`` count array per tile (the shape a renderer
     uploads).  Kept OUT of the storage path by design — at planet
@@ -412,7 +408,7 @@ def dense_tile_raster(raster: DataFrame, res_bits: int = 4) -> DataFrame:
     ``DUPLICATED_MAP_KEY`` exception from ``map_from_entries`` (loud by
     design — the previous fold silently last-write-wins'd).  If you see
     that exception here, aggregate the pixel counts first."""
-    res = 1 << res_bits
+    res = 1 << RASTER_BITS
     idx = (F.col("py") * res + F.col("px")).cast("int")
     # px-index -> count map per tile, then one O(res^2) lookup pass —
     # NOT a fold that rewrites the whole array per pixel (that was

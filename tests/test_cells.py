@@ -136,8 +136,8 @@ def test_rasterize_vectorize_fixpoint(spark):
     from osmgraft import synth, tiles
 
     pts = synth.geo_entities_df(spark, "/root/testdata/sf0.001")
-    raster = tiles.rasterize_points(pts, z=6, res_bits=4)
-    vec = tiles.vectorize_raster(raster, z=6, res_bits=4, threshold=1)
+    raster = tiles.rasterize_points(pts, z=6)
+    vec = tiles.vectorize_raster(raster, z=6, threshold=1)
     # re-rasterize the vector features in LINEAR grid space on both
     # axes: lon_e7 is linear, and my_e7 is already projected, so the
     # pixel index must come straight back out of axis binning
@@ -168,8 +168,8 @@ def test_raster_pyramid_conservation_and_dense_reshape(spark):
 
     pts = synth.geo_entities_df(spark, "/root/testdata/sf0.001")
     n = pts.count()
-    raster = tiles.rasterize_points(pts, z=6, res_bits=4)
-    pyr = tiles.rollup_raster(raster, from_z=6, to_z=4, res_bits=4)
+    raster = tiles.rasterize_points(pts, z=6)
+    pyr = tiles.rollup_raster(raster, from_z=6, to_z=4)
     # every level conserves the total count
     per_z = {r.z: r.s for r in pyr.groupBy("z").agg(F.sum("n_points").alias("s")).collect()}
     assert per_z == {4: n, 5: n, 6: n}
@@ -179,7 +179,7 @@ def test_raster_pyramid_conservation_and_dense_reshape(spark):
           for r in pyr.filter(F.col("z") == 6).collect()}
     assert base == z6
     # dense reshape: array sums match sparse sums per tile
-    dense = tiles.dense_tile_raster(raster, res_bits=4)
+    dense = tiles.dense_tile_raster(raster)
     row = dense.select(
         F.sum(F.aggregate("pixels", F.lit(0).cast("long"), lambda a, x: a + x)).alias("s")
     ).collect()[0]

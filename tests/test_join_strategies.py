@@ -70,9 +70,10 @@ def test_cover_df_emits_inside_and_segment_rows(spark):
     polys = synth.boundaries() + [
         Polygon(50, "wide", [Ring([0, 10**8, 10**8, 0], [0, 0, 10**8, 10**8])])
     ]
-    rows = cover_df(spark, polys, DEFAULT_COVER_LEVEL).collect()
-    assert any(r.inside for r in rows) and any(not r.inside for r in rows)
-    assert all(bool(r.segs) != r.inside for r in rows)
+    rows = [e for r in cover_df(spark, polys, DEFAULT_COVER_LEVEL).collect()
+            for e in r._cov]
+    assert any(r._inside for r in rows) and any(not r._inside for r in rows)
+    assert all(bool(r._segs) != r._inside for r in rows)
 
 
 def test_knn_certification_fused_job_count(spark, sf_dir):

@@ -261,7 +261,7 @@ def test_ivf_train_empty_centroid_set_is_a_named_error(spark, sf_dir):
         similarity.ivf_train_assign(e, n_centroids=8, iters=1).collect()
 
 
-def _clustered_emb(spark, n_clusters=4, per_cluster=50, dim=64):
+def _clustered_emb(arrow_frame, n_clusters=4, per_cluster=50, dim=64):
     """A corpus SORTED BY CLUSTER (vec_id order == cluster order) — the
     degenerate input for first-n seeding: the first n vectors all come
     from cluster 0.  Deterministic integer-lattice vectors with small
@@ -273,12 +273,10 @@ def _clustered_emb(spark, n_clusters=4, per_cluster=50, dim=64):
             vec_id = c * per_cluster + j
             jit = [((vec_id * 31 + d * 17) % 5 - 2) * 0.01 for d in range(dim)]
             rows.append((vec_id, [center[d] + jit[d] for d in range(dim)]))
-    return spark.createDataFrame(
-        rows, schema="vec_id LONG, embedding ARRAY<FLOAT>"
-    )
+    return arrow_frame(rows, "vec_id LONG, embedding ARRAY<FLOAT>")
 
 
-def test_kmeans_parallel_seed_beats_first_n_on_sorted_corpus(spark):
+def test_kmeans_parallel_seed_beats_first_n_on_sorted_corpus(spark, arrow_frame):
     """r3 verdict item 4: first-n seeding degenerates on corpora
     sorted/clustered by id — all seeds land inside cluster 0, so most
     of the corpus piles into one hot bucket (here: 150 of 200 vectors,
@@ -291,7 +289,7 @@ def test_kmeans_parallel_seed_beats_first_n_on_sorted_corpus(spark):
 
     from osmgraft.similarity import kmeans_parallel_assign
 
-    emb = _clustered_emb(spark).cache()  # 4 clusters x 50, sorted
+    emb = _clustered_emb(arrow_frame).cache()  # 4 clusters x 50, sorted
     n = emb.count()
 
     def dist(assign_df):
@@ -307,10 +305,10 @@ def test_kmeans_parallel_seed_beats_first_n_on_sorted_corpus(spark):
     assert len(d_kmpp) > len(d_first), (dict(d_kmpp), dict(d_first))
 
 
-def test_kmeans_parallel_seed_is_deterministic_and_sized(spark):
+def test_kmeans_parallel_seed_is_deterministic_and_sized(spark, arrow_frame):
     from osmgraft.similarity import kmeans_parallel_seed
 
-    emb = _clustered_emb(spark, n_clusters=3, per_cluster=20)
+    emb = _clustered_emb(arrow_frame, n_clusters=3, per_cluster=20)
     a = [
         (r.cid, tuple(r.cvec))
         for r in kmeans_parallel_seed(emb, n_centroids=6).collect()
@@ -323,17 +321,17 @@ def test_kmeans_parallel_seed_is_deterministic_and_sized(spark):
     assert len(a) == 6 and len({cid for cid, _ in a}) == 6
 
 
-def test_ivf_train_assign_accepts_kmeanspp_seed(spark):
+def test_ivf_train_assign_accepts_kmeanspp_seed(spark, arrow_frame):
     from osmgraft.similarity import ivf_train_assign
 
-    emb = _clustered_emb(spark, n_clusters=3, per_cluster=15)
+    emb = _clustered_emb(arrow_frame, n_clusters=3, per_cluster=15)
     out = ivf_train_assign(emb, n_centroids=3, iters=1, seed="kmeans||")
     got = {r.vec_id: r.centroid_id for r in out.collect()}
     assert len(got) == 45
     assert set(got.values()) <= {0, 1, 2}
 
 
-def test_kmeans_greedy_recluster_spreads_on_dense_dominant_cluster(spark):
+def test_kmeans_greedy_recluster_spreads_on_dense_dominant_cluster(spark, arrow_frame):
     """r4 advice item 1 (closed in round 5): pure attraction-weight
     ranking can seat several near-colocated candidates of ONE dense
     cluster (each inherits a slice of the big cluster's weight and
@@ -362,9 +360,7 @@ def test_kmeans_greedy_recluster_spreads_on_dense_dominant_cluster(spark):
             jit = [((vec_id * 31 + d * 17) % 5 - 2) * 0.01 for d in range(dim)]
             rows.append((vec_id, [center[d] + jit[d] for d in range(dim)]))
             vec_id += 1
-    emb = spark.createDataFrame(
-        rows, schema="vec_id LONG, embedding ARRAY<FLOAT>"
-    ).cache()
+    emb = arrow_frame(rows, "vec_id LONG, embedding ARRAY<FLOAT>").cache()
     n = emb.count()
     dist = Counter(
         r.centroid_id
@@ -378,7 +374,7 @@ def test_kmeans_greedy_recluster_spreads_on_dense_dominant_cluster(spark):
     assert max(dist.values()) <= 300, dict(dist)
 
 
-def test_quantize_e3_np_matches_jvm_round(spark, emb):
+def test_quantize_e3_np_matches_jvm_round(spark, emb, arrow_frame):
     # r6 ann_topk moved quantization into numpy (guide §4.2); this pins
     # element-wise equality of quantize_e3_np vs the JVM
     # round(cast(x as double) * 1000) expression over the shipped
@@ -395,9 +391,9 @@ def test_quantize_e3_np_matches_jvm_round(spark, emb):
     edge = [0.0005, -0.0005, 0.0015, -0.0015, 0.0025, 1.0615, -3.9995,
             0.12345, -0.00049999999, 0.0, 123.4565, -123.4565, 2.5e-4,
             0.4999999999999999, 511.9995, -511.9995]
-    df = spark.createDataFrame(
+    df = arrow_frame(
         [(i, [float(v)]) for i, v in enumerate(edge)],
-        schema="vec_id LONG, embedding ARRAY<DOUBLE>",
+        "vec_id LONG, embedding ARRAY<DOUBLE>",
     )
     jvm_edge = {r.vec_id: list(r.qvec)
                 for r in quantized(df).select("vec_id", "qvec").collect()}

@@ -183,10 +183,10 @@ def test_viewport_4d_intersects_and_prunes(spark, tmp_path, sf_dir):
         )
     ).cache()
     out = str(tmp_path / "fstore4d")
-    write_feature_store_4d(feats, out, max_level=12)
+    write_feature_store_4d(feats, out)
 
     vp = (-900_000_000, -450_000_000, -200_000_000, 300_000_000)
-    got = viewport_query_4d(spark, out, *vp, max_level=12)
+    got = viewport_query_4d(spark, out, *vp)
     got_ids = {r.way_id for r in got.collect()}
 
     want_ids = {
@@ -230,7 +230,7 @@ def test_viewport_4d_empty_viewport_returns_nothing(spark, tmp_path, sf_dir):
         (F.col("lat_e7") + 1000).alias("maxy"),
     )
     out = str(tmp_path / "fstore4d_tiny")
-    write_feature_store_4d(feats, out, max_level=12)
+    write_feature_store_4d(feats, out)
     # a viewport in the far north-east void of the fixture coordinate space
     got = viewport_query_4d(
         spark, out, 1_790_000_000, 890_000_000, 1_799_000_000, 899_000_000

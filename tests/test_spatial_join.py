@@ -100,9 +100,10 @@ def test_empty_polygon_attach_is_single_pass(spark, entities, many):
     """The join attaches empty (match-everything) polygons inside its
     one broadcast-cover pass: the plan scans the points once, has one
     broadcast hash join and no sort-merge join, no Union of a second
-    branch over the points subtree, and no Python node (the refine runs
-    in the JVM); every point matches each empty polygon with position
-    == INSIDE.  ``many``: more than 64 polygons, whose cover subtree
+    branch over the points subtree, no Python node (the refine runs in
+    the JVM) and no shuffle exchange (the driver groups the cover by
+    cell); every point matches each empty polygon with position ==
+    INSIDE.  ``many``: more than 64 polygons, whose cover subtree
     holds no Python node either."""
     from osmgraft.geometry import INSIDE, Polygon
 
@@ -121,6 +122,7 @@ def test_empty_polygon_attach_is_single_pass(spark, entities, many):
     assert nodes["BroadcastNestedLoopJoin"] == 0
     assert nodes["SortMergeJoin"] == 0
     assert nodes["BroadcastHashJoin"] == 1
+    assert nodes["Exchange"] == 0
     res = spatial_join(spark, entities, polys, keep_position=True)
     empty_ids = {p.boundary_id for p in polys if p.n_segments == 0}
     empty_rows = res.filter(

@@ -181,7 +181,7 @@ def test_stateful_first_seen_across_batches(spark, arrow_frame, tmp_store):
     )
     out_dir = os.path.join(tmp_store.root, "dedup_out")
     q = (
-        stateful_first_seen(stream, key_col="fp")
+        stateful_first_seen(stream)
         .writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", out_dir + "_ckpt")

@@ -26,7 +26,7 @@ def _rows(df):
 
 
 @pytest.fixture(scope="module")
-def ranged(spark):
+def ranged(arrow_frame):
     # (minz, maxz, kind): duplicates, single-level ranges, an inverted
     # range (sequence() walks it DESCENDING — semantics must carry
     # over), and NULL bounds (sequence -> NULL -> explode drops).
@@ -37,9 +37,7 @@ def ranged(spark):
         (None, 18, "point"), (12, None, "way"),   # NULL bounds drop
         (12, 18, "drop"), (0, 5, "drop"),         # excluded kind
     ]
-    return spark.createDataFrame(
-        data, "minz INT, maxz INT, kind STRING"
-    ).cache()
+    return arrow_frame(data, "minz INT, maxz INT, kind STRING").cache()
 
 
 def test_zoom_histogram_matches_naive_explode(spark, ranged):
@@ -83,10 +81,10 @@ def test_zoom_histogram_by_kind_matches_naive_explode(spark, ranged):
                for r in got.collect())
 
 
-def test_clip_window_raw_pair_equals_seq_rank(spark):
+def test_clip_window_raw_pair_equals_seq_rank(arrow_frame):
     # way 1: duplicate (lnum, node_id) pairs -> rank tie-break must not
     # change the output multiset (tied rows are identical rows).
-    wn_raw = spark.createDataFrame(
+    wn_raw = arrow_frame(
         [
             (1, 5, 100), (1, 5, 100), (1, 5, 101), (1, 2, 300),
             (2, 1, 100), (2, 1, 99), (2, 3, 300),
@@ -94,7 +92,7 @@ def test_clip_window_raw_pair_equals_seq_rank(spark):
         ],
         "way_id LONG, lnum INT, node_id LONG",
     )
-    regions = spark.createDataFrame(
+    regions = arrow_frame(
         [(100, 10), (101, 10), (300, 10), (300, 20), (99, 20), (400, 30)],
         "node_id LONG, boundary_id INT",
     )
