@@ -550,7 +550,7 @@ def ann_topk(spark, sf_dir):
     the 64-element array build into every term).  Instead the corpus
     streams through ONE vectorized Arrow pass
     (``similarity._driver_scan``) that quantizes and matrix-multiplies
-    against the (tiny, driver-read, broadcast) query matrix in int64
+    against the (tiny, driver-read) query matrix in int64
     numpy; only (pid, qid, dot) rows come back.  Measured 2.02 -> 0.73 s
     at sf1.0.
 

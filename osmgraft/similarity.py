@@ -116,9 +116,9 @@ class VectorSetSizeError(ValueError):
     ``_DRIVER_MAX_VECTORS`` vectors."""
 
 
-# Largest vector set read to the driver and broadcast: 16 MB of int64 at
-# dim 64, above dedup_embedding_cosine_exact's whole corpus at sf1.0
-# (20k vectors).
+# Largest vector set read to the driver and shipped to the tasks: 16 MB
+# of int64 at dim 64, above dedup_embedding_cosine_exact's whole corpus
+# at sf1.0 (20k vectors).
 _DRIVER_MAX_VECTORS = 1 << 15
 # Largest block of dots one emit call receives: 32 MB of int64.
 _DOT_BLOCK = 4_000_000
@@ -146,17 +146,17 @@ def _driver_matrix(df: DataFrame, what: str, empty_ok: bool = False):
 
 def _driver_scan(df: DataFrame, ids_matrix, make_emit, schema: str) -> DataFrame:
     """Stream ``df``'s (vec_id, embedding) rows against a driver vector
-    set ``(ids, C)`` from :func:`_driver_matrix`, broadcast once.  Each
-    Arrow batch is quantized like ``C`` and cut into row blocks of at
-    most ``_DOT_BLOCK`` dots.  ``make_emit(ids, C)`` runs once per task
-    and returns ``emit(batch, M, D)``, which gets each block's rows, their
-    quantized matrix and the exact dots ``D = M @ C.T``
+    set ``(ids, C)`` from :func:`_driver_matrix`, which travels to the
+    tasks inside the ``mapInArrow`` closure (no broadcast variable that
+    nothing would release).  Each Arrow batch is quantized like ``C``
+    and cut into row blocks of at most ``_DOT_BLOCK`` dots.
+    ``make_emit(ids, C)`` runs once per task and returns
+    ``emit(batch, M, D)``, which gets each block's rows, their quantized
+    matrix and the exact dots ``D = M @ C.T``
     (:func:`int_matmul_exact_np`) and returns one record batch of
     ``schema``.  An empty set emits nothing."""
-    bc = df.sparkSession.sparkContext.broadcast(ids_matrix)
-
     def run(batches):
-        ids, C = bc.value
+        ids, C = ids_matrix
         if not len(ids):
             return
         emit = make_emit(ids, C)
@@ -273,7 +273,7 @@ def _ivf_bucket_topk_np(
 ) -> DataFrame:
     """Shared vectorized engine behind :func:`ivf_topk`,
     :func:`ivf_topk_multiprobe` and :func:`cosine_topk_ivf` (r6, guide
-    §4.2 / §2.5): the former JVM shape scored every within-bucket
+    §4.2): the former JVM shape scored every within-bucket
     candidate pair with an interpreted ``zip_with``+``aggregate``
     64-step fold — O(bucket_size^2) rows each paying a non-codegen
     lambda chain, which at sf1.0 (20k vectors, first-8 centroids
@@ -283,15 +283,12 @@ def _ivf_bucket_topk_np(
     1. one Arrow pass assigns each vector its ``nprobe`` nearest
        centroids (BLAS-exact numpy matmul against the collected,
        cid-sorted centroid matrix; ties by cid via stable argsort over
-       cid-ascending columns);
-    2. query rows are SALTED across ``n_salts`` sub-groups per bucket
-       and index rows replicated into each (guide §2.5 skew salting —
-       results exact: query rows partition disjointly, every sub-group
-       sees the full index side).  ``n_salts`` is derived from
-       cores/n_centroids, so a production-sized codebook
-       (n_centroids >= cores) gets n_salts=1 and NO replication;
-    3. one ``applyInPandas`` per (bucket, salt) computes the pair dots
-       as a row-chunked BLAS float64 product — EXACT for e3-quantized
+       cid-ascending columns) and emits one probe row per (vector,
+       centroid); the nearest centroid's row is also the vector's
+       index row (``is_index``) in that bucket;
+    2. one ``applyInArrow`` per ``centroid_id`` computes the pair dots
+       of the bucket's probe rows against its index rows as a
+       row-chunked BLAS float64 product — EXACT for e3-quantized
        vectors because every partial sum stays below 2^53
        (:func:`int_matmul_exact_np`) — and emits only the per-query
        top-k.
@@ -306,29 +303,11 @@ def _ivf_bucket_topk_np(
     ``(dot^2 * 1e6) div nb = q*1e6 + (r*1e6) div nb``, and by
     Cauchy-Schwarz ``q <= na``, so every term stays far below 2^63.
     """
-    spark = df.sparkSession
     cents = _driver_matrix(
         df.filter(F.col("vec_id") < n_centroids),
         "centroid set (seed: the vec_ids below n_centroids)",
     )
     npb = min(nprobe, len(cents[0])) or 1
-
-    # Salted scoring groups: a tiny codebook (the degenerate-by-design
-    # first-n seeding) funnels the whole corpus into a handful of
-    # buckets = a handful of tasks; spread QUERY rows over
-    # ceil(cores / n_centroids) salts and replicate index rows into
-    # each.  Production codebooks (n_centroids >= cores) get
-    # n_salts = 1: the replication factor never scales with the
-    # corpus, only with local idle-core count.  The assignment pass
-    # emits probe AND replica-index rows in ONE sweep (r6 review fix:
-    # a probe/index union over the uncached mapInArrow subtree ran
-    # the whole assignment scan twice): per vector, npb probe rows
-    # (the rn=1 row doubling as the index row of its own salt) plus
-    # n_salts-1 index-only replicas.  The salt is an arbitrary
-    # deterministic spread (Knuth multiplicative hash of vec_id) —
-    # it only balances load, never changes results.
-    par = spark.sparkContext.defaultParallelism
-    n_salts = max(1, min(16, par // max(n_centroids, 1)))
 
     def assign_emit(cids, C):
         def emit(b, M, D):
@@ -338,47 +317,21 @@ def _ivf_bucket_topk_np(
             emb = b.column("embedding").cast(pa.list_(pa.float64()))
             # (dot desc, cid asc): columns are cid-ascending, stable sort
             ordc = np.argsort(-D, axis=1, kind="stable")[:, :npb]
-            n = len(vids)
-            sv = (
-                (vids.astype(np.uint64) * np.uint64(2654435761))
-                >> np.uint64(16)
-            ).astype(np.int64) % n_salts
-            # probe rows: every (vector, rn<=npb); rn=1 also serves as
-            # the index row of the vector's own salt group
-            take = np.repeat(np.arange(n), npb)
-            rn = np.tile(np.arange(1, npb + 1), n)
-            cen = cids[ordc.ravel()]
-            salt = np.repeat(sv, npb)
-            is_probe = np.ones(n * npb, dtype=bool)
-            is_index = rn == 1
-            if n_salts > 1:
-                # index-only replicas into the other n_salts-1 groups
-                all_salt = np.tile(np.arange(n_salts, dtype=np.int64), n)
-                rep_mask = all_salt != np.repeat(sv, n_salts)
-                take2 = np.repeat(np.arange(n), n_salts)[rep_mask]
-                take = np.concatenate([take, take2])
-                rn = np.concatenate(
-                    [rn, np.ones(len(take2), dtype=rn.dtype)])
-                cen = np.concatenate([cen, cids[ordc[take2, 0]]])
-                salt = np.concatenate([salt, all_salt[rep_mask]])
-                is_probe = np.concatenate(
-                    [is_probe, np.zeros(len(take2), dtype=bool)])
-                is_index = np.concatenate(
-                    [is_index, np.ones(len(take2), dtype=bool)])
+            # one probe row per (vector, rn <= npb); the rn=1 row is also
+            # the index row of the vector's own bucket
+            take = np.repeat(np.arange(len(vids)), npb)
             return pa.record_batch({
                 "vec_id": pa.array(vids[take]),
                 "embedding": emb.take(pa.array(take)),
-                "centroid_id": pa.array(cen),
-                "salt": pa.array(salt.astype(np.int32)),
-                "is_probe": pa.array(is_probe),
-                "is_index": pa.array(is_index),
+                "centroid_id": pa.array(cids[ordc.ravel()]),
+                "is_index": pa.array(np.tile(np.arange(npb) == 0, len(vids))),
             })
         return emit
 
     rows = _driver_scan(
         df, cents, assign_emit,
         "vec_id long, embedding array<double>, centroid_id long, "
-        "salt int, is_probe boolean, is_index boolean",
+        "is_index boolean",
     )
 
     if npb > 1:
@@ -410,9 +363,8 @@ def _ivf_bucket_topk_np(
         if table.num_rows:
             vids = table.column("vec_id").to_numpy(zero_copy_only=False)
             M = qz(vm(table.column("embedding"), np.float64))
-            pm = table.column("is_probe").to_numpy(zero_copy_only=False)
             im = table.column("is_index").to_numpy(zero_copy_only=False)
-            Q, qids = M[pm], vids[pm]
+            Q, qids = M, vids
             P, pids = M[im], vids[im]
             if len(P) and len(Q):
                 n2p = (P * P).sum(axis=1) if cosine else None
@@ -472,7 +424,7 @@ def _ivf_bucket_topk_np(
                 out["cosine"] = pa.array(cols["cosine"], type=pa.float64())
         return pa.table(out)
 
-    scored = rows.groupBy("centroid_id", "salt").applyInArrow(
+    scored = rows.groupBy("centroid_id").applyInArrow(
         score, out_schema
     )
     if npb == 1:
@@ -692,7 +644,8 @@ def kmeans_parallel_seed(df: DataFrame, n_centroids: int = 8) -> DataFrame:
 def kmeans_parallel_assign(df: DataFrame, n_centroids: int = 8) -> DataFrame:
     """Nearest-centroid assignment under the k-means|| codebook by
     exact quantized squared euclidean distance (ties -> lowest cid) —
-    one broadcast pass.  Output: (vec_id, centroid_id)."""
+    one :func:`_driver_scan` over the corpus.  Output:
+    (vec_id, centroid_id)."""
     cents = _kmeans_parallel_centers(df, n_centroids)
     return _driver_scan(df, cents, _argmin_emit, "vec_id long, centroid_id long")
 

@@ -73,23 +73,13 @@ def _rows_to_multiset(rows, cols):
     return out
 
 
-@pytest.mark.parametrize("name", sorted(QUERIES))
-def test_query_matches_oracle(spark, sf_dir, name):
-    df = QUERIES[name](spark, sf_dir)
+def assert_matches_oracle(name, df, spark_rows, oracle_sql, sf_dir):
+    """``df``'s collected ``spark_rows`` against ``oracle_sql`` run in
+    DuckDB over ``sf_dir``: same column names and canonical types, same
+    row count, same order-insensitive multiset of values."""
     spark_cols = df.columns
-    spark_rows = [tuple(r) for r in df.collect()]
-
-    # nulls in output values are hash/sort hazards for the driver's
-    # compare — all registered queries must emit sentinel values instead
-    for r in spark_rows[:2000]:
-        assert all(v is not None for v in r), f"{name}: NULL in output row {r}"
-
-    if name not in ORACLES:
-        assert len(spark_rows) >= 0  # rows-only check
-        return
-
     con = _duck(sf_dir)
-    arrow = con.execute(ORACLES[name]).fetch_arrow_table()
+    arrow = con.execute(oracle_sql).fetch_arrow_table()
     duck_cols = arrow.schema.names
     duck_rows = [tuple(r.values()) for r in arrow.to_pylist()]
 
@@ -116,3 +106,20 @@ def test_query_matches_oracle(spark, sf_dir, name):
             f"{name}: value mismatch; spark-only={list(only_s.items())[:5]} "
             f"duck-only={list(only_d.items())[:5]}"
         )
+
+
+@pytest.mark.parametrize("name", sorted(QUERIES))
+def test_query_matches_oracle(spark, sf_dir, name):
+    df = QUERIES[name](spark, sf_dir)
+    spark_rows = [tuple(r) for r in df.collect()]
+
+    # nulls in output values are hash/sort hazards for the driver's
+    # compare — all registered queries must emit sentinel values instead
+    for r in spark_rows[:2000]:
+        assert all(v is not None for v in r), f"{name}: NULL in output row {r}"
+
+    if name not in ORACLES:
+        assert len(spark_rows) >= 0  # rows-only check
+        return
+
+    assert_matches_oracle(name, df, spark_rows, ORACLES[name], sf_dir)

@@ -524,3 +524,57 @@ def test_vector_matrix_rejects_ragged_rows():
     m = vector_matrix(pa.chunked_array([[[1, 2]], [[3, 4]]]), np.float64)
     assert m.tolist() == [[1.0, 2.0], [3.0, 4.0]]
     assert vector_matrix(pa.array([], pa.list_(pa.int64())), np.int64).shape == (0, 0)
+
+
+@pytest.mark.parametrize("op, oracle", [
+    ("ivf_topk", "ann_ivf_topk"),
+    ("ivf_topk_multiprobe", "ann_ivf_topk_nprobe"),
+    ("cosine_topk_ivf", "ann_cosine_topk_ivf"),
+])
+def test_ivf_topk_with_fewer_centroids_than_cores(spark, sf_dir, op, oracle):
+    """Three centroids on an 8-core session: each IVF top-k equals its
+    DuckDB oracle with the first-8 seed set cut to the first 3, and the
+    scoring groups by ``centroid_id`` alone, one group per bucket."""
+    import re
+
+    from test_oracle_parity import assert_matches_oracle
+
+    from osmgraft import queries, similarity
+
+    kw = {"nprobe": 2} if op == "ivf_topk_multiprobe" else {}
+    df = getattr(similarity, op)(
+        queries._read_spread(spark, sf_dir, "embeddings"),
+        k=5, n_centroids=3, **kw,
+    )
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    keys = re.findall(r"FlatMapGroupsInArrow \[([^\]]*)\]", plan)
+    assert [re.sub(r"#\d+L?", "", g) for g in keys] == ["centroid_id"], keys
+    sql = queries.ORACLES[oracle]
+    assert sql.count("vec_id < 8") == 1
+    assert_matches_oracle(
+        oracle, df, [tuple(r) for r in df.collect()],
+        sql.replace("vec_id < 8", "vec_id < 3"), sf_dir,
+    )
+
+
+def test_embedding_kernels_create_no_broadcast_variable(
+    spark, sf_dir, emb, monkeypatch
+):
+    """The driver vector set travels in the scan's closure, not in a
+    ``SparkContext.broadcast`` that nothing would release: the Lloyd
+    rounds, IVF scoring, k-means||, the exact near-dup pairs and
+    ``ann_topk`` create none."""
+    from osmgraft import queries, similarity
+
+    def refuse(self, value):
+        raise AssertionError("an embedding kernel made a broadcast variable")
+
+    monkeypatch.setattr(type(spark.sparkContext), "broadcast", refuse)
+    for df in (
+        similarity.ivf_train_assign(emb, iters=2),
+        similarity.cosine_topk_ivf(emb),
+        similarity.kmeans_parallel_assign(emb),
+        similarity.embedding_near_dup_pairs_exact(emb, threshold=0.5),
+        queries.ann_topk(spark, sf_dir),
+    ):
+        df.collect()
