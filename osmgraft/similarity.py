@@ -147,8 +147,12 @@ def _driver_matrix(df: DataFrame, what: str, empty_ok: bool = False):
 def _driver_scan(df: DataFrame, ids_matrix, make_emit, schema: str) -> DataFrame:
     """Stream ``df``'s (vec_id, embedding) rows against a driver vector
     set ``(ids, C)`` from :func:`_driver_matrix`, which travels to the
-    tasks inside the ``mapInArrow`` closure (no broadcast variable that
-    nothing would release).  Each Arrow batch is quantized like ``C``
+    tasks inside the ``mapInArrow`` closure: osmgraft makes no
+    ``SparkContext.broadcast`` call.  PySpark itself broadcasts a
+    pickled command over ``spark.broadcast.UDFCompressionThreshold``
+    (1 MB), which a set of a few thousand vectors passes; that
+    broadcast belongs to the plan, and nothing here releases it
+    earlier.  Each Arrow batch is quantized like ``C``
     and cut into row blocks of at most ``_DOT_BLOCK`` dots.
     ``make_emit(ids, C)`` runs once per task and returns
     ``emit(batch, M, D)``, which gets each block's rows, their quantized
@@ -364,20 +368,19 @@ def _ivf_bucket_topk_np(
             vids = table.column("vec_id").to_numpy(zero_copy_only=False)
             M = qz(vm(table.column("embedding"), np.float64))
             im = table.column("is_index").to_numpy(zero_copy_only=False)
-            Q, qids = M, vids
             P, pids = M[im], vids[im]
-            if len(P) and len(Q):
+            if len(P):
                 n2p = (P * P).sum(axis=1) if cosine else None
-                n2q = (Q * Q).sum(axis=1) if cosine else None
+                n2q = (M * M).sum(axis=1) if cosine else None
                 # chunk the (queries x bucket) dot block to bound memory
                 chunk = max(1, 4_000_000 // max(len(P), 1))
-                for s in range(0, len(Q), chunk):
+                for s in range(0, len(M), chunk):
                     # float64 BLAS product; exact for e3 quantization
-                    D = mm(Q[s:s + chunk], P, as_int=False)
+                    D = mm(M[s:s + chunk], P, as_int=False)
                     for i in range(D.shape[0]):
                         g = s + i
                         d = D[i]
-                        valid = pids != qids[g]
+                        valid = pids != vids[g]
                         if not valid.any():
                             continue
                         dv, pv = d[valid], pids[valid]
@@ -401,7 +404,7 @@ def _ivf_bucket_topk_np(
                             nb2 = nb if cosine else None
                         order = np.lexsort((pv2, -kv2))[:k]
                         m = len(order)
-                        cols["qid"].extend([int(qids[g])] * m)
+                        cols["qid"].extend([int(vids[g])] * m)
                         cols["pid"].extend(pv2[order].tolist())
                         if multi:
                             cols["dot"].extend(

@@ -560,10 +560,11 @@ def test_ivf_topk_with_fewer_centroids_than_cores(spark, sf_dir, op, oracle):
 def test_embedding_kernels_create_no_broadcast_variable(
     spark, sf_dir, emb, monkeypatch
 ):
-    """The driver vector set travels in the scan's closure, not in a
-    ``SparkContext.broadcast`` that nothing would release: the Lloyd
-    rounds, IVF scoring, k-means||, the exact near-dup pairs and
-    ``ann_topk`` create none."""
+    """The driver vector set travels in the scan's closure: osmgraft
+    makes no ``SparkContext.broadcast`` call in the Lloyd rounds, IVF
+    scoring, k-means||, the exact near-dup pairs or ``ann_topk``.
+    PySpark itself broadcasts a pickled command over 1 MB; the sf0.001
+    sets stay under that, so this pins osmgraft's own calls only."""
     from osmgraft import queries, similarity
 
     def refuse(self, value):
